@@ -17,6 +17,8 @@ import json
 import os
 import sys
 
+from maritime_activity_reports_cdc_spark.config import BRONZE_MODES, LAYER_MODES
+
 
 def _spark(args):
     from maritime_activity_reports_cdc_spark.session import get_spark
@@ -197,14 +199,8 @@ def cmd_rewrite(args) -> dict:
     # pipeline._maybe_compact_layers): turn-mode silver deltas are ordered
     # by refresh generation — a re-enriched row keeps its (lsn, op_ordinal)
     # envelope, so resolving by lsn would tie-break arbitrarily and could
-    # keep a stale image. Generation-MoR tables are folded via
-    # compact_generations (rewrite_files is key-MoR/CoW only).
+    # keep a stale image.
     mode = p.layer_mode if args.table == "silver" else "cow"
-    if mode == "mor":
-        from maritime_activity_reports_cdc_spark.operators import mor as mor_op
-
-        folded = mor_op.compact_generations(table, ["conv_id"])
-        return {"table": args.table, "mode": "mor", "folded": folded}
     if mode in ("turn", "auto"):
         order = ("_gen",)
         # turn-mode tombstone retention is governed by _gen: refresh
@@ -252,15 +248,6 @@ def cmd_changes(args) -> dict:
     # turn/auto silver deltas are ordered by refresh generation — a
     # re-enriched row keeps its (lsn, op_ordinal) envelope, so the feed
     # must arbitrate by _gen exactly like cmd_rewrite resolves.
-    # Generation-marker MoR deltas (layer_mode='mor') use a different
-    # resolution algebra (rank-0 markers delete by absence) that the
-    # feed's per-key dedup cannot interpret — fold them first.
-    if args.table == "silver" and p.layer_mode == "mor":
-        raise SystemExit(
-            "change feed over generation-MoR silver requires folding the "
-            "marker deltas first: run `compact` (or `rewrite --table "
-            "silver`), then re-run `changes`"
-        )
     order = (
         ("_gen",)
         if args.table == "silver" and p.layer_mode in ("turn", "auto")
@@ -316,8 +303,8 @@ def build_parser() -> argparse.ArgumentParser:
     sp = sub.add_parser("setup", help="create the medallion lake")
     sp.add_argument("--root", required=True)
     sp.add_argument("--n-buckets", type=int, default=None)
-    sp.add_argument("--bronze-mode", choices=["cow", "mor"], default=None)
-    sp.add_argument("--layer-mode", choices=["cow", "mor", "turn", "auto"], default=None)
+    sp.add_argument("--bronze-mode", choices=BRONZE_MODES, default=None)
+    sp.add_argument("--layer-mode", choices=LAYER_MODES, default=None)
     sp.add_argument("--compact-every", type=int, default=None)
     sp.add_argument("--compact-delta-depth", type=int, default=None)
     sp.add_argument("--derived-every", type=int, default=None)

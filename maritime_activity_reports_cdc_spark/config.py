@@ -16,8 +16,8 @@ Example (every key optional)::
 
     [lake]
     n_buckets = 256
-    bronze_mode = "mor"
-    layer_mode = "auto"
+    bronze_mode = "mor"     # cow | mor
+    layer_mode = "auto"     # cow | turn | auto (silver refresh plan)
     compact_every = 8
     compact_delta_depth = 8
     derived_every = 2
@@ -36,6 +36,11 @@ from __future__ import annotations
 
 import dataclasses
 import tomllib
+
+# accepted values of the bronze apply mode and the derived-layer mode;
+# MedallionPipeline.create/load and the CLI validate against these
+BRONZE_MODES = ("cow", "mor")
+LAYER_MODES = ("cow", "turn", "auto")
 
 
 @dataclasses.dataclass
@@ -108,10 +113,12 @@ def load_config(path: str) -> EngineConfig:
         maintenance=_section(MaintenanceConfig, data, "maintenance"),
         replay=_section(ReplayConfig, data, "replay"),
     )
-    if cfg.lake.bronze_mode not in ("cow", "mor"):
-        raise ValueError(f"lake.bronze_mode must be cow|mor, got {cfg.lake.bronze_mode!r}")
-    if cfg.lake.layer_mode not in ("cow", "mor", "turn", "auto"):
+    if cfg.lake.bronze_mode not in BRONZE_MODES:
         raise ValueError(
-            f"lake.layer_mode must be cow|mor|turn|auto, got {cfg.lake.layer_mode!r}"
+            f"lake.bronze_mode must be {'|'.join(BRONZE_MODES)}, got {cfg.lake.bronze_mode!r}"
+        )
+    if cfg.lake.layer_mode not in LAYER_MODES:
+        raise ValueError(
+            f"lake.layer_mode must be {'|'.join(LAYER_MODES)}, got {cfg.lake.layer_mode!r}"
         )
     return cfg

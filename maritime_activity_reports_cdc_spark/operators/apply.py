@@ -336,8 +336,7 @@ def rewrite_files(
     drops retained delete tombstones older than the caller's LSN horizon.
 
     Outstanding key-MoR deltas of the rewritten partitions are resolved
-    (compacted) in the same pass — never copied into the base raw. NOT
-    for generation-MoR tables (use ``mor.compact_generations``).
+    (compacted) in the same pass — never copied into the base raw.
 
     ``zorder``: multi-dimensional clustering instead of ``sort_by`` —
     rows are ordered by a Morton-interleaved key over these columns

@@ -309,28 +309,29 @@ def _write_header_sidecar(
     return name
 
 
-def referenced_sidecar_files(manifest_dir: str, sidecar: str) -> set[str]:
+def referenced_sidecar_files(manifest_dir: str, sidecar: str) -> set[str] | None:
     """The sidecar's own name plus every shard blob its header
     references — the live set snapshot expiry must retain (ADVICE r5
     #1: superseded sidecars/shards and orphan task-retry blobs were
-    never garbage-collected). Unreadable/foreign formats return just
-    the sidecar name (conservative: expiry keeps what it can't parse)."""
-    out = {sidecar}
+    never garbage-collected). None when the sidecar cannot be parsed
+    (missing, truncated, foreign format): its live shards are then
+    unknown, so the caller must delete no bloom file at all."""
     path = os.path.join(manifest_dir, sidecar)
     try:
         with open(path, "rb") as fh:
-            magic = fh.read(len(_MAGIC))
-            if magic != _MAGIC:
-                return out
+            if fh.read(len(_MAGIC)) != _MAGIC:
+                return None
             (hdr_len,) = struct.unpack("<q", fh.read(8))
             header = json.loads(fh.read(hdr_len).decode("utf-8"))
-    except (OSError, ValueError):
-        return out
-    for colmap in header.values():
-        for entry in colmap.values():
-            if entry.get("shard"):
-                out.add(entry["shard"])
-    return out
+        shards = {
+            entry["shard"]
+            for colmap in header.values()
+            for entry in colmap.values()
+            if entry.get("shard")
+        }
+    except (OSError, ValueError, struct.error):
+        return None
+    return {sidecar} | shards
 
 
 def load_bloom_index(table) -> dict[str, dict[str, dict]] | None:

@@ -1,34 +1,17 @@
-"""Generation-based merge-on-read for DERIVED tables (silver/gold).
+"""Refresh-generation columns of the DERIVED tables (silver/gold) and the
+delta-load probe behind compaction triggers.
 
-The bronze apply is key-based MoR: each delta row is a change for one
-``(conv_id, turn_idx)`` key, resolved by ``(lsn, op_ordinal)`` order
-(``operators.apply``). Derived layers have different write semantics: a
-refresh REPLACES a whole group's rows (all turns of a conversation, a
-whole business_date's rollup) with a freshly computed set — the reference
-expresses this as Delta ``MERGE``+rewrite per key group
-(``gold/cdf_processor.py:248-328`` in /root/reference). Copy-on-write
-makes that a rewrite of every affected partition per epoch — the write
-amplification that made microbatch replay 2.6x slower than bulk in round
-1. Here a refresh appends its fresh rows tagged with a **generation**
-(= the epoch) plus one zero-rank *generation marker* per refreshed group;
-readers keep only the rows of each group's highest generation:
+Every derived-table write stamps its rows with the refresh epoch that
+produced them:
 
-- group refreshed in epochs 2 and 5 -> gen-5 rows win, gen-2 rows are
-  dead weight until compaction folds them out;
-- group fully deleted in epoch 5 -> only the gen-5 marker exists, so no
-  row survives (the marker is rank 0 and filtered after resolution);
-- group untouched since compaction -> its base rows are the only
-  generation and win by default.
+- ``_gen`` (long, = refresh epoch) — the resolution order of turn-level
+  key-MoR silver (``layer_mode`` 'turn'/'auto'): a re-enriched row keeps
+  its bronze ``(lsn, op_ordinal)`` envelope, so readers, compaction and
+  the change feed arbitrate by ``_gen`` instead;
+- ``_rank`` (int, always 1) — kept in the on-disk schema of existing
+  lakes; it carries no meaning for current writers.
 
-Scale: the resolve does NOT shuffle the base. Groups present in delta
-files ("contested") are isolated with a broadcast semi/anti split —
-resolution cost is O(delta + contested base rows), bounded by compaction
-cadence, never O(scanned partition). Writes are O(batch) appends.
-
-Internal columns: ``_gen`` (long, = refresh epoch) and ``_rank`` (int,
-1 = real row, 0 = generation marker). They live in the table schema and
-are provenance, not business data; resolved readers drop the marker rows
-but keep the columns for compaction/debugging.
+Both are provenance, not business data.
 """
 
 from __future__ import annotations
@@ -48,223 +31,10 @@ GEN_FIELDS = [
 ]
 
 
-def stamp_generation(df: DataFrame, epoch: int, rank: int = 1) -> DataFrame:
+def stamp_generation(df: DataFrame, epoch: int) -> DataFrame:
     return df.withColumn(GEN_COL, F.lit(int(epoch)).cast("long")).withColumn(
-        RANK_COL, F.lit(rank).cast("int")
+        RANK_COL, F.lit(1).cast("int")
     )
-
-
-def append_generation(
-    table: LakeTable,
-    fresh_rows: DataFrame,
-    marker_keys: DataFrame,
-    epoch: int,
-    source: str,
-    pre_partitioned: bool = False,
-) -> None:
-    """One refresh epoch as a single delta append: fresh rows (rank 1)
-    plus one generation marker (rank 0) per refreshed group.
-
-    ``marker_keys`` must carry the group columns AND the table's
-    partition column (rows are otherwise null-padded to the schema by the
-    commit's alignment). Markers are what make full-group deletion work
-    without an anti-join against current state: a group with a marker but
-    no fresh rows resolves to nothing.
-    """
-    schema = table.schema()
-    cols = [f.name for f in schema.fields]
-    fresh = stamp_generation(fresh_rows, epoch, rank=1)
-    markers = stamp_generation(marker_keys, epoch, rank=0)
-    aligned = [
-        df.select(
-            *[
-                (F.col(c) if c in df.columns else F.lit(None)).cast(schema[c].dataType).alias(c)
-                for c in cols
-            ]
-        )
-        for df in (fresh, markers)
-    ]
-    part_col = table.snapshot().partition_by
-    if pre_partitioned and part_col is not None:
-        # fresh is clustered already; cluster the (tiny) marker side too
-        # so the union stays partition-pure and the write can skip its
-        # defensive repartition of the fat fresh rows.
-        aligned[1] = aligned[1].repartition(F.col(part_col))
-    table.append_deltas(
-        aligned[0].unionByName(aligned[1]),
-        summary={"source": source},
-        epoch=(source, epoch),
-        pre_partitioned=pre_partitioned,
-    )
-
-
-def resolve_generations(
-    base: DataFrame,
-    delta: DataFrame,
-    group_cols: list[str],
-    split: bool = True,
-    base_below_deltas: bool = False,
-) -> DataFrame:
-    """Winning-generation rows of base ∪ delta, markers dropped.
-
-    ``split=True``: the base is never shuffled — only groups that appear
-    in the (small, compaction-bounded) delta set are contested;
-    everything else passes through with a broadcast anti-join.
-    ``split=False``: the delta backlog covers most groups (the caller
-    decides from snapshot stats, see read_resolved).
-
-    ``base_below_deltas``: every delta generation postdates every base
-    generation — guaranteed by construction for tables maintained via
-    ``append_generation`` + compaction/overwrite (compaction at epoch E
-    folds ALL outstanding deltas, so any later delta carries a higher
-    epoch than anything in the base), and PROVEN per call from the
-    per-file ``_gen`` footer bounds (``read_resolved``). Under the
-    invariant a contested group's winner comes from the DELTA ALONE —
-    base rows only ever need a key-MEMBERSHIP filter, never a
-    max-generation computation, so the fat base rows pass through ZERO
-    exchanges in BOTH regimes:
-
-    - split=True: base anti-joins the (small) contested key set.
-    - split=False: the small set is the UNcontested groups — computed
-      THIN (base group-keys anti delta group-keys; only the group
-      columns shuffle, the parquet scan is column-pruned to them) and
-      broadcast back as a semi-join on the fat base. Previously this
-      regime shuffled the whole fat slice through the max_by dedup.
-
-    The max-generation-per-group is computed as a groupBy aggregate
-    (map-side partial max) joined back, NOT a window: a window
-    partitioned by the group serializes a hot group — one 10^6-turn
-    contested conversation = one task buffering 10^6 rows."""
-
-    def _resolve(df: DataFrame, broadcast_maxg: bool) -> DataFrame:
-        maxg = df.groupBy(*group_cols).agg(F.max(GEN_COL).alias("_maxg"))
-        if broadcast_maxg:
-            maxg = F.broadcast(maxg)
-        return (
-            df.join(maxg, group_cols)
-            .where((F.col(GEN_COL) == F.col("_maxg")) & (F.col(RANK_COL) == 1))
-            .drop("_maxg")
-        )
-
-    contested_keys = delta.select(*group_cols).distinct()
-    if base_below_deltas:
-        # winners among deltas only: O(backlog) rows; maxg broadcasts
-        # when the backlog is compaction-bounded (split), else the
-        # delta — never the base — shuffle-joins its own maxg
-        winners = _resolve(delta, broadcast_maxg=split)
-        if split:
-            clean = base.join(F.broadcast(contested_keys), group_cols, "left_anti")
-        else:
-            uncontested = (
-                base.select(*group_cols)
-                .distinct()
-                .join(contested_keys, group_cols, "left_anti")
-            )
-            clean = base.join(F.broadcast(uncontested), group_cols, "left_semi")
-        return clean.unionByName(winners)
-    if not split:
-        # invariant unprovable (direct writer / missing stats): maxg is
-        # one row per group of the whole slice — too big to broadcast at
-        # scale, shuffle-join it over base ∪ delta
-        return _resolve(base.unionByName(delta), broadcast_maxg=False)
-    clean = base.join(F.broadcast(contested_keys), group_cols, "left_anti")
-    contested = base.join(F.broadcast(contested_keys), group_cols, "left_semi").unionByName(
-        delta
-    )
-    # contested groups are compaction-bounded (same contract as the
-    # broadcast contested_keys) -> maxg broadcasts, contested rows are
-    # filtered in place with NO shuffle
-    return clean.unionByName(_resolve(contested, broadcast_maxg=True))
-
-
-def _base_below_deltas(snap, values) -> bool:
-    """True when the recorded per-file ``_gen`` bounds PROVE every delta
-    generation postdates every base generation for the scanned
-    partitions (an empty base side counts as proven). Files without
-    ``_gen`` stats make the answer conservative — False routes to the
-    general resolve, which is always correct."""
-    base_hi = None
-    delta_lo = None
-    for v in map(str, values):
-        for f in snap.files.get(v, []):
-            entry = (snap.file_stats.get(f) or {}).get(GEN_COL)
-            if not isinstance(entry, list):
-                return False
-            base_hi = entry[1] if base_hi is None else max(base_hi, entry[1])
-        for f in snap.delta_files.get(v, []):
-            entry = (snap.file_stats.get(f) or {}).get(GEN_COL)
-            if not isinstance(entry, list):
-                return False
-            delta_lo = entry[0] if delta_lo is None else min(delta_lo, entry[0])
-    if delta_lo is None:
-        return False
-    return base_hi is None or base_hi < delta_lo
-
-
-def read_resolved(
-    table: LakeTable,
-    group_cols: list[str],
-    partition_values: list | None = None,
-    bounds: dict | None = None,
-    columns: list[str] | None = None,
-) -> DataFrame:
-    """Resolved view of a generation-MoR table. On a delta-free table
-    this is the plain base scan — zero overhead (compaction restores the
-    read-optimized path).
-
-    ``bounds`` (file-level min/max pruning) applies to BASE files only:
-    delta files must be read whole, otherwise a pruned-away newer
-    generation would let stale base rows win. Bounds must also be
-    group-aligned or row-pure (e.g. conv_id ranges, or ts ranges when
-    base rows of one group are single-generation) — see callers.
-    """
-    from maritime_activity_reports_cdc_spark.operators.apply import _delta_fraction_small
-
-    values = (
-        partition_values if partition_values is not None else table.partition_values()
-    )
-    snap = table.snapshot()
-
-    def _prj(df: DataFrame) -> DataFrame:
-        if columns is None:
-            return df
-        need = list(dict.fromkeys([*group_cols, GEN_COL, RANK_COL, *columns]))
-        return df.select(*[c for c in need if c in df.columns])
-
-    has_deltas = any(snap.delta_files.get(str(v)) for v in values)
-    base = _prj(table.read_partitions(values, bounds=bounds))
-    if not has_deltas:
-        if RANK_COL in base.columns:
-            base = base.where(F.coalesce(F.col(RANK_COL), F.lit(1)) == 1)
-        return base
-    delta = _prj(table.read_partitions(values, deltas="only"))
-    return resolve_generations(
-        base, delta, group_cols, split=_delta_fraction_small(snap, values),
-        base_below_deltas=_base_below_deltas(snap, values),
-    )
-
-
-def compact_generations(
-    table: LakeTable, group_cols: list[str], summary: dict | None = None
-) -> bool:
-    """Fold delta generations into the base: one resolve + one partition
-    replace over exactly the delta-bearing partitions. Returns False when
-    there is nothing to fold."""
-    buckets = table.delta_partition_values()
-    if not buckets:
-        return False
-    base = table.read_partitions(buckets)
-    delta = table.read_partitions(buckets, deltas="only")
-    resolved = resolve_generations(
-        base, delta, group_cols,
-        base_below_deltas=_base_below_deltas(table.snapshot(), buckets),
-    )
-    table.replace_partitions(
-        resolved,
-        summary={"operation_kind": "gen-compaction", **(summary or {})},
-        partition_values=buckets,
-    )
-    return True
 
 
 def delta_load(table: LakeTable) -> tuple[int, int, int]:

@@ -20,8 +20,6 @@ transcript domain.
 
 from __future__ import annotations
 
-import datetime as dt
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -107,35 +105,22 @@ CONV_DATES_SCHEMA = T.StructType(
 CONV_DATES_INPUT_COLS = ["conv_id", "ts", "role", "n_tokens", "quality_score"]
 
 
-def create_summary_table(
-    spark: SparkSession, path: str, n_buckets: int = 16, layer_mode: str = "cow"
-) -> LakeTable:
+def create_summary_table(spark: SparkSession, path: str, n_buckets: int = 16) -> LakeTable:
     return LakeTable.create(
         spark, path, SUMMARY_SCHEMA, partition_by=BUCKET_COL,
-        properties={
-            "n_buckets": n_buckets,
-            # _gen bounds (gen-MoR) prove the base-below-deltas invariant
-            "stats_cols": ["conv_id"] + (["_gen"] if layer_mode == "mor" else []),
-            "layer_mode": layer_mode,
-        },
+        properties={"n_buckets": n_buckets, "stats_cols": ["conv_id"]},
     )
 
 
-def create_daily_table(
-    spark: SparkSession, path: str, layer_mode: str = "cow"
-) -> LakeTable:
+def create_daily_table(spark: SparkSession, path: str) -> LakeTable:
     # Time-partitioned like the reference's gold scheme
     # (``gold/table_setup.py:94``) but at MONTH granularity — a rollup
     # has one row per day, so day partitions mean one-row files and a
     # flush that touches hundreds of them (see DAILY_SCHEMA). Refresh
-    # replaces whole months (CoW) or appends generation-tagged rows
-    # resolved on read (MoR).
+    # replaces whole months.
     return LakeTable.create(
         spark, path, DAILY_SCHEMA, partition_by="business_month",
-        properties={
-            "layer_mode": layer_mode,
-            "stats_cols": ["business_date"] + (["_gen"] if layer_mode == "mor" else []),
-        },
+        properties={"stats_cols": ["business_date"]},
     )
 
 
@@ -343,7 +328,7 @@ def refresh_daily_via_index(
         index_rows = (
             merged if merged is not None else index_table.read_partitions(months)
         )
-        rollup = mor.stamp_generation(_daily_from_index(index_rows), epoch, rank=1)
+        rollup = mor.stamp_generation(_daily_from_index(index_rows), epoch)
         daily_table.replace_partitions(
             rollup, summary={"source": source}, epoch=(source, epoch),
             partition_values=months,
@@ -364,7 +349,7 @@ def refresh_daily_full_from_index(
     pairs with rebuild_conv_dates_full so silver is scanned once)."""
     if daily_table.last_epoch(source) >= epoch:
         return False
-    rollup = mor.stamp_generation(_daily_from_index(index_table.read()), epoch, rank=1)
+    rollup = mor.stamp_generation(_daily_from_index(index_table.read()), epoch)
     daily_table.overwrite(
         rollup, summary={"source": source, "operation_kind": "full"},
         epoch=(source, epoch),
@@ -397,14 +382,10 @@ def rebuild_conv_dates_full(
 
 
 def read_summary(summary_table: LakeTable, buckets=None) -> DataFrame:
-    if summary_table.properties().get("layer_mode") == "mor":
-        return mor.read_resolved(summary_table, ["conv_id"], buckets)
     return summary_table.read() if buckets is None else summary_table.read_partitions(buckets)
 
 
 def read_daily(daily_table: LakeTable) -> DataFrame:
-    if daily_table.properties().get("layer_mode") == "mor":
-        return mor.read_resolved(daily_table, ["business_date"])
     return daily_table.read()
 
 
@@ -474,13 +455,7 @@ def refresh_summary_for_conversations(
     fresh = conversation_summary(enriched).withColumn(
         BUCKET_COL, bucket_expr("conv_id", n_buckets)
     )
-    if summary_table.properties().get("layer_mode") == "mor":
-        # One delta append: fresh summaries + per-conv generation markers.
-        # A conversation fully deleted upstream has a marker but no fresh
-        # row, so it resolves to nothing on read.
-        mor.append_generation(summary_table, fresh, affected.keys, epoch, source)
-        return True
-    fresh = mor.stamp_generation(fresh, epoch, rank=1)
+    fresh = mor.stamp_generation(fresh, epoch)
     target_cols = [f.name for f in summary_table.schema().fields]
     # A conversation whose rows were ALL deleted upstream produces no
     # agg row — its stale summary must go too, which the anti-join +
@@ -515,85 +490,12 @@ def refresh_summary_full(
     fresh = conversation_summary(
         read_silver(silver_table, columns=SUMMARY_INPUT_COLS)
     ).withColumn(BUCKET_COL, bucket_expr("conv_id", n_buckets))
-    fresh = mor.stamp_generation(fresh, epoch, rank=1)
+    fresh = mor.stamp_generation(fresh, epoch)
     target_cols = [f.name for f in summary_table.schema().fields]
     summary_table.overwrite(
         fresh.select(*target_cols), summary={"source": source, "operation_kind": "full"},
         epoch=(source, epoch),
     )
-    return True
-
-
-def refresh_daily_rollup(
-    silver_table: LakeTable,
-    daily_table: LakeTable,
-    affected_dates: DataFrame | None,
-    epoch: int,
-    source: str = "gold_daily",
-) -> bool:
-    """Daily activity rollup (A4 analog) — incremental by business_date:
-    only days present in the change batch are recomputed and replaced.
-    ``affected_dates`` None means full rebuild.
-
-    The recompute must see ALL conversations active on the affected dates
-    (not just changed ones), so it scans by DATE, not by key — the ts
-    file bounds in the silver manifests turn that into a scan of just the
-    files overlapping the date window (time-correlated ingest keeps each
-    file's ts range narrow)."""
-    from maritime_activity_reports_cdc_spark.plans.silver import read_silver
-
-    if daily_table.last_epoch(source) >= epoch:
-        return False
-    if affected_dates is not None:
-        dates = [r[0] for r in affected_dates.distinct().collect()]
-        if not dates:
-            daily_table.commit_epoch_noop(source, epoch, {"rows": 0})
-            return True
-        # the table is MONTH-partitioned: the recompute must cover every
-        # date of the affected months (a partial month replace would drop
-        # the untouched days' rows)
-        months = sorted({d.strftime("%Y-%m") for d in dates})
-        lo = min(dates).replace(day=1).isoformat()
-        hi_month = max(dates).replace(day=1) + dt.timedelta(days=32)
-        hi = hi_month.replace(day=1).isoformat()
-        # ts bounds prune silver BASE files only (delta generations must
-        # be read whole — see mor.read_resolved); safe because base rows
-        # of one conversation are single-generation after compaction.
-        silver_rows = read_silver(
-            silver_table, bounds={"ts": (lo, hi)},
-            columns=["conv_id", "ts", "role", "n_tokens", "quality_score"],
-        )
-        rows = silver_rows.withColumn("business_date", F.to_date("ts")).where(
-            _month(F.col("business_date")).isin(months)
-        )
-    else:
-        dates = months = None
-        rows = read_silver(
-            silver_table,
-            columns=["conv_id", "ts", "role", "n_tokens", "quality_score"],
-        ).withColumn("business_date", F.to_date("ts"))
-    rollup = rows.groupBy("business_date").agg(
-        F.countDistinct("conv_id").alias("n_active_conversations"),
-        F.count("*").alias("n_turns"),
-        F.count(F.when(F.col("role") == "tool", 1)).alias("n_tool_calls"),
-        F.sum("n_tokens").cast("long").alias("total_tokens"),
-        F.round(F.avg("quality_score"), 4).alias("avg_quality"),
-    ).withColumn("business_month", _month("business_date"))
-    if daily_table.properties().get("layer_mode") == "mor" and dates is not None:
-        spark = silver_rows.sparkSession
-        marker_keys = spark.createDataFrame(
-            [(d,) for d in dates], T.StructType([T.StructField("business_date", T.DateType(), False)])
-        ).withColumn("business_month", _month("business_date"))
-        mor.append_generation(daily_table, rollup, marker_keys, epoch, source)
-        return True
-    rollup = mor.stamp_generation(rollup, epoch, rank=1)
-    if dates is None:
-        daily_table.overwrite(rollup, summary={"source": source}, epoch=(source, epoch))
-    else:
-        daily_table.replace_partitions(
-            rollup, summary={"source": source}, epoch=(source, epoch),
-            partition_values=months,
-        )
     return True
 
 

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from maritime_activity_reports_cdc_spark.config import BRONZE_MODES, LAYER_MODES
 from maritime_activity_reports_cdc_spark.operators import scd2 as scd2_op
 from maritime_activity_reports_cdc_spark.plans import bronze as bronze_plan
 from maritime_activity_reports_cdc_spark.plans import gold as gold_plan
@@ -89,10 +90,10 @@ class MedallionPipeline:
     with_daily: bool = True
     bronze_mode: str = "cow"  # 'cow' | 'mor' (write-optimized + compaction)
     compact_every: int = 8  # MoR: fold deltas into base every N epochs
-    # Derived layers: 'cow' rewrites affected buckets per epoch (read-
-    # optimized), 'mor' appends generation deltas (write-optimized; the
-    # production default for high-frequency microbatches — epoch I/O is
-    # O(batch) on every layer instead of O(affected buckets)).
+    # Silver refresh plan: 'cow' rewrites the affected buckets per epoch
+    # (read-optimized), 'turn' appends turn-level key-MoR deltas (O(batch)
+    # fat work per epoch), 'auto' picks turn or cow per epoch from the
+    # batch's key density. Gold tables are always rewritten per key group.
     layer_mode: str = "cow"
     # Fold deltas into the base once any partition's delta DEPTH (files a
     # single-partition reader must resolve — the read-tax proxy) reaches
@@ -118,12 +119,6 @@ class MedallionPipeline:
     # reference. Use >1 in the bounded replayer (which finalize()s at the
     # end); keep 1 for continuous streaming.
     derived_every: int = 1
-    # Persist the per-epoch enriched frame and feed it to the gold
-    # summary agg directly. OFF by default — measured SLOWER here:
-    # caching materializes fat text rows, while letting gold re-read the
-    # committed silver slice keeps Parquet column pruning (the summary
-    # agg never touches text, so the re-read is a thin-column scan).
-    persist_enriched: bool = False
     # Chunk size for the two-phase mega-conversation window (None = the
     # plain per-bucket window; set when single conversations can exceed
     # ~10^5 turns so no window task serializes one conversation).
@@ -133,18 +128,13 @@ class MedallionPipeline:
     # fully flushed (pending date-frames pin PRE-refresh file lists, so
     # expiry only runs when nothing is pinned). None = manual/CLI only.
     expire_keep_last: int | None = None
-    # Cache the change batch across the relay's passes. Off by default:
-    # deserialized caching of fat text rows costs more (JVM heap churn +
-    # GC) than re-scanning the compressed, column-pruned parquet chunk —
-    # each pass prunes to the columns it needs, which the cache defeats.
-    cache_batches: bool = False
     bronze: LakeTable = field(init=False)
     silver: LakeTable = field(init=False)
     summary: LakeTable | None = field(init=False, default=None)
     daily: LakeTable | None = field(init=False, default=None)
-    # conv×date activity index behind the daily rollup (cow/turn modes):
-    # date discovery + daily recompute read THIS tiny date-partitioned
-    # table instead of scanning silver (see gold.CONV_DATES_SCHEMA)
+    # conv×date activity index behind the daily rollup: date discovery
+    # + daily recompute read THIS tiny date-partitioned table instead of
+    # scanning silver (see gold.CONV_DATES_SCHEMA)
     conv_dates: LakeTable | None = field(init=False, default=None)
     lineage: LakeTable = field(init=False)
     metrics: LakeTable = field(init=False)
@@ -231,6 +221,14 @@ class MedallionPipeline:
                layer_mode: str = "cow",
                compact_delta_depth: int = 8,
                derived_every: int = 1) -> "MedallionPipeline":
+        if layer_mode not in LAYER_MODES:
+            raise ValueError(
+                f"layer_mode must be {'|'.join(LAYER_MODES)}, got {layer_mode!r}"
+            )
+        if bronze_mode not in BRONZE_MODES:
+            raise ValueError(
+                f"bronze_mode must be {'|'.join(BRONZE_MODES)}, got {bronze_mode!r}"
+            )
         p = cls(spark, root, n_buckets, with_gold, with_daily, bronze_mode,
                 compact_every, layer_mode, compact_delta_depth)
         p.derived_every = derived_every
@@ -243,16 +241,11 @@ class MedallionPipeline:
         )
         if with_gold:
             p.summary = gold_plan.create_summary_table(
-                spark, p._p("gold_conversation_summary"), n_buckets, layer_mode=layer_mode
+                spark, p._p("gold_conversation_summary"), n_buckets
             )
         if with_daily:
-            p.daily = gold_plan.create_daily_table(
-                spark, p._p("gold_daily_rollup"), layer_mode=layer_mode
-            )
-            if layer_mode != "mor":
-                p.conv_dates = gold_plan.create_conv_dates_table(
-                    spark, p._p("gold_conv_dates")
-                )
+            p.daily = gold_plan.create_daily_table(spark, p._p("gold_daily_rollup"))
+            p.conv_dates = gold_plan.create_conv_dates_table(spark, p._p("gold_conv_dates"))
         # SCD2 conversation-master dimension (reference vessel_metadata /
         # vessel_master flow, M1/M3) — maintained from the separate
         # conv_meta change feed via apply_meta_epoch.
@@ -275,13 +268,18 @@ class MedallionPipeline:
         p.n_buckets = int(p.bronze.properties()["n_buckets"])
         p.bronze_mode = p.bronze.properties().get("apply_mode", "cow")
         p.layer_mode = p.silver.properties().get("layer_mode", "cow")
+        if p.layer_mode not in LAYER_MODES:
+            raise ValueError(
+                f"lake at {root!r} uses layer_mode {p.layer_mode!r}, which is no "
+                f"longer supported (supported: {'|'.join(LAYER_MODES)})"
+            )
         p.with_gold = LakeTable.exists(p._p("gold_conversation_summary"))
         p.summary = (
             LakeTable.load(spark, p._p("gold_conversation_summary")) if p.with_gold else None
         )
         p.with_daily = LakeTable.exists(p._p("gold_daily_rollup"))
         p.daily = LakeTable.load(spark, p._p("gold_daily_rollup")) if p.with_daily else None
-        if p.with_daily and p.layer_mode != "mor":
+        if p.with_daily:
             if LakeTable.exists(p._p("gold_conv_dates")):
                 p.conv_dates = LakeTable.load(spark, p._p("gold_conv_dates"))
             else:
@@ -374,8 +372,6 @@ class MedallionPipeline:
         return self._apply_epoch_inner(batch, epoch)
 
     def _apply_epoch_inner(self, batch: DataFrame, epoch: int) -> EpochMetrics:
-        if self.cache_batches:
-            batch = batch.persist()
         t0 = time.monotonic()
 
         def _bronze() -> bronze_plan.ApplyResult:
@@ -411,132 +407,97 @@ class MedallionPipeline:
         if not overlap:
             res = _bronze()
         t1 = time.monotonic()
-        enriched = None
-        try:
-            dates = None
-            if self.daily is not None:
-                # Dates needing recompute: any date the affected
-                # conversations had rows on BEFORE the batch (covers
-                # deletes and ts-moving updates — a delete-only epoch
-                # still recomputes the dates its rows vacated) plus any
-                # date carried by the batch itself (covers inserts and
-                # ts destinations).
-                dates = (
-                    batch.where(F.col("ts").isNotNull())
-                    .select(F.to_date("ts").alias("business_date"))
-                    .distinct()
-                )
-                if self.conv_dates is None:
-                    # legacy (gen-MoR daily) path: vacated dates come
-                    # from a pre-refresh silver scan of the affected
-                    # conversations. The scan is constructed against the
-                    # PRE-refresh snapshot — the readers resolve the file
-                    # list eagerly, so running it after the refresh below
-                    # still reads pre-refresh state. (With the conv×date
-                    # index, the vacated side is discovered from the
-                    # index at flush time instead — no silver scan.)
-                    dates = dates.unionByName(
-                        affected.semi(
-                            silver_plan.read_silver(
-                                self.silver, affected.buckets, bounds=affected.prune(),
-                                columns=["conv_id", "ts"],
-                            )
-                        ).select(F.to_date("ts").alias("business_date"))
-                    ).distinct()
-            # 'auto' picks the refresh plan per epoch from the density
-            # estimate the dense fast path already computes: a SPARSE
-            # batch (most conversations untouched) takes the turn-level
-            # O(batch) delta path; a dense one takes the whole-bucket
-            # rewrite, whose replace also folds outstanding turn deltas
-            # (fresh rows come from bronze — the ground truth — and
-            # dense means no survivors, so clearing deltas is safe).
-            use_turn = self.layer_mode == "turn" or (
-                self.layer_mode == "auto" and not affected.dense
+        dates = None
+        if self.daily is not None:
+            # Dates carried by the batch itself (inserts and ts
+            # destinations). The dates the affected conversations had rows
+            # on BEFORE the batch (deletes, ts-moving updates) come from
+            # the conv×date index at flush time.
+            dates = (
+                batch.where(F.col("ts").isNotNull())
+                .select(F.to_date("ts").alias("business_date"))
+                .distinct()
             )
-            if use_turn:
-                # turn-level incremental refresh: O(batch) fat work per
-                # epoch (fresh rows from the batch, ≤1 successor per key)
-                if overlap:
-                    from concurrent.futures import ThreadPoolExecutor
+        # 'auto' picks the refresh plan per epoch from the density
+        # estimate the dense fast path already computes: a SPARSE
+        # batch (most conversations untouched) takes the turn-level
+        # O(batch) delta path; a dense one takes the whole-bucket
+        # rewrite, whose replace also folds outstanding turn deltas
+        # (fresh rows come from bronze — the ground truth — and
+        # dense means no survivors, so clearing deltas is safe).
+        use_turn = self.layer_mode == "turn" or (
+            self.layer_mode == "auto" and not affected.dense
+        )
+        if use_turn:
+            # turn-level incremental refresh: O(batch) fat work per
+            # epoch (fresh rows from the batch, ≤1 successor per key)
+            if overlap:
+                from concurrent.futures import ThreadPoolExecutor
 
-                    with ThreadPoolExecutor(max_workers=2) as pool:
-                        fb = pool.submit(_bronze)
-                        fs = pool.submit(
-                            silver_plan.refresh_silver_turn,
-                            self.bronze, self.silver, batch, affected,
-                            epoch, "silver_refresh", True,
-                        )
-                        res = fb.result()
-                        fs.result()
-                else:
-                    silver_plan.refresh_silver_turn(
-                        self.bronze, self.silver, batch, affected, epoch=epoch
+                with ThreadPoolExecutor(max_workers=2) as pool:
+                    fb = pool.submit(_bronze)
+                    fs = pool.submit(
+                        silver_plan.refresh_silver_turn,
+                        self.bronze, self.silver, batch, affected,
+                        epoch, "silver_refresh", True,
                     )
+                    res = fb.result()
+                    fs.result()
             else:
-                # Fresh silver rows for the affected conversations —
-                # computed ONCE and fed to both the silver write and
-                # (optionally) the gold summary agg. Under overlap they
-                # derive from pre-apply bronze ∪ batch winners, so this
-                # refresh runs concurrently with the bronze apply.
-                def _silver_conv():
-                    nonlocal enriched
-                    if affected.buckets:
-                        enriched = silver_plan.build_enriched(
-                            self.bronze, affected,
-                            mega_conv_chunk=self.mega_conv_chunk,
-                            overlay_batch=batch if overlap else None,
-                        )
-                        if self.summary is not None and self.persist_enriched:
-                            enriched = enriched.persist()
-                    silver_plan.refresh_silver_for_conversations(
-                        self.bronze, self.silver, affected, epoch=epoch,
-                        enriched=enriched,
+                silver_plan.refresh_silver_turn(
+                    self.bronze, self.silver, batch, affected, epoch=epoch
+                )
+        else:
+            # Fresh silver rows for the affected conversations. Under
+            # overlap they derive from pre-apply bronze ∪ batch winners,
+            # so this refresh runs concurrently with the bronze apply.
+            def _silver_conv():
+                enriched = None
+                if affected.buckets:
+                    enriched = silver_plan.build_enriched(
+                        self.bronze, affected,
+                        mega_conv_chunk=self.mega_conv_chunk,
+                        overlay_batch=batch if overlap else None,
                     )
+                silver_plan.refresh_silver_for_conversations(
+                    self.bronze, self.silver, affected, epoch=epoch,
+                    enriched=enriched,
+                )
 
-                if overlap:
-                    from concurrent.futures import ThreadPoolExecutor
+            if overlap:
+                from concurrent.futures import ThreadPoolExecutor
 
-                    with ThreadPoolExecutor(max_workers=2) as pool:
-                        fb = pool.submit(_bronze)
-                        fs = pool.submit(_silver_conv)
-                        res = fb.result()
-                        fs.result()
-                else:
-                    _silver_conv()
-            t2 = time.monotonic()
+                with ThreadPoolExecutor(max_workers=2) as pool:
+                    fb = pool.submit(_bronze)
+                    fs = pool.submit(_silver_conv)
+                    res = fb.result()
+                    fs.result()
+            else:
+                _silver_conv()
+        t2 = time.monotonic()
 
-            # Only feed the cached frame to gold when it actually IS
-            # cached; otherwise gold re-reads the committed silver slice
-            # (thin-column scan — Parquet never reads text for the agg).
-            enriched_for_gold = enriched if self.persist_enriched else None
-
-            self._pending_derived.append((epoch, affected, dates))
-            if len(self._pending_derived) >= max(1, self.derived_every):
-                self._submit_flush(epoch, enriched_for_gold)
-            t3 = time.monotonic()
-            self._maybe_compact_layers(epoch)
-            if self.expire_keep_last is not None and not self._pending_derived:
-                # expiry DELETES superseded files — an in-flight flush or
-                # compaction has eagerly-resolved file lists pinned, so
-                # drain both first. Runs BEFORE dispatching THIS epoch's
-                # queued maintenance: draining here only waits on the
-                # PREVIOUS epoch's task (usually long done), so expiry no
-                # longer swallows the ingest overlap async_maintenance
-                # buys (the queued compactions read their inputs at
-                # dispatch time, after the deletes — safe).
-                self._wait_flush()
-                self._wait_maintenance()
-                for table in (self.bronze, self.silver, self.summary, self.daily,
-                              self.conv_dates,
-                              self.conv_master, self.lineage, self.metrics):
-                    if table is not None:
-                        table.expire_snapshots(keep_last=self.expire_keep_last)
-            self._dispatch_maintenance()
-        finally:
-            if enriched is not None and self.summary is not None and self.persist_enriched:
-                enriched.unpersist()
-            if self.cache_batches:
-                batch.unpersist()
+        self._pending_derived.append((epoch, affected, dates))
+        if len(self._pending_derived) >= max(1, self.derived_every):
+            self._submit_flush(epoch)
+        t3 = time.monotonic()
+        self._maybe_compact_layers(epoch)
+        if self.expire_keep_last is not None and not self._pending_derived:
+            # expiry DELETES superseded files — an in-flight flush or
+            # compaction has eagerly-resolved file lists pinned, so
+            # drain both first. Runs BEFORE dispatching THIS epoch's
+            # queued maintenance: draining here only waits on the
+            # PREVIOUS epoch's task (usually long done), so expiry no
+            # longer swallows the ingest overlap async_maintenance
+            # buys (the queued compactions read their inputs at
+            # dispatch time, after the deletes — safe).
+            self._wait_flush()
+            self._wait_maintenance()
+            for table in (self.bronze, self.silver, self.summary, self.daily,
+                          self.conv_dates,
+                          self.conv_master, self.lineage, self.metrics):
+                if table is not None:
+                    table.expire_snapshots(keep_last=self.expire_keep_last)
+        self._dispatch_maintenance()
 
         if res.applied and res.bucket_stats:
             self._pending_lineage.extend(
@@ -692,7 +653,7 @@ class MedallionPipeline:
 
         self._maint_future = self._maint_pool.submit(_run_all)
 
-    def _submit_flush(self, epoch: int, enriched_for_gold: DataFrame | None) -> None:
+    def _submit_flush(self, epoch: int) -> None:
         """Dispatch the derived flush: background thread when
         ``async_derived`` (overlapping it with the next epoch), inline
         otherwise. The pending list is captured HERE, on the relay
@@ -703,10 +664,8 @@ class MedallionPipeline:
         if not pend:
             return
         self._wait_flush()
-        # the persist_enriched cache is unpersisted when this epoch
-        # returns — a background flush could outlive it, so run inline
-        if not self.async_derived or enriched_for_gold is not None:
-            self._flush_derived(epoch, enriched_for_gold, pend)
+        if not self.async_derived:
+            self._flush_derived(epoch, pend)
             return
         if self._flush_pool is None:
             from concurrent.futures import ThreadPoolExecutor
@@ -714,16 +673,9 @@ class MedallionPipeline:
             self._flush_pool = ThreadPoolExecutor(
                 max_workers=1, thread_name_prefix="derived-flush"
             )
-        self._flush_future = self._flush_pool.submit(
-            self._flush_derived, epoch, None, pend
-        )
+        self._flush_future = self._flush_pool.submit(self._flush_derived, epoch, pend)
 
-    def _flush_derived(
-        self,
-        epoch: int,
-        enriched_for_gold: DataFrame | None = None,
-        pend: list | None = None,
-    ) -> None:
+    def _flush_derived(self, epoch: int, pend: list | None = None) -> None:
         """Run the gold summary + daily refreshes over everything pending.
         Epoch-stamped with the NEWEST covered epoch, so a crash between
         flush and checkpoint replays idempotently."""
@@ -751,33 +703,11 @@ class MedallionPipeline:
                     for d in date_frames[1:]:
                         dates = dates.unionByName(d)
                     dates = dates.distinct()
-            if len(pend) > 1:
-                enriched_for_gold = None  # cache covers only the last epoch
-
-            def _summary():
-                if self.summary is not None:
-                    gold_plan.refresh_summary_for_conversations(
-                        self.silver, self.summary, affected, epoch=epoch,
-                        enriched=enriched_for_gold,
-                    )
-
-            def _daily():
-                if self.daily is None:
-                    return
-                if self.conv_dates is not None:
-                    gold_plan.refresh_daily_via_index(
-                        self.silver, self.conv_dates, self.daily, affected,
-                        dates, epoch=epoch, enriched=enriched_for_gold,
-                    )
-                else:
-                    gold_plan.refresh_daily_rollup(self.silver, self.daily, dates, epoch=epoch)
 
             shared_slice = None
             if (
-                enriched_for_gold is None
-                and self.summary is not None
+                self.summary is not None
                 and self.daily is not None
-                and self.conv_dates is not None
                 and affected.buckets
                 # Cache ONLY when the slice is a real MoR resolve over a
                 # key-restricted set (non-dense turn/auto): there the
@@ -793,13 +723,25 @@ class MedallionPipeline:
                 # Both gold consumers need the affected conversations'
                 # post-refresh silver rows. Resolve the THIN slice once
                 # and cache it (no text columns — tiny), instead of each
-                # consumer re-running the scan + MoR resolve. This is the
-                # opposite trade from persist_enriched: that would cache
-                # FAT rows, this caches the 8 thin columns both aggs use.
+                # consumer re-running the scan + MoR resolve.
                 shared_slice = silver_plan.read_silver_for_affected(
                     self.silver, affected, columns=gold_plan.SUMMARY_INPUT_COLS
                 ).persist()
-                enriched_for_gold = shared_slice
+
+            def _summary():
+                if self.summary is not None:
+                    gold_plan.refresh_summary_for_conversations(
+                        self.silver, self.summary, affected, epoch=epoch,
+                        enriched=shared_slice,
+                    )
+
+            def _daily():
+                if self.daily is not None:
+                    gold_plan.refresh_daily_via_index(
+                        self.silver, self.conv_dates, self.daily, affected,
+                        dates, epoch=epoch, enriched=shared_slice,
+                    )
+
             try:
                 if self.parallel_layers and self.summary is not None and self.daily is not None:
                     # Independent consumers of committed state writing to
@@ -849,49 +791,30 @@ class MedallionPipeline:
 
     def _rebuild_daily_full(self, epoch: int) -> None:
         """Catch-up daily rebuild: one silver scan into the conv×date
-        index, daily folded from the index (legacy direct scan when the
-        index is absent — gen-MoR daily)."""
+        index, daily folded from the index."""
         if self.daily is None:
             return
-        if self.conv_dates is not None:
-            gold_plan.rebuild_conv_dates_full(self.silver, self.conv_dates, epoch=epoch)
-            gold_plan.refresh_daily_full_from_index(self.conv_dates, self.daily, epoch=epoch)
-        else:
-            gold_plan.refresh_daily_rollup(self.silver, self.daily, None, epoch=epoch)
+        gold_plan.rebuild_conv_dates_full(self.silver, self.conv_dates, epoch=epoch)
+        gold_plan.refresh_daily_full_from_index(self.conv_dates, self.daily, epoch=epoch)
 
     def _maybe_compact_layers(self, epoch: int) -> None:
-        if self.layer_mode in ("turn", "auto"):
-            from maritime_activity_reports_cdc_spark.operators.apply import compact
-
-            if self._compaction_due(self.silver, epoch):
-                # refresh generations are monotonic -> no out-of-order
-                # hazard at this layer; tombstones fold away entirely
-                self._submit_maintenance(
-                    compact,
-                    self.silver, keys=("conv_id", "turn_idx"), order=("_gen",),
-                    summary={"epoch": epoch},
-                    drop_tombstones_below_lsn=epoch + 1,
-                )
+        if self.layer_mode not in ("turn", "auto"):
             return
-        if self.layer_mode != "mor":
-            return
-        from maritime_activity_reports_cdc_spark.operators import mor as mor_op
+        from maritime_activity_reports_cdc_spark.operators.apply import compact
 
-        # gen-MoR layer compaction rewrites the SAME gold tables an
-        # in-flight background flush commits to — drain it first
-        self._wait_flush()
-        for table, group in (
-            (self.silver, ["conv_id"]),
-            (self.summary, ["conv_id"]),
-            (self.daily, ["business_date"]),
-        ):
-            if table is not None and self._compaction_due(table, epoch):
-                mor_op.compact_generations(table, group, summary={"epoch": epoch})
+        if self._compaction_due(self.silver, epoch):
+            # refresh generations are monotonic -> no out-of-order
+            # hazard at this layer; tombstones fold away entirely
+            self._submit_maintenance(
+                compact,
+                self.silver, keys=("conv_id", "turn_idx"), order=("_gen",),
+                summary={"epoch": epoch},
+                drop_tombstones_below_lsn=epoch + 1,
+            )
 
     def compact_all(self) -> None:
         """Fold every table's outstanding deltas (end-of-replay/cron
         maintenance): restores pure read-optimized state."""
-        from maritime_activity_reports_cdc_spark.operators import mor as mor_op
         from maritime_activity_reports_cdc_spark.operators.apply import compact
 
         self._wait_flush()
@@ -904,14 +827,6 @@ class MedallionPipeline:
                 self.silver, keys=("conv_id", "turn_idx"), order=("_gen",),
                 drop_tombstones_below_lsn=self.silver.last_epoch("silver_refresh") + 1,
             )
-        if self.layer_mode == "mor":
-            for table, group in (
-                (self.silver, ["conv_id"]),
-                (self.summary, ["conv_id"]),
-                (self.daily, ["business_date"]),
-            ):
-                if table is not None:
-                    mor_op.compact_generations(table, group)
 
     def flush_observability(self) -> None:
         """Write buffered lineage/metrics rows (one append each instead of

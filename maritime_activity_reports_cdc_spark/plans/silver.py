@@ -64,18 +64,13 @@ def create_silver_table(
     spark: SparkSession, path: str, n_buckets: int = 16, layer_mode: str = "cow"
 ) -> LakeTable:
     """``layer_mode``: 'cow' replaces affected buckets per refresh (read-
-    optimized); 'mor' appends generation-tagged deltas resolved on read
-    (write-optimized — refresh I/O ∝ batch, not ∝ affected buckets);
-    'turn' appends turn-level key-MoR deltas (O(batch) fat work);
-    'auto' picks turn vs cow PER EPOCH from the batch's key density
-    (sparse feeds take the O(batch) delta path, dense ones the
+    optimized); 'turn' appends turn-level key-MoR deltas (O(batch) fat
+    work); 'auto' picks turn vs cow PER EPOCH from the batch's key
+    density (sparse feeds take the O(batch) delta path, dense ones the
     whole-bucket rewrite — see MedallionPipeline)."""
     props = {
         "n_buckets": n_buckets,
-        # ts bounds let the daily-rollup refresh prune to affected dates;
-        # _gen bounds (gen-MoR) prove the base-below-deltas invariant so
-        # the resolve never shuffles the fat base (mor._base_below_deltas)
-        "stats_cols": ["conv_id", "ts"] + (["_gen"] if layer_mode == "mor" else []),
+        "stats_cols": ["conv_id", "ts"],
         "layer_mode": layer_mode,
     }
     if layer_mode in ("turn", "auto"):
@@ -94,19 +89,14 @@ def create_silver_table(
 def read_silver(
     silver_table: LakeTable, buckets=None, bounds=None, columns: list[str] | None = None
 ) -> DataFrame:
-    """Mode-dispatched resolved view of silver state. For MoR tables,
-    ts/conv bounds prune base files only (delta files are read whole).
+    """Mode-dispatched resolved view of silver state.
 
     ``columns``: thin consumers (aggs that never touch text) should pass
     their column set — MoR resolution carries whole rows through its
     shuffle otherwise (Catalyst cannot prune into the resolve)."""
-    from maritime_activity_reports_cdc_spark.operators import mor
     from maritime_activity_reports_cdc_spark.operators.apply import read_merged
 
-    mode = silver_table.properties().get("layer_mode")
-    if mode == "mor":
-        return mor.read_resolved(silver_table, ["conv_id"], buckets, bounds, columns=columns)
-    if mode in ("turn", "auto"):
+    if silver_table.properties().get("layer_mode") in ("turn", "auto"):
         # key-based MoR: one winner per (conv_id, turn_idx) in refresh-
         # epoch order; delete tombstones hidden. (Reduces to a plain base
         # scan when no deltas are outstanding — auto mode's dense epochs
@@ -686,7 +676,7 @@ def refresh_silver_turn(
         # write is cheap anyway.
         tombs = tombs.repartition(F.col(BUCKET_COL))
     delta = mor.stamp_generation(
-        _align(enriched).unionByName(_align(tombs)), epoch, rank=1
+        _align(enriched).unionByName(_align(tombs)), epoch
     ).select(*cols)
     try:
         silver_table.append_deltas(
@@ -767,14 +757,10 @@ def refresh_silver_for_conversations(
     source: str = "silver_refresh",
     enriched: DataFrame | None = None,
 ) -> bool:
-    """Swap in the affected conversations' recomputed silver rows.
-    Returns False on an idempotent epoch skip.
-
-    CoW: survivors of the affected buckets are rewritten alongside the
-    fresh rows (read-optimized, write cost ∝ affected buckets).
-    MoR: the fresh rows append as one generation delta with per-conv
-    markers (write cost ∝ batch; full-conv deletes resolve via the
-    marker — no survivor scan at all)."""
+    """Swap in the affected conversations' recomputed silver rows:
+    survivors of the affected buckets are rewritten alongside the fresh
+    rows (read-optimized, write cost ∝ affected buckets). Returns False
+    on an idempotent epoch skip."""
     from maritime_activity_reports_cdc_spark.operators import mor
 
     if silver_table.last_epoch(source) >= epoch:
@@ -785,14 +771,7 @@ def refresh_silver_for_conversations(
     if enriched is None:
         enriched = build_enriched(bronze_table, affected)
 
-    if silver_table.properties().get("layer_mode") == "mor":
-        mor.append_generation(
-            silver_table, enriched, affected.keys, epoch=epoch, source=source,
-            pre_partitioned=True,  # enriched came through the bucket exchange
-        )
-        return True
-
-    enriched = mor.stamp_generation(enriched, epoch, rank=1)
+    enriched = mor.stamp_generation(enriched, epoch)
     target_cols = [f.name for f in silver_table.schema().fields]
     aligned = enriched.select(*[
         F.col(c) if c in enriched.columns else F.lit(None).alias(c) for c in target_cols

@@ -35,6 +35,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
 from dataclasses import dataclass
@@ -146,6 +147,10 @@ class LakeTable:
         # Bounded to a handful of recent versions (concurrency paths read
         # expected_version/read_version snapshots too).
         self._snap_cache: dict[int, Snapshot] = {}
+        # the relay, derived-flush and overlap-pool threads share one
+        # LakeTable: every cache mutation (insert, evict, expiry pop)
+        # holds this lock; lookups are single dict.get calls
+        self._snap_lock = threading.Lock()
 
     # ------------------------------------------------------------------
     # lifecycle
@@ -253,9 +258,10 @@ class LakeTable:
         only the most recent handful so long-lived tables don't hold
         every historical file-stats dict)."""
         cache = self._snap_cache
-        cache[snap.version] = snap
-        while len(cache) > 4:
-            cache.pop(min(cache))
+        with self._snap_lock:
+            cache[snap.version] = snap
+            while len(cache) > 4:
+                cache.pop(min(cache))
 
     def history(self) -> list[Snapshot]:
         names = sorted(
@@ -555,7 +561,8 @@ class LakeTable:
             except OSError:
                 pass
         for v in expire:
-            self._snap_cache.pop(v, None)  # expired manifests must MISS
+            with self._snap_lock:
+                self._snap_cache.pop(v, None)  # expired manifests must MISS
             try:
                 os.unlink(os.path.join(self._manifest_path(), f"v{v:08d}.json"))
             except FileNotFoundError:
@@ -578,7 +585,9 @@ class LakeTable:
         # — plus orphan shards from failed/speculative build tasks and
         # stale .tmp files — leak a full filter byte volume per rebuild
         # without this (judge ADVICE r5 #1).
-        live_bloom: set[str] = set()
+        # A kept sidecar that fails to parse leaves its live shards
+        # unknown: skip the bloom pass entirely rather than delete them.
+        live_bloom: set[str] | None = set()
         for v in keep:
             ref = self.snapshot(v).properties.get("bloom_index")
             if isinstance(ref, dict) and ref.get("sidecar"):
@@ -586,10 +595,13 @@ class LakeTable:
                     referenced_sidecar_files,
                 )
 
-                live_bloom |= referenced_sidecar_files(
-                    self._manifest_path(), ref["sidecar"]
-                )
-        for name in os.listdir(self._manifest_path()):
+                files = referenced_sidecar_files(self._manifest_path(), ref["sidecar"])
+                if files is None:
+                    live_bloom = None
+                    break
+                live_bloom |= files
+        bloom_names = os.listdir(self._manifest_path()) if live_bloom is not None else []
+        for name in bloom_names:
             if not name.startswith("bloom-") or name in live_bloom:
                 continue
             try:

@@ -23,16 +23,17 @@ import json
 
 
 def main() -> None:
+    from maritime_activity_reports_cdc_spark.config import BRONZE_MODES, LAYER_MODES
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--changes", required=True, help="parquet dir with the change log")
     ap.add_argument("--lake", required=True, help="lake root (created if missing)")
     ap.add_argument("--checkpoint", required=True)
     ap.add_argument("--chunks", type=int, default=16)
     ap.add_argument("--buckets", type=int, default=64)
-    ap.add_argument("--mode", choices=["cow", "mor"], default="mor")
-    ap.add_argument("--layer-mode", choices=["cow", "mor", "turn", "auto"],
-                    default="auto",
-                    help="silver/gold refresh plan; 'auto' picks turn vs cow "
+    ap.add_argument("--mode", choices=BRONZE_MODES, default="mor")
+    ap.add_argument("--layer-mode", choices=LAYER_MODES, default="auto",
+                    help="silver refresh plan; 'auto' picks turn vs cow "
                          "per epoch from batch density")
     ap.add_argument("--compact-every", type=int, default=8)
     ap.add_argument("--derived-every", type=int, default=2,

@@ -368,26 +368,6 @@ def test_silver_turn_mode_feed_arbitrates_by_generation(spark, tmp_path):
                    for c in ch.columns)
 
 
-def test_cli_changes_guards_gen_marker_silver(spark, tmp_path):
-    import argparse
-
-    import pytest as _pytest
-
-    from maritime_activity_reports_cdc_spark import cli
-    from maritime_activity_reports_cdc_spark.plans.pipeline import MedallionPipeline
-
-    MedallionPipeline.create(
-        spark, str(tmp_path / "lake"), n_buckets=2, layer_mode="mor"
-    )
-    args = argparse.Namespace(
-        cmd="changes", master="local[4]", shuffle_partitions=8, config=None,
-        root=str(tmp_path / "lake"), table="silver", since_version=0,
-        end_version=None, output=None,
-    )
-    with _pytest.raises(SystemExit, match="generation-MoR"):
-        cli.cmd_changes(args)
-
-
 def test_feed_rows_carry_commit_timestamp(fed_table):
     """Delta CDF contract parity: every feed row carries _commit_timestamp
     from the snapshot's commit metadata, non-null and non-decreasing in

@@ -67,9 +67,10 @@ def test_load_config_parses_and_validates(tmp_path):
     with _pytest.raises(ValueError, match="unknown key"):
         load_config(str(bad))
     bad2 = tmp_path / "bad2.toml"
-    bad2.write_text("[lake]\nlayer_mode = \"zebra\"\n")
-    with _pytest.raises(ValueError, match="layer_mode"):
-        load_config(str(bad2))
+    for mode in ("zebra", "mor"):  # misspelled, and the retired generation-MoR
+        bad2.write_text(f"[lake]\nlayer_mode = \"{mode}\"\n")
+        with _pytest.raises(ValueError, match="layer_mode"):
+            load_config(str(bad2))
 
 
 def test_cli_config_file_end_to_end(spark, tmp_path, engine_zip):

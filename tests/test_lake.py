@@ -102,6 +102,46 @@ def test_set_properties_commits_without_touching_data(spark, tmp_path):
     assert t.read().count() == 2
 
 
+def test_snapshot_cache_is_thread_safe(spark, tmp_path):
+    """Relay, derived-flush and overlap-pool threads share one LakeTable:
+    concurrent snapshot() misses across more versions than the cache
+    holds must neither raise (dict mutated during min()/pop) nor let the
+    cache grow past its bound."""
+    import sys
+    import threading
+
+    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA)
+    for i in range(9):
+        t.set_properties({"i": i})
+    versions = list(range(t.current_version() + 1))
+    errors: list[BaseException] = []
+    start = threading.Barrier(8)
+
+    def worker(offset: int) -> None:
+        try:
+            start.wait()
+            for n in range(400):
+                v = versions[(offset + n) % len(versions)]
+                assert t.snapshot(v).version == v
+        except BaseException as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=worker, args=(k,)) for k in range(8)]
+    # switch threads as often as possible so unguarded dict iteration
+    # and pops actually interleave
+    prior = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join()
+    finally:
+        sys.setswitchinterval(prior)
+    assert not errors, errors[:3]
+    assert len(t._snap_cache) <= 4
+
+
 def test_add_columns_null_backfill(spark, tmp_path):
     t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, partition_by="p")
     t.append(_df(spark, [("a", 1, 0)]))

@@ -425,3 +425,41 @@ def test_bloom_sidecar_sharded_at_1e5_files(tmp_path):
     # probing a per-file-unique key keeps exactly that file (+fp tail)
     kept_one = B.prune_files_by_bloom(t, files, {"lsn": [123]})
     assert "f000123.parquet" in kept_one and len(kept_one) < n_files * 0.02
+
+
+def test_expiry_keeps_bloom_files_when_live_sidecar_unparseable(spark, tmp_path):
+    """Bloom GC keeps data when unsure: if a kept snapshot's sidecar
+    cannot be parsed, its live shard blobs are unknown, so expiry deletes
+    no bloom file at all (not even an orphan) and still expires the
+    snapshots themselves."""
+    from maritime_activity_reports_cdc_spark.operators.bloomskip import (
+        build_bloom_index,
+        referenced_sidecar_files,
+    )
+
+    df = spark.range(0, 200).selectExpr(
+        "concat('k', id) AS key", "id AS val", "CAST(pmod(id, 4) AS INT) AS bucket"
+    )
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), df.schema, partition_by="bucket",
+        properties={"stats_cols": ["key"]},
+    )
+    t.append(df)
+    build_bloom_index(t, ("key",))
+    t.append(df)
+    mdir = t._manifest_path()
+    sidecar = t.properties()["bloom_index"]["sidecar"]
+    shards = referenced_sidecar_files(mdir, sidecar) - {sidecar}
+    assert shards
+    orphan = "bloom-v99999999-deadbeef.blob"
+    with open(os.path.join(mdir, orphan), "wb") as fh:
+        fh.write(b"orphan")
+    path = os.path.join(mdir, sidecar)
+    with open(path, "r+b") as fh:
+        fh.truncate(os.path.getsize(path) // 2)
+    assert referenced_sidecar_files(mdir, sidecar) is None
+
+    stats = t.expire_snapshots(keep_last=1)
+    assert stats["manifests_removed"] >= 1
+    remaining = set(os.listdir(mdir))
+    assert {sidecar, orphan} | shards <= remaining

@@ -132,46 +132,6 @@ def test_turn_incremental_silver_matches_cow(spark, tmp_path, changes):
     check(tn2)                    # read-optimized path
 
 
-def test_gen_mor_layer_pipeline_matches_cow(spark, tmp_path, changes):
-    """Write-optimized derived layers (generation-MoR silver/summary/
-    daily) must resolve to exactly the CoW pipeline's state — mid-replay
-    (uncompacted deltas), after crash-resume, and after compaction."""
-    cow = MedallionPipeline.create(spark, str(tmp_path / "cow"), n_buckets=4)
-    CheckpointedReplayer(cow, str(tmp_path / "ckc")).run(changes, n_chunks=5)
-
-    wo = MedallionPipeline.create(
-        spark, str(tmp_path / "wo"), n_buckets=4,
-        bronze_mode="mor", layer_mode="mor", compact_every=0, compact_delta_depth=10**6,
-    )
-    rep = CheckpointedReplayer(wo, str(tmp_path / "ckw"))
-    with pytest.raises(RuntimeError, match="injected crash"):
-        rep.run(changes, n_chunks=5, fail_after_epoch=1)
-    CheckpointedReplayer(MedallionPipeline.load(spark, str(tmp_path / "wo")),
-                         str(tmp_path / "ckw")).run(changes, n_chunks=5)
-    wo = MedallionPipeline.load(spark, str(tmp_path / "wo"))
-
-    def check():
-        pairs = [
-            (["conv_id", "turn_idx", "text", "n_tokens", "gap_secs"],
-             cow.read_silver(), wo.read_silver()),
-            (["conv_id", "n_turns", "total_tokens", "avg_gap_secs", "risk_level"],
-             cow.read_summary(), wo.read_summary()),
-            (["business_date", "n_active_conversations", "n_turns", "total_tokens",
-              "avg_quality"], cow.read_daily(), wo.read_daily()),
-        ]
-        for cols, a_df, b_df in pairs:
-            a = a_df.select(cols).toPandas().sort_values(cols[:2]).reset_index(drop=True)
-            b = b_df.select(cols).toPandas().sort_values(cols[:2]).reset_index(drop=True)
-            pd.testing.assert_frame_equal(a, b, check_dtype=False)
-
-    assert wo.silver.delta_partition_values(), "silver generations should be uncompacted"
-    check()                      # resolve path (deltas outstanding)
-    wo.compact_all()
-    assert wo.silver.delta_partition_values() == []
-    assert wo.summary.delta_partition_values() == []
-    check()                      # read-optimized path after folding
-
-
 def test_auto_layer_mode_matches_cow_and_flips_plans(spark, tmp_path):
     """layer_mode='auto' picks the silver plan per epoch: a dense batch
     (initial load, bulk backfill) takes the whole-bucket CoW rewrite —
@@ -241,110 +201,6 @@ def test_auto_layer_mode_matches_cow_and_flips_plans(spark, tmp_path):
     check()
     for df in (load, sparse, dense_wave):
         df.unpersist()
-
-
-def _fat_shuffles(df, fat_col):
-    """(outputs, scan_root_paths) for every SHUFFLE exchange in the
-    physical plan whose output carries ``fat_col`` (broadcast exchanges
-    excluded — broadcasting thin sides is the point). Scan locations are
-    read from the scan nodes' file index (treeString truncates long
-    paths). The caller must have AQE disabled BEFORE the frame's plan is
-    first materialized — an AdaptiveSparkPlan root hides its subtree
-    from children() and the walk would vacuously find nothing."""
-    plan = df._jdf.queryExecution().executedPlan()
-    assert "AdaptiveSparkPlan" not in plan.nodeName(), "disable AQE first"
-    hits = []
-
-    def scan_paths(n, acc):
-        if n.nodeName().startswith("Scan"):
-            roots = n.relation().location().rootPaths()
-            for i in range(roots.size()):
-                acc.append(roots.apply(i).toString())
-        ch = n.children()
-        for i in range(ch.size()):
-            scan_paths(ch.apply(i), acc)
-        return acc
-
-    def walk(n):
-        if n.nodeName() == "Exchange":
-            outs = [n.output().apply(i).name() for i in range(n.output().size())]
-            if fat_col in outs:
-                hits.append((outs, scan_paths(n, [])))
-        ch = n.children()
-        for i in range(ch.size()):
-            walk(ch.apply(i))
-
-    walk(plan)
-    return hits
-
-
-def test_gen_resolve_never_shuffles_fat_base(spark, tmp_path):
-    """Under the proven base-below-deltas invariant the fat base rows
-    must pass through ZERO shuffle exchanges in BOTH resolve regimes:
-    split=True anti-joins the broadcast contested set; split=False
-    (backlog covers most groups) computes the SMALL uncontested set thin
-    and broadcasts it back as a semi-join. The only permitted fat
-    shuffle is the delta side's own maxg join (O(backlog) by contract).
-    Outputs must equal the general resolve on the same inputs."""
-    from maritime_activity_reports_cdc_spark.operators.mor import resolve_generations
-
-    fat = "x" * 2000
-    base_rows = [(f"g{i:03d}", t, fat, 1, 1) for i in range(40) for t in range(3)]
-    # deltas touch 30 of 40 groups (backlog covers most groups), two
-    # generations, one group refreshed to nothing (marker only)
-    delta_rows = []
-    for i in range(30):
-        delta_rows.append((f"g{i:03d}", 0, None, 2, 0))  # gen-2 marker
-        if i != 7:
-            for t in range(2):
-                delta_rows.append((f"g{i:03d}", t, fat + "v2", 2, 1))
-    for i in range(5):  # second generation on a few groups
-        delta_rows.append((f"g{i:03d}", 0, None, 3, 0))
-        delta_rows.append((f"g{i:03d}", 0, fat + "v3", 3, 1))
-    schema = "grp string, turn int, text string, _gen long, _rank int"
-    spark.createDataFrame(base_rows, schema).write.parquet(str(tmp_path / "base_data"))
-    spark.createDataFrame(delta_rows, schema).write.parquet(str(tmp_path / "delta_data"))
-    base = spark.read.parquet(str(tmp_path / "base_data"))
-    delta = spark.read.parquet(str(tmp_path / "delta_data"))
-
-    # auto-broadcast off: at test scale Catalyst would broadcast sides
-    # whose at-scale estimates exceed the threshold — only the EXPLICIT
-    # broadcast hints (the plan contract under test) may remain. AQE off
-    # so executed plans stay walkable (see _fat_shuffles).
-    prior_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    prior_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        general = resolve_generations(
-            base, delta, ["grp"], split=False, base_below_deltas=False
-        )
-        expected = sorted(
-            (r.grp, r.turn, r.text) for r in general.collect()
-        )
-        for split in (True, False):
-            fast = resolve_generations(
-                base, delta, ["grp"], split=split, base_below_deltas=True
-            )
-            got = sorted((r.grp, r.turn, r.text) for r in fast.collect())
-            assert got == expected, f"fast resolve diverged (split={split})"
-            hits = _fat_shuffles(fast, "text")
-            for outs, paths in hits:
-                assert not any("base_data" in p for p in paths), (
-                    f"fat base rows shuffled (split={split}): {outs}"
-                )
-            if split:
-                assert not hits, "split=True must have ZERO fat shuffles"
-        # sanity: the general split=False resolve DOES shuffle the fat
-        # base — the assertion above is meaningful
-        assert any(
-            "base_data" in p
-            for _o, paths in _fat_shuffles(general, "text")
-            for p in paths
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior_bc)
-        spark.conf.set("spark.sql.adaptive.enabled", prior_aqe)
 
 
 def test_overlap_turn_refresh_no_resurrection_on_stale_update(spark, tmp_path):

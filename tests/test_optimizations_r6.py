@@ -155,7 +155,7 @@ def test_expiry_garbage_collects_bloom_sidecars(spark, tmp_path):
     assert any("data/" in f for f in kept)
 
 
-def test_feed_expired_only_for_missing_manifests(spark, tmp_path):
+def test_feed_expired_only_for_missing_manifests(spark, tmp_path, monkeypatch):
     """ADVICE r5 #2: a FileNotFoundError that is NOT a missing manifest
     must surface as-is, never as FeedExpiredError (which would trigger a
     silent full resync)."""
@@ -163,6 +163,7 @@ def test_feed_expired_only_for_missing_manifests(spark, tmp_path):
 
     import pytest as _pytest
 
+    from maritime_activity_reports_cdc_spark.operators import changefeed
     from maritime_activity_reports_cdc_spark.operators.changefeed import (
         FeedExpiredError,
         read_changes,
@@ -179,11 +180,26 @@ def test_feed_expired_only_for_missing_manifests(spark, tmp_path):
     )
     table.append(df, epoch=("s", 0))
     table.append(df.where("turn_idx >= 25"), epoch=("s", 1))
+    # a missing DATA file of a retained snapshot (manifests intact) ->
+    # the FileNotFoundError itself
+    lost = FileNotFoundError(os.path.join(table.path, "data", "c00000001-x", "part-0.parquet"))
+
+    def _lost_data_file(*_args, **_kwargs):
+        raise lost
+
+    with monkeypatch.context() as m:
+        m.setattr(changefeed, "_commit_changes", _lost_data_file)
+        with _pytest.raises(FileNotFoundError) as info:
+            read_changes(table, 0)
+    assert info.value is lost
     # expired manifest -> FeedExpiredError
     os.unlink(os.path.join(table._manifest_path(), "v00000001.json"))
     table._snap_cache.clear()
     with _pytest.raises(FeedExpiredError):
         read_changes(LakeTable.load(spark, table.path), 0)
+
+
+def test_maintenance_session_isolated_from_relay_narrowing(spark, tmp_path):
     """ADVICE r5 #3: a background compaction must NOT inherit the sparse
     epoch's narrowed shuffle width — the maintenance clone pins the
     session default."""

@@ -434,3 +434,20 @@ def test_quality_and_pipeline_report(spark, tmp_path, tiny_batch):
 
     empty = quality_report(p.silver.read().where("1=0"), "empty")
     assert empty["total_records"] == 0 and "error" in empty
+
+
+def test_create_and_load_reject_unsupported_modes(spark, tmp_path):
+    """Unknown and retired modes fail at the engine boundary instead of
+    silently running as 'cow'."""
+    for kwargs in ({"layer_mode": "zebra"}, {"layer_mode": "mor"},
+                   {"bronze_mode": "turn"}):
+        with pytest.raises(ValueError, match="_mode must be"):
+            MedallionPipeline.create(spark, str(tmp_path / "bad"), n_buckets=2, **kwargs)
+    assert not (tmp_path / "bad").exists()
+
+    root = str(tmp_path / "lake")
+    p = MedallionPipeline.create(spark, root, n_buckets=2, with_gold=False, with_daily=False)
+    # a lake written with the retired generation-MoR derived layers
+    p.silver.set_properties({"layer_mode": "mor"})
+    with pytest.raises(ValueError, match="'mor', which is no longer supported"):
+        MedallionPipeline.load(spark, root)

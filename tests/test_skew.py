@@ -159,46 +159,3 @@ def test_embedding_neardup_salted_hot_bucket_same_pairs(spark):
     assert ps == ss, "salted pair set diverged from plain"
     # with the cap at 100, the 1500-vector bucket is hot by construction,
     # so the equality above exercised the salted path end to end
-
-
-def test_gen_mor_hot_contested_conversation_resolves_without_window(spark, tmp_path):
-    """A contested conversation with 10^5 turns in layer_mode='mor' must
-    resolve without a per-group Window (which would buffer the whole
-    conversation in one task): the resolve uses a map-side-combined
-    groupBy max joined back, broadcast on the contested-split path."""
-    import datetime as dt
-
-    from maritime_activity_reports_cdc_spark.plans import silver as sp
-    from maritime_activity_reports_cdc_spark.plans.pipeline import MedallionPipeline
-    from maritime_activity_reports_cdc_spark.sources.generator import CHANGE_SCHEMA
-
-    T0 = dt.datetime(2025, 5, 1, 8, 0, 0)
-    n_turns = 100_000
-    mega_ins = spark.range(n_turns).select(
-        F.lit("I").alias("op"),
-        (F.col("id") + 1).alias("lsn"),
-        F.lit(0).alias("op_ordinal"),
-        F.lit(T0).alias("commit_ts"),
-        F.lit("mega").alias("conv_id"),
-        F.col("id").cast("int").alias("turn_idx"),
-        F.lit("user").alias("role"),
-        F.concat(F.lit("turn "), F.col("id")).alias("text"),
-        F.lit(None).cast("string").alias("tool"),
-        F.timestamp_seconds(F.lit(1_746_000_000) + F.col("id")).alias("ts"),
-    )
-    p = MedallionPipeline.create(
-        spark, str(tmp_path / "hot"), n_buckets=4, layer_mode="mor",
-        compact_every=0, compact_delta_depth=10**6,
-    )
-    p.apply_epoch(mega_ins, epoch=0)
-    # contest the mega conversation: one turn updated in a later epoch
-    upd = [("U", 200_000, 1, T0, "mega", 5, "user", "turn 5 EDITED", None,
-            dt.datetime(2025, 5, 1, 8, 0, 5))]
-    p.apply_epoch(spark.createDataFrame(upd, CHANGE_SCHEMA), epoch=1)
-
-    resolved = sp.read_silver(p.silver)
-    plan = resolved._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan, "hot contested resolve must not use a window"
-    rows = resolved.where(F.col("conv_id") == "mega")
-    assert rows.count() == n_turns
-    assert rows.where(F.col("turn_idx") == 5).collect()[0].text == "turn 5 EDITED"
