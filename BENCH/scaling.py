@@ -26,13 +26,16 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORKER = r"""
 import json, os, sys, time
 sys.path.insert(0, {repo!r})
-from maritime_activity_reports_cdc_spark.session import get_spark
+from maritime_activity_reports_cdc_spark.session import CODEGEN_CONF, get_spark
 from maritime_activity_reports_cdc_spark.plans.pipeline import MedallionPipeline
 from maritime_activity_reports_cdc_spark.streaming.runner import CheckpointedReplayer
 
 cores = int(sys.argv[1]); work = sys.argv[2]; chunks = int(sys.argv[3])
+# codegen on: its epochs (~6e5 events) are far past the 10^4 rows per
+# operator where the session's interpreted default pays, and the
+# round-over-round efficiency history was measured with it
 spark = get_spark(app_name=f"scaling-{{cores}}", master=f"local[{{cores}}]",
-                  shuffle_partitions=cores * 2)
+                  shuffle_partitions=cores * 2, extra_conf=CODEGEN_CONF)
 spark.sparkContext.setLogLevel("ERROR")
 log = spark.read.parquet(os.path.join(work, "changes"))
 n = log.count()
@@ -53,7 +56,7 @@ import os, sys
 sys.path.insert(0, {repo!r})
 from maritime_activity_reports_cdc_spark.session import get_spark
 from maritime_activity_reports_cdc_spark.sources.generator import generate_transcript_changes
-spark = get_spark(master="local[32]", shuffle_partitions=64)
+spark = get_spark(shuffle_partitions=64)
 spark.sparkContext.setLogLevel("ERROR")
 ch = generate_transcript_changes(spark, n_conversations={convs}, turns_per_conv=25,
     update_ratio=0.3, delete_ratio=0.05, duplicate_ratio=0.02,
@@ -63,7 +66,7 @@ spark.stop()
 """
 
 
-def run(n_low: int = 8, n_high: int = 32, convs: int = 60000, chunks: int = 4) -> dict:
+def run(n_low: int, n_high: int, convs: int = 60000, chunks: int = 4) -> dict:
     work = tempfile.mkdtemp(prefix="scaling_")
     try:
         subprocess.run(
@@ -76,7 +79,10 @@ def run(n_low: int = 8, n_high: int = 32, convs: int = 60000, chunks: int = 4) -
         repeats = int(os.environ.get("SCALE_REPEATS", "2"))
         results: dict = {}
         samples: dict[int, list] = {n_low: [], n_high: []}
-        env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": os.environ.get("SCALE_DRIVER_MEM", "24g")}
+        # the workers' heap: SCALE_DRIVER_MEM, else the session's host-sized default
+        env = dict(os.environ)
+        if "SCALE_DRIVER_MEM" in os.environ:
+            env["SPARK_GRAFT_DRIVER_MEM"] = os.environ["SCALE_DRIVER_MEM"]
         for attempt in range(repeats):
             for cores in (n_low, n_high):
                 shutil.rmtree(os.path.join(work, f"lake_{cores}"), ignore_errors=True)
@@ -203,9 +209,14 @@ def _current_reported_efficiency(path: str) -> float | None:
 
 
 if __name__ == "__main__":
+    sys.path.insert(0, REPO)
+    from maritime_activity_reports_cdc_spark.session import default_host_sizing
+
+    # N -> 4N on this host: 4N is every core it offers
+    host_cores = default_host_sizing()[0]
     res = run(
-        n_low=int(os.environ.get("SCALE_LOW", "8")),
-        n_high=int(os.environ.get("SCALE_HIGH", "32")),
+        n_low=int(os.environ.get("SCALE_LOW", max(host_cores // 4, 1))),
+        n_high=int(os.environ.get("SCALE_HIGH", host_cores)),
         convs=int(os.environ.get("SCALE_CONVS", "60000")),
         chunks=int(os.environ.get("SCALE_CHUNKS", "4")),
     )

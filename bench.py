@@ -23,7 +23,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from maritime_activity_reports_cdc_spark.session import get_spark  # noqa: E402
+from maritime_activity_reports_cdc_spark.session import (  # noqa: E402
+    CODEGEN_CONF,
+    get_spark,
+)
 
 HEADLINE = [
     "cdc_apply_latest",
@@ -50,10 +53,20 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
+    # Codegen on, unlike the session default: the headline legs feed
+    # operators far more than the 10^4 rows per epoch under which
+    # interpreted evaluation pays (sf0.1 tables, 2e5-8e5-event replay
+    # epochs), and it keeps every leg comparable with earlier rounds.
+    # Interpreted on a 4-core host (warm medians): the 11 headline
+    # queries 5.1 s -> 7.2 s (minhash_lsh_docs 2.3 -> 3.9 s), and
+    # cdc_replay_microbatch4 and cdc_replay_bulk1 ~12% slower.
+    # perfbench's sparse_tail measures the small-epoch regime under the
+    # default.
     spark = get_spark(
         app_name="cdc-engine-bench",
         master=f"local[{cpus}]",
         shuffle_partitions=cpus * 2,
+        extra_conf=CODEGEN_CONF,
     )
     spark.sparkContext.setLogLevel("ERROR")
 

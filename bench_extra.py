@@ -25,7 +25,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from maritime_activity_reports_cdc_spark.session import get_spark  # noqa: E402
+from maritime_activity_reports_cdc_spark.session import (  # noqa: E402
+    CODEGEN_CONF,
+    get_spark,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -45,6 +48,8 @@ def _spark():
         app_name="cdc-engine-bench-extra",
         master=f"local[{CPUS}]",
         shuffle_partitions=CPUS * 2,
+        # the same session as bench.py, whose legs it breaks down
+        extra_conf=CODEGEN_CONF,
     )
     spark.sparkContext.setLogLevel("ERROR")
     return spark

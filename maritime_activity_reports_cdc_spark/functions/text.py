@@ -85,6 +85,7 @@ BPE_PIECE_RE = r"[A-Za-z]+|[0-9]{1,3}|[^A-Za-z0-9\s]"
 def bpe_token_count(col: str | F.Column = "text") -> F.Column:
     """Pre-tokenizer piece count — the 'BPE-ish' token estimate used for
     sequence budgeting when exact tokenizer vocabularies are out of
-    band. Pure regexp_count, codegen'd, no shuffle."""
+    band. Pure regexp_count (a JVM expression, no Python rows), no
+    shuffle."""
     c = F.col(col) if isinstance(col, str) else col
     return F.regexp_count(c, F.lit(BPE_PIECE_RE)).cast("long")

@@ -366,9 +366,10 @@ def scrub_pii(
     and adds one ``n_<name>`` BIGINT column per pattern.
 
     Pure column algebra — ``regexp_count`` + ``regexp_replace`` chains,
-    fully codegen'd, zero shuffles: a stateless map over the corpus that
-    composes with any scan. Pattern list is caller-extensible (SSNs,
-    credit cards, secrets) under the same two-engine regex subset."""
+    JVM-side expressions, no Python rows, zero shuffles: a stateless map
+    over the corpus that composes with any scan. Pattern list is
+    caller-extensible (SSNs, credit cards, secrets) under the same
+    two-engine regex subset."""
     cur = F.col(text_col)
     counts = []
     for name, pat, token in patterns:
@@ -396,7 +397,7 @@ def repetition_stats(
     top_bigram_frac, keep)``.
 
     The duplicate-word fraction is shuffle-free array algebra
-    (``array_distinct`` inside codegen); the bigram mode uses
+    (``array_distinct``, a JVM expression); the bigram mode uses
     explode + two partial-agg ``groupBy`` rounds rather than per-row
     O(n^2) array scans — at corpus scale the shuffle is on (doc,
     bigram) keys and combines map-side, so no single document's token

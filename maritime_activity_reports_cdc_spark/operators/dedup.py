@@ -99,7 +99,8 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 def word_shingles(text_col: str = "text", n: int = 3) -> F.Column:
     """n-word shingle array (distinct) for a single row — higher-order
     functions, fine for ad-hoc use. For corpus-scale shingling prefer
-    ``shingle_table`` (codegen'd; HOFs evaluate interpreted)."""
+    ``shingle_table`` (set-oriented JVM operators, O(tokens); no
+    per-row array rebuilds)."""
     words = F.split(normalize_text(text_col), " ")
     return F.array_distinct(
         F.transform(
@@ -116,10 +117,11 @@ def shingle_table(
     """Distinct n-word shingles as (id, _s) rows.
 
     Built with posexplode + lead() windows instead of per-row array HOFs:
-    every operator stays inside whole-stage codegen and cost is O(tokens)
-    — measured ~10x faster than the transform/slice formulation on the
-    same corpus. The window partitions by document, so parallelism is
-    document-granular (documents are small; no skew concern).
+    every operator is a set-oriented JVM expression (no Python rows) and
+    cost is O(tokens) — measured ~10x faster than the transform/slice
+    formulation on the same corpus (with whole-stage codegen on). The
+    window partitions by document, so parallelism is document-granular
+    (documents are small; no skew concern).
 
     ``distinct=False`` skips the (_id, _s) dedup shuffle for consumers
     whose downstream aggregate is multiplicity-invariant (min-hashing:
@@ -152,7 +154,7 @@ def minhash_signatures(
     """MinHash signatures as (id, sig array<bigint>).
 
     Shape matters at scale: shingles are exploded ONCE and each of the
-    ``n_hashes`` permutations is a codegen'd ``min(xxhash64(seed, s))``
+    ``n_hashes`` permutations is a JVM-side ``min(xxhash64(seed, s))``
     aggregate — one hash-agg pass with map-side partial mins. (The
     tempting nested higher-order-function formulation — transform over
     seeds of array_min over shingles — runs interpreted and rebuilds the
@@ -171,7 +173,7 @@ def minhash_signatures(
     )
     if hash_fn == "md5_48":
         # affine universal-hash permutations over Z_(2^31-1): pure 64-bit
-        # integer ops (codegen'd, and bit-identical in DuckDB — no
+        # integer ops (JVM expressions, and bit-identical in DuckDB — no
         # per-permutation md5). The base hash is reduced mod P once, so
         # A*(h mod P) + B < 2^62: exact in signed 64-bit on both engines.
         ex = ex.select("_id", (F.col("_h") % F.lit(MINHASH_P)).alias("_h"))

@@ -80,7 +80,7 @@ def hyperplane_signatures(
     Plane p's d-th component is a Rademacher +-1 derived from
     ``xxhash64(seed, p, d)`` — every executor derives identical planes
     with no broadcast variable. Shape: posexplode the vector once, then
-    ``n_planes`` codegen'd conditional-sum aggregates (one hash-agg pass;
+    ``n_planes`` JVM-side conditional-sum aggregates (one hash-agg pass;
     the nested-HOF formulation runs interpreted and is orders of
     magnitude slower — same lesson as minhash_signatures)."""
     from maritime_activity_reports_cdc_spark.operators.dedup import _hasher

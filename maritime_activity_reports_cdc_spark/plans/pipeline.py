@@ -507,7 +507,9 @@ class MedallionPipeline:
 
         m = EpochMetrics(
             epoch=epoch,
-            n_events=res.n_keys,
+            # raw batch rows (redeliveries and superseded updates
+            # included); n_keys is what survived the per-key dedup
+            n_events=affected.n_rows,
             n_keys=res.n_keys,
             n_upserts=res.n_insert_update,
             n_deletes=res.n_delete,

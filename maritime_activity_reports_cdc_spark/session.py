@@ -7,15 +7,85 @@ extension (our lake layer is format-agnostic, see ``sources/lake.py``),
 plus Arrow (our custom logic is vectorized pandas UDFs only, never
 row-at-a-time Python) and a pinned UTC session timezone so results are
 comparable against external oracles (DuckDB is UTC-naive).
+
+Plans run interpreted by default: whole-stage codegen and the expression
+codegen factories are off. The relay's epochs are small (per-operator
+inputs of <= 10^4 rows per epoch), so Spark's fixed per-plan cost sets
+the epoch floor, and Janino compilation is the largest part of it: with
+codegen on, one ``sparse_tail`` perfbench ingest pass (5 epochs of 64
+events plus their SCD2 batches, 4-core host) ran 1,141 compilations
+costing 7.6 s of a 21.6 s replay, about 228 generated classes per epoch
+against Spark's generated-class cache of 100 entries. Interpreted, the
+same pass compiles 7 classes (0.1 s) and replays in 14.5 s; the dense
+``dense_backfill`` pass goes from 404 compilations (4.6 s, 19.3 s
+replay) to 2 (0.1 s, 16.5 s). Larger inputs pay for their compile:
+on the same host, ``bench.py``'s replay of 831,679 events in 4 epochs
+took 39.5 s interpreted against 35.3 s compiled (1 epoch: 14.9 s
+against 13.2 s), and its eleven sf0.1 headline queries 7.2 s against
+5.1 s. A job with epochs that large restores codegen with the settings
+in :data:`CODEGEN_CONF`: in code through ``extra_conf``, or at launch
+with ``spark-submit --conf`` (or ``spark-defaults.conf``), which these
+defaults do not override.
+
+Cores and driver heap default to what the host offers
+(:func:`host_sizing`); ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM``
+override them.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# Interpreted plan evaluation, the session default (module docstring).
+# Both are internal Spark settings.
+INTERPRETED_CONF = {
+    "spark.sql.codegen.wholeStage": "false",
+    "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+}
+# Spark's own defaults for the same two settings: generated code back on.
+CODEGEN_CONF = {
+    "spark.sql.codegen.wholeStage": "true",
+    "spark.sql.codegen.factoryMode": "FALLBACK",
+}
+# Heap ceiling on large hosts (the default before it was host-sized).
+MAX_DRIVER_MEM_MB = 24 * 1024
+
+
+def host_sizing(nproc: int, meminfo: str) -> tuple[int, str]:
+    """Session defaults for a host: ``(local cores, driver heap)``.
+
+    ``nproc`` is the number of CPUs this process may run on and
+    ``meminfo`` the text of ``/proc/meminfo``. The heap is half of
+    ``MemTotal``, capped at 24g: the rest of RAM is left to the Python
+    driver, Arrow buffers and the page cache, since a host without swap
+    kills a process that oversubscribes it. Without a ``MemTotal`` line
+    the heap is the cap."""
+    total_kb = next(
+        (int(line.split()[1]) for line in meminfo.splitlines()
+         if line.startswith("MemTotal:")),
+        None,
+    )
+    heap_mb = MAX_DRIVER_MEM_MB if total_kb is None else min(
+        MAX_DRIVER_MEM_MB, total_kb // 2048
+    )
+    return max(nproc, 1), f"{heap_mb}m"
+
+
+def default_host_sizing() -> tuple[int, str]:
+    """:func:`host_sizing` for the host this process runs on."""
+    try:
+        nproc = len(os.sched_getaffinity(0))
+    except AttributeError:  # no CPU affinity API on this platform
+        nproc = os.cpu_count() or 4
+    try:
+        with open("/proc/meminfo") as fh:
+            meminfo = fh.read()
+    except OSError:
+        meminfo = ""
+    return host_sizing(nproc, meminfo)
 
 
 def get_spark(
@@ -30,8 +100,14 @@ def get_spark(
     cluster this would be ~2-3x total cores; the benchmark harness pins
     it explicitly per parallelism level so the N-vs-4N scaling run is
     apples-to-apples (BASELINE.md protocol).
+
+    ``extra_conf`` is applied last, so it overrides every default here,
+    interpreted evaluation included (see the module docstring). The
+    codegen settings are also left alone when the JVM was launched with
+    them (``spark-submit --conf``, ``spark-defaults.conf``).
     """
-    master = master or f"local[{DEFAULT_CPUS}]"
+    host_cpus, host_heap = default_host_sizing()
+    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', host_cpus)}]"
     cores = _core_count(master)
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 4)
@@ -86,15 +162,40 @@ def get_spark(
             "spark.sql.maxConcurrentOutputFileWriters",
             os.environ.get("SPARK_GRAFT_CONCURRENT_WRITERS", "64"),
         )
-        # Sized to cores x per-task sort working set (guide §5): 32 local
-        # cores of fat-row sort/window tasks need real execution-memory
-        # headroom once ingest, derived flushes and compaction overlap.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # Fat-row sort/window tasks need execution-memory headroom once
+        # ingest, derived flushes and compaction overlap: half of the RAM
+        # /proc/meminfo reports, capped at 24g (host_sizing).
+        .config(
+            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", host_heap)
+        )
         .config("spark.ui.enabled", "false")
     )
+    # Interpreted evaluation: at <= 10^4 rows per operator per epoch,
+    # compiling generated code costs more than it saves (1,141 Janino
+    # compiles, 7.6 s, per sparse_tail ingest pass with codegen on; 7
+    # compiles, 0.1 s, without). A setting the JVM was launched with
+    # wins, and extra_conf, applied after, overrides both. The builder
+    # seeds the SparkContext conf when it starts the context, so sessions
+    # cloned by newSession() (the background maintenance session) run
+    # interpreted too.
+    launched = _launch_conf()
+    for key, value in INTERPRETED_CONF.items():
+        if launched is None or not launched.contains(key):
+            builder = builder.config(key, value)
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
+
+
+def _launch_conf() -> SparkConf | None:
+    """The ``spark.*`` settings of the JVM this driver runs on, or None
+    while there is none yet. Under ``spark-submit`` the JVM comes first,
+    holding the ``--conf`` and ``spark-defaults.conf`` values as system
+    properties; a plain ``python`` driver starts it from the builder."""
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    SparkContext._ensure_initialized()
+    return SparkConf()
 
 
 def _core_count(master: str) -> int:

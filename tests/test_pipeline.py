@@ -436,6 +436,23 @@ def test_quality_and_pipeline_report(spark, tmp_path, tiny_batch):
     assert empty["total_records"] == 0 and "error" in empty
 
 
+def test_epoch_metrics_count_raw_batch_rows(spark, tmp_path):
+    """``n_events`` is the batch's row count, redeliveries and superseded
+    updates included; ``n_keys`` counts the keys left after dedup."""
+    p = MedallionPipeline.create(spark, str(tmp_path / "m"), n_buckets=4)
+    rows = [
+        _row("I", 1, "cA", 0, "user", "hello"),
+        _row("I", 1, "cA", 0, "user", "hello"),  # redelivered
+        _row("I", 2, "cB", 0, "user", "first"),
+        _row("U", 3, "cB", 0, "user", "second"),
+        _row("U", 4, "cB", 0, "user", "third"),
+    ]
+    m = p.apply_epoch(spark.createDataFrame(rows, CHANGE_SCHEMA), epoch=0)
+    assert (m.n_events, m.n_keys) == (5, 2)
+    p.flush_observability()
+    assert p.metrics.read().select("n_events", "n_keys").collect() == [(5, 2)]
+
+
 def test_create_and_load_reject_unsupported_modes(spark, tmp_path):
     """Unknown and retired modes fail at the engine boundary instead of
     silently running as 'cow'."""
