@@ -169,7 +169,7 @@ Other notes:
   bounded backfills: bronze merge-on-read, derived-layer refresh at the
   reference's silver:gold trigger ratio (derived_every=2, final state
   identical via finalize()), adaptive dense/sparse refresh plans, AQE
-  off inside the relay (fixed-shape plans).
+  off engine-wide (fixed-shape plans; ``session.get_spark``).
 - Throughput above is the microbatch regime; the amortized bulk regime
   (bench.py `cdc_replay_bulk1`) is reported in BENCH_r*.json.
 - Round-over-round efficiency: 0.58 (r1) -> 0.70 (r2) -> 0.71 (r3) ->

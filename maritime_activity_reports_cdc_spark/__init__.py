@@ -10,7 +10,7 @@ surveyed in ``SURVEY.md``), re-expressed Spark-first:
 - additive schema evolution with null backfill
 - bronze -> silver -> gold medallion relay with set-oriented incremental
   recompute (no driver-side per-key loops)
-- skew-aware shuffle strategy (salting + AQE) for hot conversations
+- skew-aware shuffle strategy (salting) for hot conversations
 
 No code is copied from the reference; file:line citations in docstrings
 point at the *behavior* being reproduced or fixed.

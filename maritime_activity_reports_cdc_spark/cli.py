@@ -36,14 +36,17 @@ def _apply_config(args) -> None:
     """Fill in any flag the user left unset from ``--config`` (TOML,
     see ``config.py``); explicit flags win, the file wins over built-in
     defaults. Config-overridable flags default to None in the parser so
-    'unset' is detectable."""
+    'unset' is detectable. ``master`` and ``shuffle_partitions`` stay None
+    unless the file or ``SPARK_GRAFT_MASTER`` / ``SPARK_GRAFT_SHUFFLE``
+    set them, so that ``get_spark`` sizes the session from the host."""
     from maritime_activity_reports_cdc_spark.config import EngineConfig, load_config
 
     cfg = load_config(args.config) if getattr(args, "config", None) else EngineConfig()
+    shuffle_env = os.environ.get("SPARK_GRAFT_SHUFFLE")
     fallbacks = {
-        "master": cfg.session.master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]"),
+        "master": cfg.session.master or os.environ.get("SPARK_GRAFT_MASTER"),
         "shuffle_partitions": cfg.session.shuffle_partitions
-        or int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32")),
+        or (int(shuffle_env) if shuffle_env else None),
         "n_buckets": cfg.lake.n_buckets,
         "bronze_mode": cfg.lake.bronze_mode,
         "layer_mode": cfg.lake.layer_mode,
@@ -52,7 +55,6 @@ def _apply_config(args) -> None:
         "derived_every": cfg.lake.derived_every,
         "keep_last": cfg.lake.expire_keep_last or 10,
         "chunks": cfg.replay.chunks,
-        "adaptive_shuffle": cfg.replay.adaptive_shuffle,
         "target_file_rows": cfg.maintenance.target_file_rows,
     }
     for name, value in fallbacks.items():
@@ -88,7 +90,6 @@ def cmd_replay(args) -> dict:
 
     spark = _spark(args)
     p = MedallionPipeline.load(spark, args.root)
-    p.adaptive_shuffle = bool(args.adaptive_shuffle)
     changes = spark.read.parquet(args.changes)
     report = CheckpointedReplayer(p, args.checkpoint).run(changes, n_chunks=args.chunks)
     return {
@@ -313,8 +314,6 @@ def build_parser() -> argparse.ArgumentParser:
     rp.add_argument("--root", required=True)
     rp.add_argument("--changes", required=True, help="parquet change-log path")
     rp.add_argument("--chunks", type=int, default=None)
-    rp.add_argument("--adaptive-shuffle", type=int, choices=[0, 1], default=None,
-                    help="size relay shuffles to each epoch's batch (default on)")
     rp.add_argument("--checkpoint", required=True)
 
     st = sub.add_parser("stream", help="tail change feeds via Structured Streaming")

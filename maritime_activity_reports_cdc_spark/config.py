@@ -29,7 +29,10 @@ Example (every key optional)::
 
     [replay]
     chunks = 8
-    adaptive_shuffle = true
+
+Unknown keys are errors: a file that still sets a removed knob (for
+example ``[replay] adaptive_shuffle``, gone since the relay stopped
+narrowing its shuffles per epoch) fails with "unknown key".
 """
 
 from __future__ import annotations
@@ -70,9 +73,6 @@ class MaintenanceConfig:
 @dataclasses.dataclass
 class ReplayConfig:
     chunks: int = 8
-    # size relay shuffles to each epoch's batch (see
-    # MedallionPipeline.adaptive_shuffle)
-    adaptive_shuffle: bool = True
 
 
 @dataclasses.dataclass

@@ -24,8 +24,8 @@ Scale design (the part that must survive 100 TB / 10^10 events):
 - *Apply* touches only the hash-bucket partitions present in the batch
   (`read_partitions` -> manifest-level pruning), so I/O scales with batch
   footprint, not table size — the same shape as Iceberg copy-on-write
-  MERGE. The anti-join's build side is the deduped batch, which AQE
-  converts to a broadcast join at runtime when small.
+  MERGE. The deduped batch meets the target slice in one full-outer
+  join, which shuffles both sides: a full-outer join never broadcasts.
 - The only driver-side materialization is the distinct *bucket id* list
   (bounded by ``n_buckets``, never by keys or rows).
 """
@@ -223,6 +223,15 @@ def read_merged(
     return resolved.where((F.col("op").isNull()) | (F.col("op") != "D"))
 
 
+def _bucket_partitioned(table: LakeTable, part_col: str | None) -> bool:
+    """True when ``part_col`` is the table's hash bucket of its keys
+    (``BUCKET_COL`` on a table created with ``n_buckets``). Only then does
+    a dedup inside each partition equal a global dedup by key: every
+    change to a key lands in the key's one bucket. Any other partition
+    column can split one key's base row and delta across partitions."""
+    return part_col == BUCKET_COL and "n_buckets" in table.properties()
+
+
 def _delta_fraction_small(snap, values, max_fraction: float = 0.2) -> bool:
     """True when recorded file row counts prove the delta backlog is at
     most ``max_fraction`` of the base for the scanned partitions. Files
@@ -253,7 +262,9 @@ def compact(
 ) -> bool:
     """Fold delta files back into the base for the given (default: all
     delta-bearing) partitions — one resolve + one partition replace.
-    Returns False if there was nothing to compact.
+    Returns False if there was nothing to compact. On a table partitioned
+    by anything but the hash bucket of its keys, a key's base row can sit
+    in any partition, so a compaction folds every partition.
 
     Tombstone retention: on tables with ``retain_tombstones`` set, winning
     D rows are kept in the compacted base so an out-of-order OLDER update
@@ -282,16 +293,19 @@ def compact(
             buckets = [b for b in requested if str(b) in with_deltas]
         if not buckets:
             return False
+        part_col = table.snapshot(read_version).partition_by
+        fused = _bucket_partitioned(table, part_col)
+        if part_col is not None and not fused:
+            buckets = sorted({*table.partition_values(read_version), *map(str, buckets)})
         both = table.read_partitions(
             buckets, version=read_version, deltas="include", tombstones="include"
         )
-        # Dedup inside the bucket-partitioned window so the partitioned
-        # replace below reuses the one exchange (guide §2.4) — compaction
-        # folds the whole bucket either way, and the bucket is the same
-        # per-task bound the storage layout already imposes.
-        part_col = table.snapshot(read_version).partition_by
-        if part_col is not None:
-            resolved = dedup_latest_bucketed(both, keys, order, bucket_col=part_col)
+        # On a bucket-partitioned table, dedup inside the bucket window
+        # so the partitioned replace below reuses the one exchange —
+        # compaction folds the whole bucket either way, and the bucket is
+        # the same per-task bound the storage layout already imposes.
+        if fused:
+            resolved = dedup_latest_bucketed(both, keys, order)
         else:
             resolved = dedup_latest(both, keys, order, strategy="agg")
         is_tomb = F.col("op").isNotNull() & (F.col("op") == "D")
@@ -308,7 +322,7 @@ def compact(
                 summary={"operation_kind": "compaction", **(summary or {})},
                 partition_values=buckets,
                 expected_version=read_version,
-                pre_partitioned=part_col is not None,
+                pre_partitioned=fused,
             )
             return True
         except CommitConflict:
@@ -367,15 +381,14 @@ def rewrite_files(
     has_deltas = any(
         table.snapshot().delta_files.get(str(v)) for v in values
     )
-    fused_part_col = table.snapshot().partition_by
+    part_col = table.snapshot().partition_by
+    fused = has_deltas and _bucket_partitioned(table, part_col)
     df = table.read_partitions(values, deltas="include", tombstones="include")
     if has_deltas:
         # bucket-partitioned window dedup: the rewrite's own partition
         # exchange doubles as the dedup exchange (guide §2.4)
-        if fused_part_col is not None:
-            df = dedup_latest_bucketed(
-                df, DEFAULT_KEYS, order, bucket_col=fused_part_col
-            )
+        if fused:
+            df = dedup_latest_bucketed(df, DEFAULT_KEYS, order)
         else:
             df = dedup_latest(df, DEFAULT_KEYS, order, strategy="agg")
         if not table.properties().get("retain_tombstones"):
@@ -404,9 +417,9 @@ def rewrite_files(
         ranges = {c: [row[f"lo_{c}"], row[f"hi_{c}"]] for c in zorder}
         zcluster = {"zorder": list(zorder), "bits": bits, "ranges": ranges}
         zcol = zorder_column(dtypes, list(zorder), ranges, bits)
-    part_col = fused_part_col
-    if part_col is not None and not has_deltas:
-        # the fused dedup above already established the partitioning
+    if part_col is not None and not fused:
+        # the fused dedup above is the only path that already
+        # established the partitioning
         df = df.repartition(F.col(part_col))
     elif part_col is None and zorder:
         # global z clustering across files at full parallelism: range
@@ -619,7 +632,8 @@ def apply_changes(
         # the join — NOT inferred from order-column nullness, so target
         # rows whose first order column is legitimately null survive.
         # The target carries the order columns as provenance, so this is
-        # pure column algebra; AQE broadcasts the (small) winner side.
+        # pure column algebra. (A full-outer join never broadcasts: both
+        # sides shuffle by key.)
         # Tombstones must be read: a retained D must beat an older update.
         target_slice = table.read_partitions(affected, tombstones="include").withColumn(
             "_t_present", F.lit(True)

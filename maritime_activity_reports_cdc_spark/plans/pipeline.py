@@ -78,7 +78,7 @@ class EpochMetrics:
 
     @property
     def events_per_sec(self) -> float:
-        return self.n_keys / self.total_secs if self.total_secs > 0 else 0.0
+        return self.n_events / self.total_secs if self.total_secs > 0 else 0.0
 
 
 @dataclass
@@ -184,25 +184,10 @@ class MedallionPipeline:
     async_maintenance: bool = False
     _maint_future: object = field(init=False, default=None)
     _maint_pool: object = field(init=False, default=None)
-    # Background compactions run on a CLONED SparkSession (same context,
-    # separate SQLConf) with the shuffle width pinned to the session
-    # default and AQE on: the relay narrows the MAIN session's width per
-    # sparse epoch (and disables AQE inside apply_epoch), and SQLConf is
-    # session-global — without the clone a whole-table compaction
-    # planned mid-sparse-epoch inherits a tiny shuffle width (and the
-    # two threads race on set/restore). Perf isolation only; commits
-    # stay safe via the optimistic-concurrency protocol either way.
-    _maint_session: object = field(init=False, default=None)
     # compactions requested during the CURRENT epoch (bronze + silver can
     # both come due on the same epoch); submitted as ONE background task
     # at the end of the epoch so they don't drain each other mid-epoch
     _maint_requests: list = field(init=False, default_factory=list)
-    # session shuffle width captured at the first adaptive epoch; the
-    # relay re-asserts a per-epoch width (narrow for sparse epochs, the
-    # default for dense) and restores the session default at finalize /
-    # observability flush — NOT per epoch, so the background derived
-    # flush inherits the narrow width its data was sized for
-    _session_shuffle_default: str | None = field(init=False, default=None)
 
     CONV_META_ATTRS = T.StructType(
         [
@@ -254,10 +239,6 @@ class MedallionPipeline:
         )
         p.lineage = LakeTable.create(spark, p._p("_lineage"), LINEAGE_SCHEMA, properties={})
         p.metrics = LakeTable.create(spark, p._p("_metrics"), METRICS_SCHEMA, properties={})
-        # session shuffle width BEFORE any per-epoch narrowing: the value
-        # restore/finalize return to, and the width the maintenance
-        # session clone pins (ADVICE r5 #3)
-        p._session_shuffle_default = spark.conf.get("spark.sql.shuffle.partitions", "200")
         return p
 
     @classmethod
@@ -294,7 +275,6 @@ class MedallionPipeline:
             p.conv_master = LakeTable.load(spark, p._p("silver_conv_master"))
         p.lineage = LakeTable.load(spark, p._p("_lineage"))
         p.metrics = LakeTable.load(spark, p._p("_metrics"))
-        p._session_shuffle_default = spark.conf.get("spark.sql.shuffle.partitions", "200")
         silver_mark = p.silver.last_epoch("silver_refresh")
         for table, source in ((p.summary, "gold_summary"), (p.daily, "gold_daily")):
             if table is not None and table.last_epoch(source) < silver_mark:
@@ -340,38 +320,11 @@ class MedallionPipeline:
         return gold_plan.read_daily(self.daily)
 
     # ------------------------------------------------------------------
-    # The relay's plans are fixed shapes (explicit bucket partitioning,
-    # explicit broadcasts, shuffle partitions pinned to the core count),
-    # so AQE's runtime re-planning only adds per-stage job scheduling on
-    # the driver — measured ~5% slower, and the serial driver fraction is
-    # exactly what caps N->4N scaling efficiency. Disabled inside the
-    # relay only; analytic sessions keep it on.
-    disable_aqe_in_relay: bool = True
-    # Size the relay's shuffles to the BATCH, not the session default: a
-    # 3k-row sparse epoch through cluster-wide shuffle width is pure
-    # task-scheduling overhead (measured 2x wall at 64 partitions vs 8
-    # on local[32] — the dominant term of the per-epoch floor). Width
-    # only ever SHRINKS from the session default, keyed off the affected
-    # conversation count, with a floor of defaultParallelism/4; dense
-    # epochs keep the full width. Restored after every epoch.
-    adaptive_shuffle: bool = True
-    # affected conversations per shuffle partition the width heuristic
-    # targets (rows-per-conv is workload-dependent; this conservative
-    # grain keeps even fat conversations inside task memory)
-    shuffle_keys_per_partition: int = 320
-
     def apply_epoch(self, batch: DataFrame, epoch: int) -> EpochMetrics:
-        """The relay body: one change batch through all layers."""
-        if self.disable_aqe_in_relay:
-            prior = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-            self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-            try:
-                return self._apply_epoch_inner(batch, epoch)
-            finally:
-                self.spark.conf.set("spark.sql.adaptive.enabled", prior)
-        return self._apply_epoch_inner(batch, epoch)
-
-    def _apply_epoch_inner(self, batch: DataFrame, epoch: int) -> EpochMetrics:
+        """The relay body: one change batch through all layers. Every
+        plan it starts, here or on a background thread, runs under the
+        session's SQLConf as ``session.get_spark`` built it; the relay
+        never writes SQLConf."""
         t0 = time.monotonic()
 
         def _bronze() -> bronze_plan.ApplyResult:
@@ -395,7 +348,6 @@ class MedallionPipeline:
         # bronze apply with the silver refresh.)
         affected = silver_plan.compute_affected(batch, self.n_buckets)
         affected.dense = self._dense_batch(affected)
-        self._set_epoch_shuffle_width(affected)
         # The silver refresh (turn OR per-conversation) can derive its
         # inputs from the PRE-apply bronze snapshot overlaid with the
         # batch winners (associative max-by dedup), so bronze and silver
@@ -527,36 +479,6 @@ class MedallionPipeline:
         )
         return m
 
-    def _set_epoch_shuffle_width(self, affected) -> None:
-        """Re-assert ``spark.sql.shuffle.partitions`` for this epoch:
-        clamped to the batch's affected-key count for sparse epochs, the
-        session default for dense ones (see ``adaptive_shuffle``). Only
-        the relay thread writes the conf; the session default is
-        restored by finalize()/flush_observability(), not per epoch, so
-        the background derived flush runs at the width its epoch's data
-        was sized for."""
-        if not self.adaptive_shuffle:
-            return
-        conf = self.spark.conf
-        if self._session_shuffle_default is None:
-            self._session_shuffle_default = conf.get("spark.sql.shuffle.partitions", "200")
-        default = int(self._session_shuffle_default)
-        if affected.dense or affected.n_keys <= 0:
-            width = default
-        else:
-            floor = max(self.spark.sparkContext.defaultParallelism // 4, 2)
-            width = min(
-                default,
-                max(floor, -(-affected.n_keys // max(self.shuffle_keys_per_partition, 1))),
-            )
-        conf.set("spark.sql.shuffle.partitions", str(width))
-
-    def _restore_shuffle_width(self) -> None:
-        if self._session_shuffle_default is not None:
-            self.spark.conf.set(
-                "spark.sql.shuffle.partitions", self._session_shuffle_default
-            )
-
     def _dense_batch(self, affected) -> bool:
         """Dense fast path decision: when the batch touches at least half
         the conversations of its buckets (estimated from the summary
@@ -619,7 +541,9 @@ class MedallionPipeline:
     def _dispatch_maintenance(self) -> None:
         """Submit this epoch's queued compactions as ONE background task
         (the previous task is drained first — at most one maintenance
-        commit stream races ingest)."""
+        commit stream races ingest). They run on the relay's own
+        ``LakeTable``s, whose snapshot caches are locked, under the same
+        session conf as the relay."""
         if not self._maint_requests:
             return
         requests, self._maint_requests = self._maint_requests, []
@@ -630,28 +554,10 @@ class MedallionPipeline:
             self._maint_pool = ThreadPoolExecutor(
                 max_workers=1, thread_name_prefix="maintenance"
             )
-        if self._maint_session is None:
-            self._maint_session = self.spark.newSession()
-            # pin production width + AQE for compaction jobs (see the
-            # _maint_session field note); the clone never sees the
-            # relay's per-epoch narrowing
-            width = self._session_shuffle_default or self.spark.conf.get(
-                "spark.sql.shuffle.partitions", "200"
-            )
-            self._maint_session.conf.set("spark.sql.shuffle.partitions", width)
-            self._maint_session.conf.set("spark.sql.adaptive.enabled", "true")
-
-        def _rebind(obj):
-            # compaction args reference LakeTables bound to the relay's
-            # session; rebind them to the clone so their read/write jobs
-            # plan under the pinned conf
-            if isinstance(obj, LakeTable):
-                return LakeTable(self._maint_session, obj.path)
-            return obj
 
         def _run_all():
             for fn, args, kwargs in requests:
-                fn(*[_rebind(a) for a in args], **kwargs)
+                fn(*args, **kwargs)
 
         self._maint_future = self._maint_pool.submit(_run_all)
 
@@ -781,15 +687,11 @@ class MedallionPipeline:
             # summary and daily are independent tables — a pipeline with
             # with_gold=False but with_daily=True must still catch the
             # daily rollup up (mirrors _flush_derived's behind path).
-            # Full rebuilds scan full silver: restore the session
-            # shuffle width first.
-            self._restore_shuffle_width()
             e = self.silver.last_epoch("silver_refresh")
             if self.summary is not None:
                 gold_plan.refresh_summary_full(self.silver, self.summary, epoch=e)
             self._rebuild_daily_full(e)
             self._derived_behind = False
-        self._restore_shuffle_width()
 
     def _rebuild_daily_full(self, epoch: int) -> None:
         """Catch-up daily rebuild: one silver scan into the conv×date
@@ -837,9 +739,6 @@ class MedallionPipeline:
         epoch key makes re-flush after resume idempotent."""
         from maritime_activity_reports_cdc_spark.sources.lake import EpochAlreadyApplied
 
-        # central restore hook: runs at replay end and per streaming
-        # batch, so the session never stays narrowed for other users
-        self._restore_shuffle_width()
         if self._pending_lineage:
             try:
                 self.lineage.append(

@@ -626,8 +626,9 @@ def refresh_silver_turn(
     # literals keep the arithmetic types identical).
     # affected_turns is BROADCAST explicitly: it is O(epoch keys) — the
     # same scale class as the bk broadcast above — and without the hint
-    # the static planner (AQE is off in the relay) falls back to a
-    # sort-merge join that re-shuffles the fat rows by key.
+    # the static planner (AQE is off engine-wide, session.get_spark)
+    # falls back to a sort-merge join that re-shuffles the fat rows by
+    # key.
     rows = fat.join(F.broadcast(affected_turns), ["conv_id", "turn_idx"], "inner")
     enriched = rows.selectExpr(
         *image_cols,

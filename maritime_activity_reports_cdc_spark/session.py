@@ -1,9 +1,9 @@
 """SparkSession factory.
 
 Functional rebuild of the reference's session management
-(``utils/spark_utils.py:13-81`` in /root/reference): AQE + partition
-coalescing + skew-join on, Kryo, sane shuffle sizing — minus the Delta
-extension (our lake layer is format-agnostic, see ``sources/lake.py``),
+(``utils/spark_utils.py:13-81`` in the reference): Kryo, sane shuffle
+sizing — minus the Delta extension (our lake layer is format-agnostic,
+see ``sources/lake.py``) and minus AQE (below),
 plus Arrow (our custom logic is vectorized pandas UDFs only, never
 row-at-a-time Python) and a pinned UTC session timezone so results are
 comparable against external oracles (DuckDB is UTC-naive).
@@ -26,6 +26,25 @@ against 13.2 s), and its eleven sf0.1 headline queries 7.2 s against
 in :data:`CODEGEN_CONF`: in code through ``extra_conf``, or at launch
 with ``spark-submit --conf`` (or ``spark-defaults.conf``), which these
 defaults do not override.
+
+Adaptive query execution is off by default, and the engine never turns
+it on or off later: every thread that plans a relay job (the relay, its
+bronze/silver overlap pool, the background gold flush, SCD2 and the
+background compaction) plans under the one SQLConf fixed here. The
+relay's plans have fixed shapes (explicit bucket repartitions, explicit
+broadcasts, a shuffle width of one task wave), so AQE's stage-by-stage
+re-planning is a fixed per-plan cost with little to save. Measured on a
+4-core host, perfbench ``sparse_tail``, two alternating pairs: leaving
+AQE on with the relay's old per-epoch toggle and shuffle narrowing
+removed (relying on AQE coalescing instead) lost both pairs, 27.7 -> 23.9
+events/s, epoch commit p50 1.76 -> 2.26 s, gold lag p50 4.58 -> 5.19 s.
+The 11 headline catalog queries at sf0.01, interpreted, ran 5.19 s with
+AQE on against 4.43 s off. At sf0.1 with codegen on, AQE pays instead
+(10.21 s on against 11.52 s off), so a session that runs large analytic
+queries restores it with ``{"spark.sql.adaptive.enabled": "true"}``:
+through ``extra_conf``, ``spark-submit --conf``, or ``spark.conf.set``
+around the analytic work, outside any running relay (``bench.py`` does
+the last around its headline queries).
 
 Cores and driver heap default to what the host offers
 (:func:`host_sizing`); ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM``
@@ -50,6 +69,10 @@ CODEGEN_CONF = {
     "spark.sql.codegen.wholeStage": "true",
     "spark.sql.codegen.factoryMode": "FALLBACK",
 }
+# The plan settings get_spark decides once, at session build: interpreted
+# evaluation, and AQE off (module docstring). Nothing in the engine
+# writes SQLConf after that.
+PLAN_CONF = {**INTERPRETED_CONF, "spark.sql.adaptive.enabled": "false"}
 # Heap ceiling on large hosts (the default before it was host-sized).
 MAX_DRIVER_MEM_MB = 24 * 1024
 
@@ -102,9 +125,9 @@ def get_spark(
     apples-to-apples (BASELINE.md protocol).
 
     ``extra_conf`` is applied last, so it overrides every default here,
-    interpreted evaluation included (see the module docstring). The
-    codegen settings are also left alone when the JVM was launched with
-    them (``spark-submit --conf``, ``spark-defaults.conf``).
+    interpreted evaluation and AQE included (see the module docstring).
+    The :data:`PLAN_CONF` settings are also left alone when the JVM was
+    launched with them (``spark-submit --conf``, ``spark-defaults.conf``).
     """
     host_cpus, host_heap = default_host_sizing()
     master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', host_cpus)}]"
@@ -115,10 +138,6 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # Catalyst runtime re-planning: partition coalescing + skew splits.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Arrow transfer for the (few) pandas UDFs; never row-at-a-time.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -173,13 +192,14 @@ def get_spark(
     # Interpreted evaluation: at <= 10^4 rows per operator per epoch,
     # compiling generated code costs more than it saves (1,141 Janino
     # compiles, 7.6 s, per sparse_tail ingest pass with codegen on; 7
-    # compiles, 0.1 s, without). A setting the JVM was launched with
-    # wins, and extra_conf, applied after, overrides both. The builder
-    # seeds the SparkContext conf when it starts the context, so sessions
-    # cloned by newSession() (the background maintenance session) run
-    # interpreted too.
+    # compiles, 0.1 s, without). AQE off: with the relay's fixed plan
+    # shapes, leaving it on cost sparse_tail 14% of its events/s and
+    # 0.5 s of epoch commit p50 (module docstring). A setting the JVM
+    # was launched with wins, and extra_conf, applied after, overrides
+    # both. These settings seed the SparkContext conf when the context
+    # starts, so sessions cloned by newSession() inherit them too.
     launched = _launch_conf()
-    for key, value in INTERPRETED_CONF.items():
+    for key, value in PLAN_CONF.items():
         if launched is None or not launched.contains(key):
             builder = builder.config(key, value)
     for key, value in (extra_conf or {}).items():

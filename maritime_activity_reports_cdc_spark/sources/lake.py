@@ -740,8 +740,8 @@ class LakeTable:
             # write: without it every task emits one file per partition
             # value it sees (tasks x partitions tiny files — measured to
             # ANTI-scale: more cores -> more files -> slower everything).
-            # With the exchange + AQE coalescing, files-per-commit ≈
-            # number of touched partitions, independent of parallelism.
+            # With the exchange, files-per-commit ≈ number of touched
+            # partitions, independent of parallelism.
             dfw = df.withColumn(_SHADOW_PARTITION_COL, F.col(part_col).cast("string"))
             if not pre_partitioned:
                 dfw = dfw.repartition(F.col(_SHADOW_PARTITION_COL))

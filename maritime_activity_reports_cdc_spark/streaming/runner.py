@@ -203,7 +203,7 @@ class CheckpointedReplayer:
             self.pipeline.async_derived = prior_async
             self.pipeline.async_maintenance = prior_maint
         run_count = len(metrics)
-        events = sum(m.n_keys for m in metrics)
+        events = sum(m.n_events for m in metrics)
         # bounded replay epilogue: flush any pending derived refreshes
         # (derived_every cadence) so the final gold state is complete
         self.pipeline.finalize()

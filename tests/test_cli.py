@@ -66,11 +66,34 @@ def test_load_config_parses_and_validates(tmp_path):
     bad.write_text("[lake]\nn_bukkets = 4\n")
     with _pytest.raises(ValueError, match="unknown key"):
         load_config(str(bad))
+    # a removed knob is an unknown key too
+    bad.write_text("[replay]\nadaptive_shuffle = true\n")
+    with _pytest.raises(ValueError, match="unknown key"):
+        load_config(str(bad))
     bad2 = tmp_path / "bad2.toml"
     for mode in ("zebra", "mor"):  # misspelled, and the retired generation-MoR
         bad2.write_text(f"[lake]\nlayer_mode = \"{mode}\"\n")
         with _pytest.raises(ValueError, match="layer_mode"):
             load_config(str(bad2))
+
+
+def test_apply_config_leaves_session_sizing_to_the_host(monkeypatch):
+    """Without a config file or env var the CLI passes no master and no
+    shuffle width, so ``get_spark`` sizes the session from the host; the
+    env vars still set them."""
+    from maritime_activity_reports_cdc_spark.cli import _apply_config, build_parser
+
+    for var in ("SPARK_GRAFT_MASTER", "SPARK_GRAFT_SHUFFLE"):
+        monkeypatch.delenv(var, raising=False)
+    args = build_parser().parse_args(["status", "--root", "lake"])
+    _apply_config(args)
+    assert (args.master, args.shuffle_partitions) == (None, None)
+
+    monkeypatch.setenv("SPARK_GRAFT_MASTER", "local[2]")
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "6")
+    args = build_parser().parse_args(["status", "--root", "lake"])
+    _apply_config(args)
+    assert (args.master, args.shuffle_partitions) == ("local[2]", 6)
 
 
 def test_cli_config_file_end_to_end(spark, tmp_path, engine_zip):

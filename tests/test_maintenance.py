@@ -170,6 +170,34 @@ def test_rewrite_resolves_mor_deltas_and_keeps_tombstones(spark, tmp_path):
     changes.unpersist()
 
 
+def test_fold_dedups_by_key_when_partitioned_by_a_non_key_column(spark, tmp_path):
+    """A key-MoR table partitioned by a column that is not a function of
+    its keys: one key's delta lands in another partition than its base
+    row. Compaction and rewrite must still leave one row per key (only a
+    bucket-of-the-keys partitioning lets them dedup inside a partition)."""
+    from maritime_activity_reports_cdc_spark.operators.apply import compact
+
+    schema = T.StructType([
+        T.StructField("conv_id", T.StringType()),
+        T.StructField("turn_idx", T.IntegerType()),
+        T.StructField("region", T.StringType()),
+        T.StructField("op", T.StringType()),
+        T.StructField("lsn", T.LongType()),
+        T.StructField("op_ordinal", T.IntegerType()),
+    ])
+    for name, fold in (("compact", compact), ("rewrite", rewrite_files)):
+        t = LakeTable.create(spark, str(tmp_path / name), schema, partition_by="region")
+        t.append(spark.createDataFrame(
+            [("c1", 0, "eu", "I", 1, 0), ("c2", 0, "eu", "I", 2, 0)], schema
+        ))
+        # c1 moves region: its newer image is a delta in another partition
+        t.append_deltas(spark.createDataFrame([("c1", 0, "us", "U", 3, 0)], schema))
+        fold(t)
+        assert t.delta_partition_values() == [], name
+        rows = sorted((r.conv_id, r.region, r.lsn) for r in t.read().collect())
+        assert rows == [("c1", "us", 3), ("c2", "eu", 2)], name
+
+
 def _extents(snap):
     out = []
     for f in snap.all_files():
@@ -201,13 +229,24 @@ def test_zorder_rewrite_tightens_stats_on_every_dimension(spark, tmp_path):
         spark, str(tmp_path / "lex"), schema=schema,
         properties={"stats_cols": ["x", "y"]},
     )
-    lex.append(grid)
-    rewrite_files(lex, sort_by=("x", "y"), target_file_rows=256)
     zt = LakeTable.create(
         spark, str(tmp_path / "z"), schema=schema,
         properties={"stats_cols": ["x", "y"]},
     )
-    zt.append(grid)
+    # Each table starts as ONE shuffled file: a rewrite without a
+    # partition column or z key keeps its input splits, so the
+    # lexicographic checks below need a single input split. AQE
+    # coalesces the orderBy exchange into one partition; the session
+    # default has AQE off.
+    prior_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        lex.append(grid)
+        zt.append(grid)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prior_aqe)
+    assert len(lex.snapshot().all_files()) == len(zt.snapshot().all_files()) == 1
+    rewrite_files(lex, sort_by=("x", "y"), target_file_rows=256)
     rewrite_files(zt, zorder=("x", "y"), zorder_bits=6, target_file_rows=256)
 
     lex_ext = _extents(lex.snapshot())

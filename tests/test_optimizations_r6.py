@@ -197,40 +197,3 @@ def test_feed_expired_only_for_missing_manifests(spark, tmp_path, monkeypatch):
     table._snap_cache.clear()
     with _pytest.raises(FeedExpiredError):
         read_changes(LakeTable.load(spark, table.path), 0)
-
-
-def test_maintenance_session_isolated_from_relay_narrowing(spark, tmp_path):
-    """ADVICE r5 #3: a background compaction must NOT inherit the sparse
-    epoch's narrowed shuffle width — the maintenance clone pins the
-    session default."""
-    from maritime_activity_reports_cdc_spark.plans.pipeline import MedallionPipeline
-    from maritime_activity_reports_cdc_spark.sources.generator import (
-        generate_transcript_changes,
-    )
-
-    pipe = MedallionPipeline.create(
-        spark, str(tmp_path / "lake"), n_buckets=4, bronze_mode="mor",
-        compact_every=1, layer_mode="auto",
-    )
-    pipe.async_maintenance = True
-    log = generate_transcript_changes(
-        spark, n_conversations=40, turns_per_conv=5,
-        update_ratio=0.0, delete_ratio=0.0,
-    )
-    # narrow the main session the way a sparse epoch would
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        pipe.apply_epoch(log, epoch=0)
-        pipe._dispatch_maintenance()
-        pipe._wait_maintenance()
-        assert pipe._maint_session is not None
-        assert pipe._maint_session.conf.get("spark.sql.shuffle.partitions") != "2"
-        assert pipe._maint_session.conf.get("spark.sql.adaptive.enabled") == "true"
-        # compaction actually landed (deltas folded) and state is intact
-        assert pipe.bronze.delta_partition_values() == []
-        n = pipe.read_silver().count()
-        assert n == log.select("conv_id", "turn_idx").distinct().count()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-    pipe.finalize()
-    pipe.flush_observability()

@@ -204,10 +204,72 @@ def test_sparse_relay_commit_counts(spark, tmp_path):
     assert p.conv_dates.current_version() == 3
     assert p.lineage.current_version() == 2
     assert p.metrics.current_version() == 2
-    # the relay restored the session shuffle width on finalize
-    assert spark.conf.get("spark.sql.shuffle.partitions") == str(
-        int(p._session_shuffle_default)
+
+
+def test_relay_never_writes_sqlconf(spark, tmp_path, monkeypatch):
+    """The relay and every background thread it starts (overlap pool,
+    derived flush, SCD2, compaction) plan under the session conf as
+    ``get_spark`` built it: a load epoch and two sparse auto-mode epochs
+    with SCD2, async flush and async maintenance, finalize and the
+    observability flush make no ``spark.conf.set`` call at all, leave the
+    shuffle width and AQE as they were, and the background compaction
+    still folds the deltas."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from maritime_activity_reports_cdc_spark.sources.generator import (
+        generate_conv_meta_changes,
+        generate_sparse_update_epochs,
     )
+
+    n_convs, per_epoch = 40, 4 * 2
+    load = generate_transcript_changes(
+        spark, n_conversations=n_convs, turns_per_conv=5,
+        update_ratio=0.0, delete_ratio=0.0, seed=23,
+    )
+    updates = generate_sparse_update_epochs(
+        spark, n_conversations=n_convs, turns_per_conv=5, n_epochs=2,
+        convs_per_epoch=4, updates_per_conv=2, delete_frac=0.1,
+        window_frac=0.2, seed=23,
+    )
+    sparse = [updates.where(F.col("op_ordinal") <= per_epoch),
+              updates.where(F.col("op_ordinal") > per_epoch)]
+    meta = generate_conv_meta_changes(spark, n_conversations=n_convs, seed=23)
+    meta_lsns = sorted(r.lsn for r in meta.where("op != 'I'").select("lsn").collect())
+    mid = meta_lsns[len(meta_lsns) // 2]
+    meta_batches = [meta.where("op = 'I'"),
+                    meta.where(f"op != 'I' AND lsn < {mid}"),
+                    meta.where(f"op != 'I' AND lsn >= {mid}")]
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    before = {k: spark.conf.get(k) for k in keys}
+    calls = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        calls.append((key, value))
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    p = MedallionPipeline.create(
+        spark, str(tmp_path / "m"), n_buckets=4, layer_mode="auto",
+        bronze_mode="mor", compact_every=3, compact_delta_depth=10**6,
+    )
+    p.async_derived = p.async_maintenance = True
+    for epoch, batch in enumerate([load, *sparse]):
+        p.apply_epoch(batch, epoch=epoch)
+        p.apply_meta_epoch(meta_batches[epoch], epoch=epoch)
+    p.finalize()
+    p.flush_observability()
+
+    assert calls == []
+    assert {k: spark.conf.get(k) for k in keys} == before
+    # epoch 2 queued a compaction of bronze and silver; it ran on the
+    # maintenance thread and left no deltas behind
+    assert p.bronze.delta_partition_values() == []
+    assert p.silver.delta_partition_values() == []
+    assert p.bronze.current_version() == 4  # 3 epochs + 1 compaction
+    n_keys = p.bronze.read().count()
+    assert p.read_silver().count() == n_keys
 
 
 def test_async_flush_failure_surfaces_on_next_epoch(
@@ -447,10 +509,16 @@ def test_epoch_metrics_count_raw_batch_rows(spark, tmp_path):
         _row("U", 3, "cB", 0, "user", "second"),
         _row("U", 4, "cB", 0, "user", "third"),
     ]
-    m = p.apply_epoch(spark.createDataFrame(rows, CHANGE_SCHEMA), epoch=0)
+    batch = spark.createDataFrame(rows, CHANGE_SCHEMA)
+    m = p.apply_epoch(batch, epoch=0)
     assert (m.n_events, m.n_keys) == (5, 2)
+    assert m.events_per_sec == m.n_events / m.total_secs
     p.flush_observability()
     assert p.metrics.read().select("n_events", "n_keys").collect() == [(5, 2)]
+    # a replayer reports the same raw rows as its events
+    p2 = MedallionPipeline.create(spark, str(tmp_path / "r"), n_buckets=4)
+    report = CheckpointedReplayer(p2, str(tmp_path / "ck")).run(batch, n_chunks=1)
+    assert report.events == 5
 
 
 def test_create_and_load_reject_unsupported_modes(spark, tmp_path):

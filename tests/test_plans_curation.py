@@ -69,8 +69,14 @@ def test_kmeans_plan_broadcasts_centroids_never_cartesian(spark):
     # rows), so the vector side is never shuffled for assignment
     assert "BroadcastNestedLoopJoin" in plan
     # sanity: the helper must refuse AQE-wrapped plans (guards against
-    # silently-vacuous string checks on a hidden subtree)
-    aqe_frame = SIM.kmeans_embeddings(d, k=2, n_iter=1)
-    aqe_frame.collect()
+    # silently-vacuous string checks on a hidden subtree). The session
+    # default has AQE off, so turn it on for this one frame.
+    prior_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        aqe_frame = SIM.kmeans_embeddings(d, k=2, n_iter=1)
+        aqe_frame.collect()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prior_aqe)
     with pytest.raises(AssertionError, match="disable AQE"):
         _plan(aqe_frame)

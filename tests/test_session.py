@@ -1,4 +1,5 @@
-"""Session defaults: interpreted plan evaluation and host-derived sizing."""
+"""Session defaults: interpreted plan evaluation, AQE off and
+host-derived sizing."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ from maritime_activity_reports_cdc_spark.session import (
     CODEGEN_CONF,
     INTERPRETED_CONF,
     MAX_DRIVER_MEM_MB,
+    PLAN_CONF,
     host_sizing,
 )
 from maritime_activity_reports_cdc_spark.sources.generator import (
@@ -37,9 +39,9 @@ def _compilations(spark) -> int:
 
 def test_sparse_relay_epoch_compiles_almost_nothing(spark, tmp_path):
     """A sparse epoch through every layer (bronze apply, turn-path silver,
-    background gold flush, background compaction on the cloned
-    maintenance session, SCD2) runs interpreted: it compiles at most a
-    handful of classes instead of one per plan expression."""
+    background gold flush, background compaction, SCD2) runs
+    interpreted: it compiles at most a handful of classes instead of one
+    per plan expression."""
     n_convs = 40
     load = generate_transcript_changes(
         spark, n_conversations=n_convs, turns_per_conv=5,
@@ -73,10 +75,11 @@ def test_sparse_relay_epoch_compiles_almost_nothing(spark, tmp_path):
 
     # the epoch applied keys, and its background compaction committed
     assert m.n_keys > 0 and p.bronze.current_version() >= 3
-    assert p._maint_session is not None
     assert compiled <= MAX_COMPILES_PER_SPARSE_EPOCH, compiled
     assert spark.newSession().conf.get("spark.sql.codegen.factoryMode") == "NO_CODEGEN"
-    assert p._maint_session.conf.get("spark.sql.codegen.wholeStage") == "false"
+    # the default session, and sessions cloned from it, plan without AQE
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+    assert spark.newSession().conf.get("spark.sql.adaptive.enabled") == "false"
 
 
 def test_host_sizing_from_nproc_and_meminfo():
@@ -89,23 +92,24 @@ def test_host_sizing_from_nproc_and_meminfo():
 
 
 def test_spark_submit_conf_restores_codegen(tmp_path):
-    """A job launched with ``spark-submit --conf`` codegen settings (how a
-    large-epoch deployment of the CLI turns codegen back on) keeps them:
-    get_spark's interpreted defaults do not override the launch, in the
-    session or in the sessions cloned from it."""
+    """A job launched with ``spark-submit --conf`` codegen and AQE
+    settings (how a large-epoch deployment of the CLI turns them back on)
+    keeps them: get_spark's interpreted, AQE-off defaults do not override
+    the launch, in the session or in the sessions cloned from it."""
     probe = tmp_path / "probe.py"
     probe.write_text(textwrap.dedent("""
         import json
         from maritime_activity_reports_cdc_spark.session import (
-            INTERPRETED_CONF, get_spark,
+            PLAN_CONF, get_spark,
         )
         spark = get_spark(master="local[1]", shuffle_partitions=1)
         clone = spark.newSession()
         print(json.dumps({k: [spark.conf.get(k), clone.conf.get(k)]
-                          for k in INTERPRETED_CONF}))
+                          for k in PLAN_CONF}))
         spark.stop()
     """))
-    confs = [arg for k, v in CODEGEN_CONF.items() for arg in ("--conf", f"{k}={v}")]
+    launch = {**CODEGEN_CONF, "spark.sql.adaptive.enabled": "true"}
+    confs = [arg for k, v in launch.items() for arg in ("--conf", f"{k}={v}")]
     out = subprocess.run(
         ["spark-submit", "--master", "local[1]", "--driver-memory", "1g",
          *confs, str(probe)],
@@ -114,5 +118,6 @@ def test_spark_submit_conf_restores_codegen(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-2000:]
     line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
-    assert json.loads(line) == {k: [v, v] for k, v in CODEGEN_CONF.items()}
+    assert json.loads(line) == {k: [v, v] for k, v in launch.items()}
     assert set(CODEGEN_CONF) == set(INTERPRETED_CONF)
+    assert set(launch) == set(PLAN_CONF)
