@@ -2,10 +2,12 @@
 next-round #5): where do the ~seconds of a 3.2k-event epoch go?
 
 Decomposition per epoch:
-  - affected_secs   driver: combined affected-set aggregate + width clamp
-  - layers_secs     overlapped bronze apply ∥ silver turn refresh — each
-                    is ONE Spark write job whose input pipeline (thin
-                    scan, joins, enrichment) executes inside the job
+  - bronze_secs     bronze apply, timed on its own thread
+  - silver_secs     silver turn refresh, timed on its own thread; the two
+                    overlap, and each is ONE Spark write job whose input
+                    pipeline (thin scan, joins, enrichment) executes
+                    inside the job. wall_secs - max(bronze, silver) is
+                    mostly the affected-set aggregate.
   - flush_secs      gold flush submit (async; ~0 when hidden)
   - bronze/silver commit profile: write job vs footer stats vs manifest
     JSON IO (from LakeTable.last_commit_profile)
@@ -71,7 +73,7 @@ def main() -> None:
 
         pipe = MedallionPipeline.create(
             spark, os.path.join(work, "lake"), n_buckets=cpus,
-            bronze_mode="mor", compact_every=4, derived_every=2,
+            compact_every=4, derived_every=2,
             layer_mode="auto",
         )
         from maritime_activity_reports_cdc_spark.streaming.runner import (
@@ -103,8 +105,8 @@ def main() -> None:
                 "epoch": 1 + i,
                 "events": m.n_events,
                 "wall_secs": round(wall, 3),
-                "affected_secs": round(m.bronze_secs, 3),
-                "layers_secs": round(m.silver_secs, 3),
+                "bronze_secs": round(m.bronze_secs, 3),
+                "silver_secs": round(m.silver_secs, 3),
                 "flush_submit_secs": round(m.gold_secs, 3),
                 "bronze_commit": getattr(pipe.bronze, "last_commit_profile", None),
                 "silver_commit": getattr(pipe.silver, "last_commit_profile", None),

@@ -70,7 +70,7 @@ try:
 
     root = os.path.join(work, "lake")
     pipe = MedallionPipeline.create(
-        spark, root, n_buckets=CPUS, bronze_mode="mor",
+        spark, root, n_buckets=CPUS,
         compact_every=0, derived_every=2, layer_mode="auto",
     )
     pipe.compact_delta_depth = 10**6

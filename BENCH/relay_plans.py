@@ -45,9 +45,7 @@ def dump(df, name):
 
 work = tempfile.mkdtemp(prefix="relayplans_")
 try:
-    t = bronze.create_transcripts_table(
-        spark, os.path.join(work, "bronze"), n_buckets=4, apply_mode="mor"
-    )
+    t = bronze.create_transcripts_table(spark, os.path.join(work, "bronze"), n_buckets=4)
     st = silver.create_silver_table(
         spark, os.path.join(work, "silver"), n_buckets=4, layer_mode="auto"
     )

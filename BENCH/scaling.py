@@ -40,7 +40,7 @@ spark.sparkContext.setLogLevel("ERROR")
 log = spark.read.parquet(os.path.join(work, "changes"))
 n = log.count()
 pipe = MedallionPipeline.create(spark, os.path.join(work, f"lake_{{cores}}"),
-                                n_buckets=32, bronze_mode="mor", compact_every=4,
+                                n_buckets=32, compact_every=4,
                                 derived_every=2)
 rep = CheckpointedReplayer(pipe, os.path.join(work, f"ck_{{cores}}"))
 t0 = time.monotonic()

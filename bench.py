@@ -150,7 +150,7 @@ def main() -> None:
                 lake = os.path.join(work, f"lake_{label}_a{attempt}")
                 pipe = MedallionPipeline.create(
                     spark, lake, n_buckets=cpus,
-                    bronze_mode="mor", compact_every=4, derived_every=2,
+                    compact_every=4, derived_every=2,
                 )
                 replayer = CheckpointedReplayer(
                     pipe, os.path.join(work, f"ckpt_{label}_a{attempt}")
@@ -213,7 +213,7 @@ def main() -> None:
             t0 = time.monotonic()
             auto_root = os.path.join(work, f"{prefix}_auto_a")
             pipe = MedallionPipeline.create(
-                spark, auto_root, n_buckets=cpus, bronze_mode="mor",
+                spark, auto_root, n_buckets=cpus,
                 compact_every=compact_every, derived_every=2, layer_mode="auto",
             )
             if compact_every == 0:

@@ -138,7 +138,7 @@ def cmd_replay() -> None:
                 lake = os.path.join(work, f"lake_{label}_a{attempt}")
                 pipe = MedallionPipeline.create(
                     spark, lake, n_buckets=CPUS,
-                    bronze_mode="mor", compact_every=4, derived_every=2,
+                    compact_every=4, derived_every=2,
                 )
                 replayer = CheckpointedReplayer(
                     pipe, os.path.join(work, f"ckpt_{label}_a{attempt}")
@@ -200,7 +200,7 @@ def cmd_sparse(which: str) -> None:
         t0 = time.monotonic()
         auto_root = os.path.join(work, "auto_a")
         pipe = MedallionPipeline.create(
-            spark, auto_root, n_buckets=CPUS, bronze_mode="mor",
+            spark, auto_root, n_buckets=CPUS,
             compact_every=compact_every, derived_every=2, layer_mode="auto",
         )
         if compact_every == 0:

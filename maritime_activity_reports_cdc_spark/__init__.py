@@ -5,12 +5,14 @@ A from-scratch rebuild of the query & data-processing capabilities of the
 reference medallion CDC pipeline (``Riaz123/maritime-activity-reports-cdc``,
 surveyed in ``SURVEY.md``), re-expressed Spark-first:
 
-- binlog tail -> dedup -> key-partitioned merge apply (copy-on-write)
+- binlog tail -> dedup -> key-partitioned merge-on-read apply, folded
+  into the base by compaction
 - exactly-once epoch commits stamped into snapshot summaries
 - additive schema evolution with null backfill
 - bronze -> silver -> gold medallion relay with set-oriented incremental
   recompute (no driver-side per-key loops)
-- skew-aware shuffle strategy (salting) for hot conversations
+- skew-aware shuffles: map-side-combining dedup for hot conversations,
+  salted hot buckets in the near-duplicate operators
 
 No code is copied from the reference; file:line citations in docstrings
 point at the *behavior* being reproduced or fixed.

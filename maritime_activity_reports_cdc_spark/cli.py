@@ -17,7 +17,7 @@ import json
 import os
 import sys
 
-from maritime_activity_reports_cdc_spark.config import BRONZE_MODES, LAYER_MODES
+from maritime_activity_reports_cdc_spark.config import LAYER_MODES
 
 
 def _spark(args):
@@ -48,7 +48,6 @@ def _apply_config(args) -> None:
         "shuffle_partitions": cfg.session.shuffle_partitions
         or (int(shuffle_env) if shuffle_env else None),
         "n_buckets": cfg.lake.n_buckets,
-        "bronze_mode": cfg.lake.bronze_mode,
         "layer_mode": cfg.lake.layer_mode,
         "compact_every": cfg.lake.compact_every,
         "compact_delta_depth": cfg.lake.compact_delta_depth,
@@ -68,7 +67,7 @@ def cmd_setup(args) -> dict:
     spark = _spark(args)
     p = MedallionPipeline.create(
         spark, args.root, n_buckets=args.n_buckets,
-        bronze_mode=args.bronze_mode, layer_mode=args.layer_mode,
+        layer_mode=args.layer_mode,
         compact_every=args.compact_every,
         compact_delta_depth=args.compact_delta_depth,
         derived_every=args.derived_every,
@@ -79,7 +78,6 @@ def cmd_setup(args) -> dict:
                    "gold_conversation_summary", "gold_daily_rollup",
                    "silver_conv_master", "_lineage", "_metrics"],
         "n_buckets": p.n_buckets,
-        "bronze_mode": p.bronze_mode,
         "layer_mode": p.layer_mode,
     }
 
@@ -130,7 +128,7 @@ def cmd_status(args) -> dict:
     spark = _spark(args)
     p = MedallionPipeline.load(spark, args.root)
     out: dict = {"root": p.root, "n_buckets": p.n_buckets,
-                 "bronze_mode": p.bronze_mode, "layer_mode": p.layer_mode, "tables": {}}
+                 "layer_mode": p.layer_mode, "tables": {}}
     for name in ("bronze", "silver", "summary", "daily", "conv_dates",
                  "conv_master", "lineage", "metrics"):
         table = getattr(p, name, None)
@@ -304,7 +302,6 @@ def build_parser() -> argparse.ArgumentParser:
     sp = sub.add_parser("setup", help="create the medallion lake")
     sp.add_argument("--root", required=True)
     sp.add_argument("--n-buckets", type=int, default=None)
-    sp.add_argument("--bronze-mode", choices=BRONZE_MODES, default=None)
     sp.add_argument("--layer-mode", choices=LAYER_MODES, default=None)
     sp.add_argument("--compact-every", type=int, default=None)
     sp.add_argument("--compact-delta-depth", type=int, default=None)

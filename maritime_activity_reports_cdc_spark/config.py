@@ -16,7 +16,6 @@ Example (every key optional)::
 
     [lake]
     n_buckets = 256
-    bronze_mode = "mor"     # cow | mor
     layer_mode = "auto"     # cow | turn | auto (silver refresh plan)
     compact_every = 8
     compact_delta_depth = 8
@@ -30,9 +29,10 @@ Example (every key optional)::
     [replay]
     chunks = 8
 
-Unknown keys are errors: a file that still sets a removed knob (for
-example ``[replay] adaptive_shuffle``, gone since the relay stopped
-narrowing its shuffles per epoch) fails with "unknown key".
+Unknown keys are errors: a file that still sets a removed knob fails
+with "unknown key". Removed so far: ``[replay] adaptive_shuffle`` (gone
+since the relay stopped narrowing its shuffles per epoch) and ``[lake]
+bronze_mode`` (gone since bronze became merge-on-read only).
 """
 
 from __future__ import annotations
@@ -40,9 +40,8 @@ from __future__ import annotations
 import dataclasses
 import tomllib
 
-# accepted values of the bronze apply mode and the derived-layer mode;
-# MedallionPipeline.create/load and the CLI validate against these
-BRONZE_MODES = ("cow", "mor")
+# accepted values of the derived-layer mode; MedallionPipeline.create/load
+# and the CLI validate against these
 LAYER_MODES = ("cow", "turn", "auto")
 
 
@@ -56,7 +55,6 @@ class SessionConfig:
 @dataclasses.dataclass
 class LakeConfig:
     n_buckets: int = 32
-    bronze_mode: str = "mor"
     layer_mode: str = "cow"
     compact_every: int = 8
     compact_delta_depth: int = 8
@@ -113,10 +111,6 @@ def load_config(path: str) -> EngineConfig:
         maintenance=_section(MaintenanceConfig, data, "maintenance"),
         replay=_section(ReplayConfig, data, "replay"),
     )
-    if cfg.lake.bronze_mode not in BRONZE_MODES:
-        raise ValueError(
-            f"lake.bronze_mode must be {'|'.join(BRONZE_MODES)}, got {cfg.lake.bronze_mode!r}"
-        )
     if cfg.lake.layer_mode not in LAYER_MODES:
         raise ValueError(
             f"lake.layer_mode must be {'|'.join(LAYER_MODES)}, got {cfg.lake.layer_mode!r}"

@@ -1,4 +1,5 @@
-"""The merge-apply primitive: change batch -> copy-on-write table upsert.
+"""The merge-apply primitive: change batch -> merge-on-read delta append,
+folded into the base by compaction.
 
 Unifies the reference's eight Delta ``MERGE INTO`` statements (SURVEY.md
 §2.4, M1-M8; e.g. ``silver/cdf_processor.py:255-275`` in /root/reference)
@@ -7,27 +8,32 @@ into one set-oriented DataFrame pipeline, fixing the catalogued defects:
 - **G1 (no intra-batch dedup)**: the reference's MERGE fails if one batch
   carries two changes for a key; here every batch is first reduced to one
   winner per key in total ``(lsn, op_ordinal)`` order.
-- **G7 (deletes dropped)**: ``D`` winners remove the key from the target.
+- **G7 (deletes dropped)**: ``D`` winners become tombstones that remove
+  the key from every resolved read.
 - **G5 (non-idempotent replay)**: the commit is stamped with an epoch id;
   replaying an already-applied batch is a detected no-op.
 - **G2 (driver-side per-key loops)**: apply cost is one dedup + one
-  anti-join + one partition-scoped write, whatever the key count.
+  partitioned delta write, whatever the key count.
 
 Scale design (the part that must survive 100 TB / 10^10 events):
 
-- *Dedup* uses ``groupBy(keys).agg(max_by(row, order))`` — a hash
-  aggregate with map-side partial combine, so a hot conversation's
-  duplicate changes collapse inside each task BEFORE the shuffle, making
-  the reduce side skew-proof by construction. (A salted two-phase window
-  variant is kept for comparison; the agg plan beats it because a window
-  needs a full sort-shuffle of every change row.)
-- *Apply* touches only the hash-bucket partitions present in the batch
-  (`read_partitions` -> manifest-level pruning), so I/O scales with batch
-  footprint, not table size — the same shape as Iceberg copy-on-write
-  MERGE. The deduped batch meets the target slice in one full-outer
-  join, which shuffles both sides: a full-outer join never broadcasts.
-- The only driver-side materialization is the distinct *bucket id* list
-  (bounded by ``n_buckets``, never by keys or rows).
+- *Apply* (``apply_changes``) never reads the target: the batch winners,
+  deduped inside a window over the table's hash bucket, are appended as
+  delta files. That one bucket exchange also partitions the write, so
+  apply I/O is O(batch) whatever the table size.
+- *Read* (``read_merged``) resolves base ∪ deltas per key at read time;
+  *compaction* (``compact``) folds a bucket's deltas into its base with
+  the same bucket-window dedup, one partition replace per fold — the
+  copy-on-write rewrite the reference runs on every MERGE, deferred and
+  batched.
+- *Dedup* elsewhere (``dedup_latest``: read-time resolve, compaction of
+  tables not partitioned by the bucket) uses
+  ``groupBy(keys).agg(max_by(row, order))`` — a hash aggregate with
+  map-side partial combine, so a hot conversation's duplicate changes
+  collapse inside each task BEFORE the shuffle.
+- The only driver-side results are parquet footer stats of the files a
+  commit just wrote (bounded by the touched buckets, never by keys or
+  rows).
 """
 
 from __future__ import annotations
@@ -35,7 +41,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -49,9 +55,7 @@ DEFAULT_ORDER = ("lsn", "op_ordinal")
 
 def bucket_expr(key_col: str | F.Column, n_buckets: int) -> F.Column:
     """Deterministic hash bucket — the table partition transform
-    (Iceberg ``bucket(n, conv_id)`` analog). Doubles as the salt function
-    family (reference used ``F.hash`` for memo keys,
-    ``silver/streaming_processor.py:156-157``)."""
+    (Iceberg ``bucket(n, conv_id)`` analog)."""
     col = F.col(key_col) if isinstance(key_col, str) else key_col
     return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
 
@@ -60,52 +64,26 @@ def dedup_latest(
     changes: DataFrame,
     keys: tuple[str, ...] = DEFAULT_KEYS,
     order: tuple[str, ...] = DEFAULT_ORDER,
-    strategy: str = "agg",
-    salt_buckets: int = 32,
 ) -> DataFrame:
-    """One winner per key in total change order (max-LSN dedup).
-
-    ``strategy='agg'`` (default): partial-aggregating ``max_by`` — the
-    scale-safe plan. ``strategy='window'``: the two-phase salted
-    ``row_number`` formulation from the design sketch (kept for the bench
-    comparison and as documentation of the skew fix for window plans).
+    """One winner per key in total change order (max-LSN dedup): a
+    partial-aggregating ``max_by``, whose map-side combine collapses a hot
+    key's duplicates inside each task before the shuffle.
 
     At-least-once duplicates (same ``(lsn, op_ordinal)`` redelivered) are
     absorbed here: identical order keys tie-break to a single identical
-    row either way.
+    row.
 
     This runs on every epoch's hot path: columns are passed as STRINGS
     (one py4j round-trip per call, not per column) — per-epoch driver
     plan-construction time is a serial cost that caps scaling efficiency
     (measured ~1.5 s/epoch before the round-5 thinning).
     """
-    if strategy == "agg":
-        cols = ", ".join(f"`{c}`" for c in changes.columns)
-        ords = ", ".join(f"`{o}`" for o in order)
-        won = changes.groupBy(*keys).agg(
-            F.expr(f"max_by(struct({cols}), struct({ords}))").alias("_winner")
-        )
-        return won.select("_winner.*")
-    order_cols = [F.col(o) for o in order]
-    if strategy == "window":
-        # Phase 1: reduce within (key, salt) slices — bounds any single
-        # window partition even for a mega-hot conversation.
-        salt = F.pmod(F.xxhash64(*order_cols), F.lit(salt_buckets)).alias("_salt")
-        salted = changes.withColumn("_salt", salt)
-        w1 = Window.partitionBy(*keys, "_salt").orderBy(*[c.desc() for c in order_cols])
-        phase1 = (
-            salted.withColumn("_rn", F.row_number().over(w1))
-            .where(F.col("_rn") == 1)
-            .drop("_rn", "_salt")
-        )
-        # Phase 2: winner-of-winners (at most `salt_buckets` rows per key).
-        w2 = Window.partitionBy(*keys).orderBy(*[c.desc() for c in order_cols])
-        return (
-            phase1.withColumn("_rn", F.row_number().over(w2))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-    raise ValueError(f"unknown dedup strategy {strategy!r}")
+    cols = ", ".join(f"`{c}`" for c in changes.columns)
+    ords = ", ".join(f"`{o}`" for o in order)
+    won = changes.groupBy(*keys).agg(
+        F.expr(f"max_by(struct({cols}), struct({ords}))").alias("_winner")
+    )
+    return won.select("_winner.*")
 
 
 def dedup_latest_bucketed(
@@ -172,8 +150,9 @@ def read_merged(
     columns: list[str] | None = None,
 ) -> DataFrame:
     """Merge-on-read resolved view: base ∪ delta rows, one winner per key
-    in ``order``, delete tombstones dropped. On a pure-CoW table (no
-    deltas) this short-circuits to the plain base scan — zero overhead.
+    in ``order``, delete tombstones dropped. On a table with no deltas
+    (just compacted, or a copy-on-write derived table) this
+    short-circuits to the plain base scan — zero overhead.
 
     Resolve strategy is chosen from snapshot row-count stats (free,
     driver-side): when the delta backlog is SMALL relative to the base,
@@ -212,14 +191,14 @@ def read_merged(
         contested = base.join(
             F.broadcast(contested_keys), list(keys), "left_semi"
         ).unionByName(delta)
-        resolved = clean.unionByName(dedup_latest(contested, keys, order, strategy="agg"))
+        resolved = clean.unionByName(dedup_latest(contested, keys, order))
     else:
         # bounds prune BASE files only (same contract as the split
         # branch): delta files carry narrow per-epoch key spans, and
         # pruning them would drop keys whose only rows live in deltas.
         base = _prj(table.read_partitions(values, bounds=bounds, tombstones="include"))
         delta = _prj(table.read_partitions(values, deltas="only", tombstones="include"))
-        resolved = dedup_latest(base.unionByName(delta), keys, order, strategy="agg")
+        resolved = dedup_latest(base.unionByName(delta), keys, order)
     return resolved.where((F.col("op").isNull()) | (F.col("op") != "D"))
 
 
@@ -307,7 +286,7 @@ def compact(
         if fused:
             resolved = dedup_latest_bucketed(both, keys, order)
         else:
-            resolved = dedup_latest(both, keys, order, strategy="agg")
+            resolved = dedup_latest(both, keys, order)
         is_tomb = F.col("op").isNotNull() & (F.col("op") == "D")
         if table.properties().get("retain_tombstones"):
             if drop_tombstones_below_lsn is not None:
@@ -390,7 +369,7 @@ def rewrite_files(
         if fused:
             df = dedup_latest_bucketed(df, DEFAULT_KEYS, order)
         else:
-            df = dedup_latest(df, DEFAULT_KEYS, order, strategy="agg")
+            df = dedup_latest(df, DEFAULT_KEYS, order)
         if not table.properties().get("retain_tombstones"):
             df = df.where(F.col("op").isNull() | (F.col("op") != "D"))
     if drop_tombstones_below_lsn is not None and "op" in df.columns:
@@ -469,49 +448,38 @@ def apply_changes(
     keys: tuple[str, ...] = DEFAULT_KEYS,
     order: tuple[str, ...] = DEFAULT_ORDER,
     bucket_key: str = "conv_id",
-    dedup_strategy: str = "agg",
     evolve_schema: bool = True,
-    apply_mode: str = "cow",
 ) -> ApplyResult:
-    """Apply one change batch (an epoch) to a bucket-partitioned table.
+    """Apply one change batch (an epoch) to a bucket-partitioned table as
+    merge-on-read delta files; ``compact`` later folds them into the base.
 
     The target table must be partitioned by ``BUCKET_COL`` and carry
-    ``n_buckets`` in its properties (see ``plans/bronze.create_target``).
+    ``n_buckets`` in its properties (see ``plans/bronze.create_transcripts_table``).
 
-    Out-of-order safety: on tables with the ``retain_tombstones`` property
-    (bronze sets it), a winning D persists as a tombstone row (op='D',
-    null row image, order columns kept) instead of vanishing — so a later
-    batch carrying an OLDER update for the key loses the version
-    resolution and the key stays deleted, in both CoW and MoR modes.
-    Tombstones are invisible to lake-level reads and are physically
-    dropped by compaction/maintenance once the caller-supplied LSN horizon
-    passes (``compact(drop_tombstones_below_lsn=...)``). Without the
-    property, batches must arrive in non-decreasing LSN order (legacy
-    contract: a D winner removes the key outright).
+    Out-of-order safety: a winning D is written as a tombstone row
+    (op='D', null row image, order columns kept), so a later batch
+    carrying an OLDER update for the key loses the read-time resolution.
+    On tables with the ``retain_tombstones`` property (bronze sets it)
+    compaction keeps winning tombstones in the base until the
+    caller-supplied LSN horizon passes
+    (``compact(drop_tombstones_below_lsn=...)``); lake-level reads never
+    show them. Without the property compaction drops them, so batches
+    must arrive in non-decreasing LSN order.
     """
     n_buckets = int(table.properties()["n_buckets"])
-    retain_tombstones = bool(table.properties().get("retain_tombstones"))
     if table.last_epoch(source) >= epoch:
         return ApplyResult(epoch, False, None, None, None, 0, 0, 0, [], [])
 
     if evolve_schema:
         _evolve_for_batch(table, changes, keys)
-    target_schema = table.schema()
-    target_cols = [f.name for f in target_schema.fields]
+    target_cols = [f.name for f in table.schema().fields]
 
-    # MoR dedups INSIDE the bucket-partitioned window (one exchange,
-    # reused by the partitioned delta write below — guide §2.4); the CoW
-    # branch keeps the map-side-combining agg (its full-outer merge join
-    # re-shuffles by key anyway, so there is no exchange to share).
-    mor_fused = apply_mode == "mor" and dedup_strategy == "agg"
-    if mor_fused:
-        winners = dedup_latest_bucketed(
-            changes.withColumn(BUCKET_COL, bucket_expr(bucket_key, n_buckets)),
-            keys, order,
-        )
-    else:
-        winners = dedup_latest(changes, keys, order, strategy=dedup_strategy)
-        winners = winners.withColumn(BUCKET_COL, bucket_expr(bucket_key, n_buckets))
+    # Dedup INSIDE the bucket-partitioned window: its one exchange is
+    # reused by the partitioned delta write below (guide §2.4).
+    winners = dedup_latest_bucketed(
+        changes.withColumn(BUCKET_COL, bucket_expr(bucket_key, n_buckets)),
+        keys, order,
+    )
     # Normalize tombstones: null the row image of D winners (keys, order
     # and envelope stay). When the table declares a `mor_tombstone_col`
     # that is non-null for every I/U row (the property's contract), the
@@ -519,183 +487,79 @@ def apply_changes(
     # it also keeps stale payloads out of persisted tombstone rows.
     winners = _null_tombstone_image(winners, keys, order)
 
-    if apply_mode == "mor":
-        # Merge-on-read: ONE Spark action — dedup + delta append fused
-        # into the write job. Lineage (rows, deletes, lsn range, buckets)
-        # comes from the parquet footers the commit just recorded, so no
-        # separate statistics pass runs. D tombstones are counted via the
-        # footer null-count of the table's declared `mor_tombstone_col`
-        # (a row-image column the apply nulls for D rows — see
-        # _null_tombstone_image). Declaring the property is a CONTRACT
-        # that the column is non-null for every I/U row in the feed —
-        # a legitimately-null value on a live row is indistinguishable
-        # from a tombstone image and would inflate the delete count
-        # (lineage observability only; applied state is unaffected).
-        # Feeds that can't promise that should leave the property unset:
-        # tables without it fall back to an explicit (small) counting
-        # aggregate.
-        tomb_col = table.properties().get("mor_tombstone_col")
-        fallback_counts: dict[int, list[int]] | None = None
-        if tomb_col is None or tomb_col not in (
-            table.properties().get("stats_cols") or []
-        ):
-            rows = (
-                winners.groupBy(BUCKET_COL)
-                .agg(
-                    F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("_d"),
-                    F.count("*").alias("_n"),
-                )
-                .collect()
-            )
-            fallback_counts = {
-                int(r[BUCKET_COL]): [int(r["_n"] - r["_d"]), int(r["_d"])] for r in rows
-            }
-        try:
-            snap = table.append_deltas(
-                winners.select(*target_cols),
-                summary={"source": source},
-                epoch=(source, epoch),
-                # fused path: winners came through the bucket-keyed window
-                # exchange, so the write skips its defensive repartition
-                pre_partitioned=mor_fused,
-            )
-        except EpochAlreadyApplied:
-            return ApplyResult(epoch, False, None, None, None, 0, 0, 0, [], [])
-        prefix = os.path.join("data", f"c{snap.version:08d}-")
-        bucket_rows: dict[int, list[int]] = {}
-        lsn_min = lsn_max = None
-        for part_key, file_list in snap.delta_files.items():
-            for f in file_list:
-                if not f.startswith(prefix):
-                    continue
-                st = snap.file_stats.get(f, {})
-                b = int(part_key) if part_key else -1
-                if fallback_counts is None:
-                    rows = int(st.get("__rows", 0))
-                    dels = int(st.get(f"__nulls_{tomb_col}", 0))
-                    agg_row = bucket_rows.setdefault(b, [0, 0])
-                    agg_row[0] += rows - dels
-                    agg_row[1] += dels
-                else:
-                    bucket_rows[b] = fallback_counts.get(b, [0, 0])
-                if "lsn" in st:
-                    lo, hi = st["lsn"]
-                    lsn_min = lo if lsn_min is None else min(lsn_min, lo)
-                    lsn_max = hi if lsn_max is None else max(lsn_max, hi)
-        n_up = sum(v[0] for v in bucket_rows.values())
-        n_del = sum(v[1] for v in bucket_rows.values())
-        return ApplyResult(
-            epoch=epoch,
-            applied=True,
-            snapshot_version=snap.version,
-            lsn_min=None if lsn_min is None else int(lsn_min),
-            lsn_max=None if lsn_max is None else int(lsn_max),
-            n_keys=int(n_up + n_del),
-            n_insert_update=int(n_up),
-            n_delete=int(n_del),
-            affected_buckets=sorted(bucket_rows),
-            bucket_stats=[(b, v[0], v[1]) for b, v in sorted(bucket_rows.items())],
-        )
-
-    winners = winners.persist()
-    try:
-        stats = (
+    # ONE Spark action — dedup + delta append fused into the write job.
+    # Lineage (rows, deletes, lsn range, buckets) comes from the parquet
+    # footers the commit just recorded, so no separate statistics pass
+    # runs. D tombstones are counted via the footer null-count of the
+    # table's declared `mor_tombstone_col` (a row-image column the apply
+    # nulls for D rows — see _null_tombstone_image). Declaring the
+    # property is a CONTRACT that the column is non-null for every I/U
+    # row in the feed — a legitimately-null value on a live row is
+    # indistinguishable from a tombstone image and would inflate the
+    # delete count (lineage observability only; applied state is
+    # unaffected). Feeds that can't promise that should leave the
+    # property unset: tables without it fall back to an explicit (small)
+    # counting aggregate.
+    tomb_col = table.properties().get("mor_tombstone_col")
+    fallback_counts: dict[int, list[int]] | None = None
+    if tomb_col is None or tomb_col not in (table.properties().get("stats_cols") or []):
+        rows = (
             winners.groupBy(BUCKET_COL)
             .agg(
-                F.sum(F.when(F.col("op") != "D", 1).otherwise(0)).alias("n_up"),
-                F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("n_del"),
-                F.min("lsn").alias("lsn_min"),
-                F.max("lsn").alias("lsn_max"),
+                F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("_d"),
+                F.count("*").alias("_n"),
             )
             .collect()
         )
-        if not stats:
-            table.commit_epoch_noop(source, epoch, {"rows": 0})
-            return ApplyResult(
-                epoch, True, table.current_version(), None, None, 0, 0, 0, [], []
-            )
-        affected = sorted(int(r[BUCKET_COL]) for r in stats)
-        n_up = sum(r["n_up"] for r in stats)
-        n_del = sum(r["n_del"] for r in stats)
-        lsn_min = min(r["lsn_min"] for r in stats)
-        lsn_max = max(r["lsn_max"] for r in stats)
-
-        # Version-aware resolution over a single full-outer join:
-        # - key only in target            -> target row survives untouched
-        # - key only in batch             -> winner inserted (as a
-        #         tombstone row when D and the table retains them)
-        # - both: target (lsn,op_ordinal) newer-or-equal -> target stays
-        #         (makes replayed/out-of-order batches converge — the
-        #         defense Delta MERGE lacks, G5), else winner replaces
-        #         (or tombstones/removes, for D).
-        # Presence is detected via explicit marker columns added before
-        # the join — NOT inferred from order-column nullness, so target
-        # rows whose first order column is legitimately null survive.
-        # The target carries the order columns as provenance, so this is
-        # pure column algebra. (A full-outer join never broadcasts: both
-        # sides shuffle by key.)
-        # Tombstones must be read: a retained D must beat an older update.
-        target_slice = table.read_partitions(affected, tombstones="include").withColumn(
-            "_t_present", F.lit(True)
-        )
-        w_side = winners.withColumn("_w_present", F.lit(True))
-        t_struct = F.struct(*[F.col(f"t.{c}").alias(c) for c in target_cols])
-        w_struct = F.struct(
-            *[
-                (F.col(f"w.{c}") if c in winners.columns else F.lit(None)).cast(
-                    target_schema[c].dataType
-                ).alias(c)
-                for c in target_cols
-            ]
-        )
-        t_ord = F.struct(*[F.col(f"t.{o}") for o in order])
-        w_ord = F.struct(*[F.col(f"w.{o}") for o in order])
-        t_present = F.col("t._t_present").isNotNull()
-        w_present = F.col("w._w_present").isNotNull()
-        w_survives = w_present if retain_tombstones else (
-            w_present & (F.col("w.op") != "D")
-        )
-        chosen = (
-            F.when(t_present & (~w_present | (t_ord >= w_ord)), t_struct)
-            .when(w_survives, w_struct)
-            .otherwise(F.lit(None))
-        )
-        merged = (
-            target_slice.alias("t")
-            .join(w_side.alias("w"), on=list(keys), how="full_outer")
-            .select(chosen.alias("_r"))
-            .where(F.col("_r").isNotNull())
-            .select("_r.*")
-        )
-
-        snap = table.replace_partitions(
-            merged,
-            summary={
-                "source": source,
-                "lsn_min": int(lsn_min),
-                "lsn_max": int(lsn_max),
-                "n_upserts": int(n_up),
-                "n_deletes": int(n_del),
-            },
+        fallback_counts = {
+            int(r[BUCKET_COL]): [int(r["_n"] - r["_d"]), int(r["_d"])] for r in rows
+        }
+    try:
+        snap = table.append_deltas(
+            winners.select(*target_cols),
+            summary={"source": source},
             epoch=(source, epoch),
-            partition_values=affected,
-        )
-        return ApplyResult(
-            epoch=epoch,
-            applied=True,
-            snapshot_version=snap.version,
-            lsn_min=int(lsn_min),
-            lsn_max=int(lsn_max),
-            n_keys=int(n_up + n_del),
-            n_insert_update=int(n_up),
-            n_delete=int(n_del),
-            affected_buckets=affected,
-            bucket_stats=[(int(r[BUCKET_COL]), int(r["n_up"]), int(r["n_del"])) for r in stats],
+            # winners came through the bucket-keyed window exchange, so
+            # the write skips its defensive repartition
+            pre_partitioned=True,
         )
     except EpochAlreadyApplied:
         return ApplyResult(epoch, False, None, None, None, 0, 0, 0, [], [])
-    finally:
-        winners.unpersist()
+    prefix = os.path.join("data", f"c{snap.version:08d}-")
+    bucket_rows: dict[int, list[int]] = {}
+    lsn_min = lsn_max = None
+    for part_key, file_list in snap.delta_files.items():
+        for f in file_list:
+            if not f.startswith(prefix):
+                continue
+            st = snap.file_stats.get(f, {})
+            b = int(part_key) if part_key else -1
+            if fallback_counts is None:
+                rows = int(st.get("__rows", 0))
+                dels = int(st.get(f"__nulls_{tomb_col}", 0))
+                agg_row = bucket_rows.setdefault(b, [0, 0])
+                agg_row[0] += rows - dels
+                agg_row[1] += dels
+            else:
+                bucket_rows[b] = fallback_counts.get(b, [0, 0])
+            if "lsn" in st:
+                lo, hi = st["lsn"]
+                lsn_min = lo if lsn_min is None else min(lsn_min, lo)
+                lsn_max = hi if lsn_max is None else max(lsn_max, hi)
+    n_up = sum(v[0] for v in bucket_rows.values())
+    n_del = sum(v[1] for v in bucket_rows.values())
+    return ApplyResult(
+        epoch=epoch,
+        applied=True,
+        snapshot_version=snap.version,
+        lsn_min=None if lsn_min is None else int(lsn_min),
+        lsn_max=None if lsn_max is None else int(lsn_max),
+        n_keys=int(n_up + n_del),
+        n_insert_update=int(n_up),
+        n_delete=int(n_del),
+        affected_buckets=sorted(bucket_rows),
+        bucket_stats=[(b, v[0], v[1]) for b, v in sorted(bucket_rows.items())],
+    )
 
 
 def _null_tombstone_image(

@@ -4,13 +4,20 @@ Functional analog of the reference bronze layer (``bronze/table_setup.py``
 + ``bronze/cdc_ingestion.py`` in /root/reference) with our own change-feed
 mechanics instead of Delta CDF: the change log is an explicit table with a
 total ``(lsn, op_ordinal)`` order, tailed in LSN-range chunks (epochs),
-each applied exactly-once via the epoch-stamped merge apply.
+each applied exactly-once as a merge-on-read delta append
+(``operators.apply.apply_changes``); compaction later folds the deltas
+into the base, and reads resolve base ∪ deltas per key.
 
 Partitioning: ``bucket(n, conv_id)`` instead of the reference's
 ``DATE(movementdatetime)`` (``bronze/table_setup.py:81``) — upserts are
 keyed, not time-ranged, so hash buckets make every change map to exactly
-one partition and keep the copy-on-write footprint proportional to the
-batch. At 100 TB, n_buckets is sized so one bucket ~ a few GB.
+one partition and keep each compaction's rewrite footprint proportional
+to the buckets it folds. At 100 TB, n_buckets is sized so one bucket ~ a
+few GB.
+
+A lake written when bronze still had a copy-on-write mode keeps working:
+its bronze is a merge-on-read table with no deltas, and the pipeline
+ignores its legacy mode property.
 """
 
 from __future__ import annotations
@@ -46,13 +53,7 @@ def transcript_table_schema(extra_fields: list[T.StructField] | None = None) -> 
     return T.StructType(fields + (extra_fields or []))
 
 
-def create_transcripts_table(
-    spark: SparkSession, path: str, n_buckets: int = 16, apply_mode: str = "cow"
-) -> LakeTable:
-    """``apply_mode``: 'cow' rewrites affected buckets per batch (read-
-    optimized); 'mor' appends delta files and defers the rewrite to
-    compaction (write-optimized — the right default once batch count is
-    large relative to table turnover; see operators.apply)."""
+def create_transcripts_table(spark: SparkSession, path: str, n_buckets: int = 16) -> LakeTable:
     return LakeTable.create(
         spark,
         path,
@@ -63,9 +64,8 @@ def create_transcripts_table(
         properties={
             "n_buckets": n_buckets,
             # lsn: footer-derived lineage ranges; role: null-count = D
-            # tombstone count per delta file (see operators.apply MoR path)
+            # tombstone count per delta file (see operators.apply.apply_changes)
             "stats_cols": ["conv_id", "lsn", "role"],
-            "apply_mode": apply_mode,
             # winning deletes persist as tombstone rows (invisible to
             # reads) so out-of-order older updates cannot resurrect keys;
             # dropped at compaction once the replay LSN horizon passes
@@ -85,10 +85,9 @@ def apply_transcript_batch(
     batch: DataFrame,
     epoch: int,
     source: str = "transcript_changes",
-    dedup_strategy: str = "agg",
 ) -> ApplyResult:
-    """One epoch of transcript changes -> bronze table (provenance cols
-    ride along with the row image). Apply mode comes from the table."""
+    """One epoch of transcript changes -> bronze delta files (provenance
+    cols ride along with the row image)."""
     return apply_changes(
         table,
         batch,
@@ -97,13 +96,11 @@ def apply_transcript_batch(
         keys=("conv_id", "turn_idx"),
         order=("lsn", "op_ordinal"),
         bucket_key="conv_id",
-        dedup_strategy=dedup_strategy,
-        apply_mode=table.properties().get("apply_mode", "cow"),
     )
 
 
 def read_transcripts(table: LakeTable, buckets=None, bounds=None) -> DataFrame:
-    """Resolved bronze state (handles both CoW and MoR tables)."""
+    """Resolved bronze state: base ∪ deltas, one winner per key."""
     from maritime_activity_reports_cdc_spark.operators.apply import read_merged
 
     return read_merged(table, buckets, bounds)
@@ -124,7 +121,6 @@ def replay_change_log(
     n_chunks: int = 1,
     source: str = "transcript_changes",
     start_epoch: int = 0,
-    dedup_strategy: str = "agg",
 ) -> ReplayStats:
     """Bounded replay: split the log into ``n_chunks`` contiguous LSN
     ranges and apply each as one epoch (the batch analog of the streaming
@@ -147,9 +143,7 @@ def replay_change_log(
         if lo >= int(lsn_lo) + span:
             break
         chunk = changes.where((F.col("lsn") >= lo) & (F.col("lsn") < hi))
-        res = apply_transcript_batch(
-            table, chunk, epoch=start_epoch + i, source=source, dedup_strategy=dedup_strategy
-        )
+        res = apply_transcript_batch(table, chunk, epoch=start_epoch + i, source=source)
         results.append(res)
         if res.applied:
             events += res.n_keys

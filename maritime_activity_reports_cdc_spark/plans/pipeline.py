@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from maritime_activity_reports_cdc_spark.config import BRONZE_MODES, LAYER_MODES
+from maritime_activity_reports_cdc_spark.config import LAYER_MODES
 from maritime_activity_reports_cdc_spark.operators import scd2 as scd2_op
 from maritime_activity_reports_cdc_spark.plans import bronze as bronze_plan
 from maritime_activity_reports_cdc_spark.plans import gold as gold_plan
@@ -71,6 +71,10 @@ class EpochMetrics:
     n_keys: int
     n_upserts: int
     n_deletes: int
+    # Each layer's own wall, timed on the thread that ran it: bronze
+    # (apply, plus a compaction it ran inline) and silver overlap on
+    # sparse epochs, so their sum can exceed total_secs. gold_secs is the
+    # derived-flush dispatch (the whole flush unless async_derived).
     bronze_secs: float
     silver_secs: float
     gold_secs: float
@@ -88,8 +92,10 @@ class MedallionPipeline:
     n_buckets: int = 16
     with_gold: bool = True
     with_daily: bool = True
-    bronze_mode: str = "cow"  # 'cow' | 'mor' (write-optimized + compaction)
-    compact_every: int = 8  # MoR: fold deltas into base every N epochs
+    # Bronze is merge-on-read: each epoch appends delta files, and
+    # compaction folds them into the base every N epochs (or sooner, see
+    # compact_delta_depth).
+    compact_every: int = 8
     # Silver refresh plan: 'cow' rewrites the affected buckets per epoch
     # (read-optimized), 'turn' appends turn-level key-MoR deltas (O(batch)
     # fat work per epoch), 'auto' picks turn or cow per epoch from the
@@ -99,15 +105,11 @@ class MedallionPipeline:
     # single-partition reader must resolve — the read-tax proxy) reaches
     # this bound; fires independently of the epoch cadence.
     compact_delta_depth: int = 8
-    # Run the gold summary and daily refreshes concurrently (separate
-    # tables, both downstream of the silver write) — overlaps their
-    # driver-side plan/commit serial fractions.
-    parallel_layers: bool = True
-    # Overlap the bronze apply with the turn-level silver refresh: the
-    # refresh derives its state from the PRE-apply snapshot overlaid
+    # Overlap the bronze apply with the silver refresh: the refresh
+    # derives its state from the PRE-apply snapshot overlaid
     # with the batch winners (associative dedup), so the two commits
-    # have no data dependency. Turn/auto sparse epochs only; under
-    # overlap EpochMetrics reports the joint wall in silver_secs.
+    # have no data dependency. EpochMetrics times each on its own
+    # thread (bronze_secs, silver_secs).
     overlap_layers: bool = True
     # Refresh the derived gold layers every N epochs instead of every
     # epoch — the reference's OWN trigger design (silver fires at 30 s,
@@ -119,10 +121,6 @@ class MedallionPipeline:
     # reference. Use >1 in the bounded replayer (which finalize()s at the
     # end); keep 1 for continuous streaming.
     derived_every: int = 1
-    # Chunk size for the two-phase mega-conversation window (None = the
-    # plain per-bucket window; set when single conversations can exceed
-    # ~10^5 turns so no window task serializes one conversation).
-    mega_conv_chunk: int | None = None
     # Retention maintenance cadence: when set, every table expires
     # snapshots down to the newest N after an epoch whose derived work is
     # fully flushed (pending date-frames pin PRE-refresh file lists, so
@@ -202,24 +200,25 @@ class MedallionPipeline:
     @classmethod
     def create(cls, spark: SparkSession, root: str, n_buckets: int = 16,
                with_gold: bool = True, with_daily: bool = True,
-               bronze_mode: str = "cow", compact_every: int = 8,
+               bronze_mode: str = "mor", compact_every: int = 8,
                layer_mode: str = "cow",
                compact_delta_depth: int = 8,
                derived_every: int = 1) -> "MedallionPipeline":
+        """``bronze_mode`` is accepted for callers written when bronze had
+        a copy-on-write mode; bronze is merge-on-read only, so any value
+        but 'mor' raises."""
         if layer_mode not in LAYER_MODES:
             raise ValueError(
                 f"layer_mode must be {'|'.join(LAYER_MODES)}, got {layer_mode!r}"
             )
-        if bronze_mode not in BRONZE_MODES:
-            raise ValueError(
-                f"bronze_mode must be {'|'.join(BRONZE_MODES)}, got {bronze_mode!r}"
-            )
-        p = cls(spark, root, n_buckets, with_gold, with_daily, bronze_mode,
-                compact_every, layer_mode, compact_delta_depth)
-        p.derived_every = derived_every
+        if bronze_mode != "mor":
+            raise ValueError(f"bronze_mode must be 'mor', got {bronze_mode!r}")
+        p = cls(spark, root, n_buckets, with_gold, with_daily,
+                compact_every=compact_every, layer_mode=layer_mode,
+                compact_delta_depth=compact_delta_depth, derived_every=derived_every)
         os.makedirs(root, exist_ok=True)
         p.bronze = bronze_plan.create_transcripts_table(
-            spark, p._p("bronze_transcripts"), n_buckets, apply_mode=bronze_mode
+            spark, p._p("bronze_transcripts"), n_buckets
         )
         p.silver = silver_plan.create_silver_table(
             spark, p._p("silver_transcripts"), n_buckets, layer_mode=layer_mode
@@ -247,7 +246,8 @@ class MedallionPipeline:
         p.bronze = LakeTable.load(spark, p._p("bronze_transcripts"))
         p.silver = LakeTable.load(spark, p._p("silver_transcripts"))
         p.n_buckets = int(p.bronze.properties()["n_buckets"])
-        p.bronze_mode = p.bronze.properties().get("apply_mode", "cow")
+        # a legacy bronze 'apply_mode' property is ignored: a copy-on-write
+        # bronze is a merge-on-read table with no deltas
         p.layer_mode = p.silver.properties().get("layer_mode", "cow")
         if p.layer_mode not in LAYER_MODES:
             raise ValueError(
@@ -326,12 +326,19 @@ class MedallionPipeline:
         session's SQLConf as ``session.get_spark`` built it; the relay
         never writes SQLConf."""
         t0 = time.monotonic()
+        # per-layer walls, each timed on the thread that runs the layer
+        walls = {"bronze": 0.0, "silver": 0.0}
+
+        def _timed(layer: str, fn):
+            t = time.monotonic()
+            try:
+                return fn()
+            finally:
+                walls[layer] = time.monotonic() - t
 
         def _bronze() -> bronze_plan.ApplyResult:
             r = bronze_plan.apply_transcript_batch(self.bronze, batch, epoch=epoch)
-            if self.bronze_mode == "mor" and r.applied and self._compaction_due(
-                self.bronze, epoch
-            ):
+            if r.applied and self._compaction_due(self.bronze, epoch):
                 from maritime_activity_reports_cdc_spark.operators.apply import compact
 
                 self._submit_maintenance(
@@ -344,8 +351,8 @@ class MedallionPipeline:
         # the row image is null, but conv_id is part of the key so it is
         # always present — deletes propagate to silver/gold (G7 fix).
         # (Derived from the BATCH, so it does not depend on the bronze
-        # commit — which is what lets the turn path below overlap the
-        # bronze apply with the silver refresh.)
+        # commit — which is what lets the silver refresh below overlap
+        # the bronze apply.)
         affected = silver_plan.compute_affected(batch, self.n_buckets)
         affected.dense = self._dense_batch(affected)
         # The silver refresh (turn OR per-conversation) can derive its
@@ -355,10 +362,6 @@ class MedallionPipeline:
         # keep every crash interleaving resumable (bronze-behind-silver
         # resumes by re-applying bronze and skipping silver).
         overlap = bool(self.overlap_layers and affected.buckets)
-        res: bronze_plan.ApplyResult | None = None
-        if not overlap:
-            res = _bronze()
-        t1 = time.monotonic()
         dates = None
         if self.daily is not None:
             # Dates carried by the batch itself (inserts and ts
@@ -380,52 +383,41 @@ class MedallionPipeline:
         use_turn = self.layer_mode == "turn" or (
             self.layer_mode == "auto" and not affected.dense
         )
-        if use_turn:
-            # turn-level incremental refresh: O(batch) fat work per
-            # epoch (fresh rows from the batch, ≤1 successor per key)
-            if overlap:
-                from concurrent.futures import ThreadPoolExecutor
 
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    fb = pool.submit(_bronze)
-                    fs = pool.submit(
-                        silver_plan.refresh_silver_turn,
-                        self.bronze, self.silver, batch, affected,
-                        epoch, "silver_refresh", True,
-                    )
-                    res = fb.result()
-                    fs.result()
-            else:
+        def _silver() -> None:
+            if use_turn:
+                # turn-level incremental refresh: O(batch) fat work per
+                # epoch (fresh rows from the batch, ≤1 successor per key)
                 silver_plan.refresh_silver_turn(
-                    self.bronze, self.silver, batch, affected, epoch=epoch
+                    self.bronze, self.silver, batch, affected,
+                    epoch, "silver_refresh", overlap,
                 )
-        else:
+                return
             # Fresh silver rows for the affected conversations. Under
             # overlap they derive from pre-apply bronze ∪ batch winners,
             # so this refresh runs concurrently with the bronze apply.
-            def _silver_conv():
-                enriched = None
-                if affected.buckets:
-                    enriched = silver_plan.build_enriched(
-                        self.bronze, affected,
-                        mega_conv_chunk=self.mega_conv_chunk,
-                        overlay_batch=batch if overlap else None,
-                    )
-                silver_plan.refresh_silver_for_conversations(
-                    self.bronze, self.silver, affected, epoch=epoch,
-                    enriched=enriched,
+            enriched = None
+            if affected.buckets:
+                enriched = silver_plan.build_enriched(
+                    self.bronze, affected,
+                    overlay_batch=batch if overlap else None,
                 )
+            silver_plan.refresh_silver_for_conversations(
+                self.bronze, self.silver, affected, epoch=epoch,
+                enriched=enriched,
+            )
 
-            if overlap:
-                from concurrent.futures import ThreadPoolExecutor
+        if overlap:
+            from concurrent.futures import ThreadPoolExecutor
 
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    fb = pool.submit(_bronze)
-                    fs = pool.submit(_silver_conv)
-                    res = fb.result()
-                    fs.result()
-            else:
-                _silver_conv()
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                fb = pool.submit(_timed, "bronze", _bronze)
+                fs = pool.submit(_timed, "silver", _silver)
+                res = fb.result()
+                fs.result()
+        else:
+            res = _timed("bronze", _bronze)
+            _timed("silver", _silver)
         t2 = time.monotonic()
 
         self._pending_derived.append((epoch, affected, dates))
@@ -465,8 +457,8 @@ class MedallionPipeline:
             n_keys=res.n_keys,
             n_upserts=res.n_insert_update,
             n_deletes=res.n_delete,
-            bronze_secs=t1 - t0,
-            silver_secs=t2 - t1,
+            bronze_secs=walls["bronze"],
+            silver_secs=walls["silver"],
             gold_secs=t3 - t2,
             total_secs=t3 - t0,
         )
@@ -651,7 +643,7 @@ class MedallionPipeline:
                     )
 
             try:
-                if self.parallel_layers and self.summary is not None and self.daily is not None:
+                if self.summary is not None and self.daily is not None:
                     # Independent consumers of committed state writing to
                     # DIFFERENT tables — two driver threads overlap their
                     # plan analysis, job scheduling and commit serial
@@ -724,8 +716,7 @@ class MedallionPipeline:
         self._wait_flush()
         self._wait_maintenance()
 
-        if self.bronze_mode == "mor":
-            compact(self.bronze)
+        compact(self.bronze)
         if self.layer_mode in ("turn", "auto"):
             compact(
                 self.silver, keys=("conv_id", "turn_idx"), order=("_gen",),

@@ -23,15 +23,14 @@ entirely and recompute whole buckets — every broadcast build is serial
 driver time, so the dense path trades a bounded superset recompute for
 zero broadcasts. The enrichment window partitions by the storage bucket
 (conversation-boundary-guarded lags), so the bucket-partitioned write
-reuses that one exchange; a chunked two-phase variant bounds
-rows-per-task for mega-conversations.
+reuses that one exchange.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -162,32 +161,26 @@ def quality_exprs(df: DataFrame) -> DataFrame:
     )
 
 
-def enrich_conversations(df: DataFrame, shuffle_key: str | None = None) -> DataFrame:
+def enrich_conversations(df: DataFrame) -> DataFrame:
     """Full-conversation window enrichment (W1/W2/W3 analogs):
     inter-turn gap seconds, turn-index gap, role-transition flag —
     ``lag`` over per-conversation order exactly as the reference does per
     imo (``silver/cdf_processor.py:144-178``) but over complete
     conversation state (G6 fix).
 
-    ``shuffle_key``: window-partition by this coarser column (the hash
-    bucket) instead of conv_id, ordering by (conv_id, turn_idx) with
-    conv-boundary guards on every lag. Semantically identical, but the
-    ONE exchange it induces is on the table's own partition key, so the
-    downstream bucket-partitioned write reuses it instead of shuffling
-    the fat text rows a second time. (Rows-per-window-task goes from one
-    conversation to one bucket — sized by n_buckets, the same skew bound
-    as the storage layout itself.)"""
-    if shuffle_key is None:
-        over = "OVER (PARTITION BY conv_id ORDER BY turn_idx)"
-        prev_ts = f"lag(ts) {over}"
-        prev_idx = f"lag(turn_idx) {over}"
-        prev_role = f"lag(role) {over}"
-    else:
-        over = f"OVER (PARTITION BY `{shuffle_key}` ORDER BY conv_id, turn_idx)"
-        same = f"lag(conv_id) {over} = conv_id"
-        prev_ts = f"CASE WHEN {same} THEN lag(ts) {over} END"
-        prev_idx = f"CASE WHEN {same} THEN lag(turn_idx) {over} END"
-        prev_role = f"CASE WHEN {same} THEN lag(role) {over} END"
+    The window partitions by the hash bucket (``BUCKET_COL``, which ``df``
+    must carry) instead of conv_id, ordering by (conv_id, turn_idx) with
+    conv-boundary guards on every lag. Semantically identical to a
+    per-conversation window, but the ONE exchange it induces is on the
+    table's own partition key, so the downstream bucket-partitioned write
+    reuses it instead of shuffling the fat text rows a second time.
+    (Rows-per-window-task is one bucket — sized by n_buckets, the same
+    skew bound as the storage layout itself.)"""
+    over = f"OVER (PARTITION BY `{BUCKET_COL}` ORDER BY conv_id, turn_idx)"
+    same = f"lag(conv_id) {over} = conv_id"
+    prev_ts = f"CASE WHEN {same} THEN lag(ts) {over} END"
+    prev_idx = f"CASE WHEN {same} THEN lag(turn_idx) {over} END"
+    prev_role = f"CASE WHEN {same} THEN lag(role) {over} END"
     # one selectExpr (SQL parses in a single py4j round-trip — hot relay
     # path, see the expression-constants block above); Catalyst merges
     # the repeated window specs into one window operator
@@ -201,73 +194,6 @@ def enrich_conversations(df: DataFrame, shuffle_key: str | None = None) -> DataF
         f"CASE WHEN ({prev_role}) IS NULL THEN TRUE"
         f" ELSE role != ({prev_role}) END AS is_role_transition",
     )
-
-
-def enrich_conversations_chunked(df: DataFrame, chunk_size: int = 10_000) -> DataFrame:
-    """Mega-conversation-safe enrichment: identical output to
-    ``enrich_conversations``, but no single window task ever holds more
-    than ~``chunk_size`` turns of one conversation.
-
-    A per-conversation ordered window serializes a 10^6-turn
-    conversation into one task (round-1 defect). Two-phase plan:
-
-    1. windows over ``(conv_id, chunk)`` where chunk = turn_idx div
-       chunk_size — parallelism ∝ turns/chunk_size even for one conv;
-    2. boundary exchange: each chunk's LAST (ts, turn_idx, role) is
-       aggregated (tiny: one row per chunk) and lag()ed over a
-       per-conversation window of CHUNK SUMMARIES (rows = n_chunks, not
-       n_turns — skew-free by construction); chunk-first rows take their
-       prev-values from the latest NON-EMPTY prior chunk.
-
-    Cost: one extra small shuffle of the chunk summaries + a broadcast-
-    size join. Use when conversations can exceed ~10^5 turns; the plain
-    single-window form is cheaper below that.
-    """
-    ck = (F.col("turn_idx").cast("long") / F.lit(int(chunk_size))).cast("long")
-    x = df.withColumn("_ck", ck)
-    w = Window.partitionBy("conv_id", "_ck").orderBy("turn_idx")
-    prev_in = F.struct(
-        F.lag("ts").over(w).alias("ts"),
-        F.lag("turn_idx").over(w).alias("turn_idx"),
-        F.lag("role").over(w).alias("role"),
-    )
-    x = x.withColumn("_prev_in", prev_in).withColumn(
-        "_first_in_chunk", F.lag("turn_idx").over(w).isNull()
-    )
-    # chunk summaries: last row image per (conv, chunk). Only NON-EMPTY
-    # chunks appear (the agg runs over existing rows), so a plain lag
-    # already yields the latest prior non-empty chunk even when turn_idx
-    # ranges are sparse.
-    last_row = F.max_by(
-        F.struct(F.col("ts"), F.col("turn_idx"), F.col("role")), F.col("turn_idx")
-    ).alias("_last")
-    summaries = x.groupBy("conv_id", "_ck").agg(last_row)
-    w_ck = Window.partitionBy("conv_id").orderBy("_ck")
-    boundaries = summaries.withColumn("_prev_chunk", F.lag("_last").over(w_ck)).select(
-        "conv_id", "_ck", "_prev_chunk"
-    )
-    x = x.join(boundaries, ["conv_id", "_ck"], "left")
-    prev = F.when(F.col("_first_in_chunk"), F.col("_prev_chunk")).otherwise(F.col("_prev_in"))
-    prev_ts = prev["ts"]
-    prev_idx = prev["turn_idx"]
-    prev_role = prev["role"]
-    out = (
-        x.withColumn("text_len", F.length("text").cast("int"))
-        .withColumn(
-            "n_tokens",
-            F.when(
-                F.col("text").isNull() | (F.length("text") == 0), F.lit(0)
-            ).otherwise(F.regexp_count(F.trim(F.col("text")), F.lit(r"\s+")) + 1).cast("int"),
-        )
-        .withColumn("text_fp", F.xxhash64("text"))
-        .withColumn("gap_secs", F.col("ts").cast("double") - prev_ts.cast("double"))
-        .withColumn("turn_gap", (F.col("turn_idx") - prev_idx).cast("int"))
-        .withColumn(
-            "is_role_transition",
-            F.when(prev_role.isNull(), F.lit(True)).otherwise(F.col("role") != prev_role),
-        )
-    )
-    return out.drop("_ck", "_prev_in", "_first_in_chunk", "_prev_chunk")
 
 
 def affected_conversations(batch: DataFrame) -> DataFrame:
@@ -345,17 +271,11 @@ def compute_affected(batch: DataFrame, n_buckets: int) -> AffectedSet:
 def build_enriched(
     bronze_table: LakeTable,
     affected: AffectedSet,
-    mega_conv_chunk: int | None = None,
     overlay_batch: DataFrame | None = None,
 ) -> DataFrame:
     """Fresh silver rows for exactly the affected conversations, computed
     from FULL bronze state (G6 fix). Shared by the silver write AND the
     gold summary refresh — compute once, persist, feed both.
-
-    ``mega_conv_chunk``: when conversations can exceed ~10^5 turns, use
-    the chunked two-phase window (bounded rows-per-task) at the cost of
-    one extra small shuffle; the result is clustered by bucket afterward
-    so the write path keeps its exchange reuse.
 
     ``overlay_batch``: derive the post-apply state from the PRE-apply
     snapshot overlaid with this batch's winners instead of reading the
@@ -365,7 +285,8 @@ def build_enriched(
     bronze COMMIT (the relay overlaps them on two driver threads)."""
     # Bronze and silver share the bucket transform, so the bronze scan
     # prunes to the same buckets; conv_id file bounds prune further.
-    # read_merged resolves bronze MoR deltas when present (no-op for CoW).
+    # read_merged resolves bronze deltas when present (a plain base scan
+    # right after a compaction).
     from maritime_activity_reports_cdc_spark.operators.apply import (
         BUCKET_COL as _BK,
         bucket_expr,
@@ -419,15 +340,9 @@ def build_enriched(
         bronze_slice = affected.semi(bronze_slice)
     # (overlay path: the semi restriction is already applied above the
     # scan — re-applying it here would just build the broadcast twice)
-    convs = bronze_slice
-    if mega_conv_chunk:
-        enriched = enrich_conversations_chunked(convs, chunk_size=mega_conv_chunk)
-        enriched = enriched.repartition(F.col(BUCKET_COL))
-    else:
-        # Window by the storage bucket so the silver write reuses this
-        # one exchange instead of re-shuffling the fat rows.
-        enriched = enrich_conversations(convs, shuffle_key=BUCKET_COL)
-    return quality_exprs(enriched)
+    # Window by the storage bucket so the silver write reuses this one
+    # exchange instead of re-shuffling the fat rows.
+    return quality_exprs(enrich_conversations(bronze_slice))
 
 
 def refresh_silver_turn(

@@ -8,7 +8,7 @@ Package and run:
         --changes /path/to/changes_parquet \
         --lake /path/to/lake_root \
         --checkpoint /path/to/ckpt \
-        --chunks 16 --buckets 256 --mode mor --layer-mode auto
+        --chunks 16 --buckets 256 --layer-mode auto
 
 On a cluster, pass --master/--num-executors etc. to spark-submit as
 usual; the script only sets per-job SQL confs. Resume after a crash by
@@ -23,7 +23,7 @@ import json
 
 
 def main() -> None:
-    from maritime_activity_reports_cdc_spark.config import BRONZE_MODES, LAYER_MODES
+    from maritime_activity_reports_cdc_spark.config import LAYER_MODES
 
     ap = argparse.ArgumentParser()
     ap.add_argument("--changes", required=True, help="parquet dir with the change log")
@@ -31,7 +31,6 @@ def main() -> None:
     ap.add_argument("--checkpoint", required=True)
     ap.add_argument("--chunks", type=int, default=16)
     ap.add_argument("--buckets", type=int, default=64)
-    ap.add_argument("--mode", choices=BRONZE_MODES, default="mor")
     ap.add_argument("--layer-mode", choices=LAYER_MODES, default="auto",
                     help="silver refresh plan; 'auto' picks turn vs cow "
                          "per epoch from batch density")
@@ -57,16 +56,14 @@ def main() -> None:
         pipe = MedallionPipeline.load(spark, args.lake)
     else:
         kw = dict(
-            n_buckets=args.buckets, bronze_mode=args.mode,
-            layer_mode=args.layer_mode, compact_every=args.compact_every,
-            derived_every=args.derived_every,
+            n_buckets=args.buckets, layer_mode=args.layer_mode,
+            compact_every=args.compact_every, derived_every=args.derived_every,
         )
         if args.config:
             from maritime_activity_reports_cdc_spark.config import load_config
 
             lake_cfg = load_config(args.config).lake
-            defaults = {"n_buckets": 64, "bronze_mode": "mor",
-                        "layer_mode": "auto", "compact_every": 8,
+            defaults = {"n_buckets": 64, "layer_mode": "auto", "compact_every": 8,
                         "derived_every": 2}
             for k, v in defaults.items():
                 # flags at their defaults yield to the config file

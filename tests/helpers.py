@@ -37,3 +37,18 @@ def assert_states_equal(actual: pd.DataFrame, expected: pd.DataFrame):
     a = actual[cols].reset_index(drop=True)
     e = expected[cols].reset_index(drop=True)
     pd.testing.assert_frame_equal(a, e, check_dtype=False)
+
+
+# How a bronze table came to be: "mor" is a fresh table; "cow" is a table
+# stamped as lakes were when bronze still had a copy-on-write mode (a
+# legacy ``apply_mode='cow'`` property, which nothing may act on).
+BRONZE_ORIGINS = ("cow", "mor")
+
+
+def create_bronze(spark, path: str, n_buckets: int, origin: str = "mor"):
+    from maritime_activity_reports_cdc_spark.plans import bronze
+
+    table = bronze.create_transcripts_table(spark, path, n_buckets=n_buckets)
+    if origin == "cow":
+        table.set_properties({"apply_mode": "cow"})
+    return table

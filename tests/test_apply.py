@@ -15,7 +15,13 @@ from maritime_activity_reports_cdc_spark.plans import bronze
 from maritime_activity_reports_cdc_spark.sources.generator import generate_transcript_changes
 from maritime_activity_reports_cdc_spark.sources.lake import LakeTable
 
-from tests.helpers import assert_states_equal, naive_replay, table_state
+from tests.helpers import (
+    BRONZE_ORIGINS,
+    assert_states_equal,
+    create_bronze,
+    naive_replay,
+    table_state,
+)
 
 
 @pytest.fixture(scope="module")
@@ -39,27 +45,26 @@ def expected(changes):
     return naive_replay(changes)
 
 
-def _replay(spark, tmp_path, changes, n_chunks, **kw):
+def _replay(spark, tmp_path, changes, n_chunks):
     table = bronze.create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=8)
-    stats = bronze.replay_change_log(table, changes, n_chunks=n_chunks, **kw)
+    stats = bronze.replay_change_log(table, changes, n_chunks=n_chunks)
     return table, stats
+
+
+def _state(table):
+    return table_state(bronze.read_transcripts(table))
 
 
 def test_single_chunk_matches_oracle(spark, tmp_path, changes, expected):
     table, stats = _replay(spark, tmp_path, changes, n_chunks=1)
     assert stats.epochs == 1
-    assert_states_equal(table_state(table.read()), expected)
+    assert_states_equal(_state(table), expected)
 
 
 def test_multi_chunk_matches_oracle(spark, tmp_path, changes, expected):
     table, stats = _replay(spark, tmp_path, changes, n_chunks=7)
     assert stats.epochs >= 2
-    assert_states_equal(table_state(table.read()), expected)
-
-
-def test_window_dedup_strategy_matches(spark, tmp_path, changes, expected):
-    table, _ = _replay(spark, tmp_path, changes, n_chunks=3, dedup_strategy="window")
-    assert_states_equal(table_state(table.read()), expected)
+    assert_states_equal(_state(table), expected)
 
 
 def test_replay_is_idempotent(spark, tmp_path, changes, expected):
@@ -69,7 +74,7 @@ def test_replay_is_idempotent(spark, tmp_path, changes, expected):
     stats2 = bronze.replay_change_log(table, changes, n_chunks=4)
     assert all(not r.applied for r in stats2.results)
     assert table.current_version() == v_before
-    assert_states_equal(table_state(table.read()), expected)
+    assert_states_equal(_state(table), expected)
 
 
 def test_restart_mid_replay(spark, tmp_path, changes, expected):
@@ -88,7 +93,7 @@ def test_restart_mid_replay(spark, tmp_path, changes, expected):
     stats = bronze.replay_change_log(resumed, changes, n_chunks=5)
     assert [r.applied for r in stats.results][:2] == [False, False]
     assert any(r.applied for r in stats.results[2:])
-    assert_states_equal(table_state(resumed.read()), expected)
+    assert_states_equal(_state(resumed), expected)
 
 
 def test_deletes_propagate(spark, tmp_path, changes):
@@ -98,7 +103,7 @@ def test_deletes_propagate(spark, tmp_path, changes):
     deleted_keys = last.where(F.col("op") == "D").select("conv_id", "turn_idx")
     n_deleted = deleted_keys.count()
     assert n_deleted > 0, "fixture must contain effective deletes"
-    present = table.read().join(deleted_keys, ["conv_id", "turn_idx"], "inner")
+    present = bronze.read_transcripts(table).join(deleted_keys, ["conv_id", "turn_idx"], "inner")
     assert present.count() == 0
 
 
@@ -120,17 +125,17 @@ def test_same_key_multi_change_in_one_batch(spark, tmp_path):
     batch = spark.createDataFrame(rows, CHANGE_SCHEMA)
     table = bronze.create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=4)
     bronze.apply_transcript_batch(table, batch, epoch=0)
-    state = table.read().select("conv_id", "turn_idx", "text").collect()
+    state = bronze.read_transcripts(table).select("conv_id", "turn_idx", "text").collect()
     assert {(r.conv_id, r.turn_idx, r.text) for r in state} == {("c1", 0, "v3")}
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_out_of_order_older_update_cannot_resurrect_deleted_key(spark, tmp_path, mode):
+@pytest.mark.parametrize("origin", BRONZE_ORIGINS)
+def test_out_of_order_older_update_cannot_resurrect_deleted_key(spark, tmp_path, origin):
     """Persistent tombstones: a D at lsn=20 applied in epoch 0 must keep
-    the key dead when a LATER batch carries an older U at lsn=10 — in CoW
-    (tombstone row retained in the base) and MoR (tombstone survives
-    compaction) modes alike. Removes the old 'non-decreasing LSN order'
-    apply contract."""
+    the key dead when a LATER batch carries an older U at lsn=10 — the
+    tombstone survives compaction into the base — on a fresh table and
+    on one carrying the legacy copy-on-write mode property alike. Removes
+    the old 'non-decreasing LSN order' apply contract."""
     import datetime as dt
 
     from maritime_activity_reports_cdc_spark.operators.apply import compact
@@ -148,12 +153,9 @@ def test_out_of_order_older_update_cannot_resurrect_deleted_key(spark, tmp_path,
     epoch1 = spark.createDataFrame(
         [("U", 10, 0, ts, "c1", 0, "user", "stale", None, ts)], CHANGE_SCHEMA
     )
-    table = bronze.create_transcripts_table(
-        spark, str(tmp_path / "t"), n_buckets=4, apply_mode=mode
-    )
+    table = create_bronze(spark, str(tmp_path / "t"), 4, origin)
     bronze.apply_transcript_batch(table, epoch0, epoch=0)
-    if mode == "mor":
-        compact(table)  # tombstone must survive the fold into the base
+    compact(table)  # tombstone must survive the fold into the base
     bronze.apply_transcript_batch(table, epoch1, epoch=1)
     state = {(r.conv_id, r.turn_idx): r.text for r in bronze.read_transcripts(table).collect()}
     assert state == {("c2", 0): "keep"}, state
@@ -163,15 +165,14 @@ def test_out_of_order_older_update_cannot_resurrect_deleted_key(spark, tmp_path,
     raw = table.read(deltas="include", tombstones="include")
     assert raw.where((F.col("conv_id") == "c1") & (F.col("op") == "D")).count() >= 1
     # ... and compaction with a passed LSN horizon physically drops it
-    if mode == "mor":
-        bronze.apply_transcript_batch(
-            table,
-            spark.createDataFrame([("U", 30, 0, ts, "c2", 0, "user", "keep2", None, ts)], CHANGE_SCHEMA),
-            epoch=2,
-        )
-        compact(table, drop_tombstones_below_lsn=21)
-        raw2 = table.read(deltas="include", tombstones="include")
-        assert raw2.where(F.col("op") == "D").count() == 0
+    bronze.apply_transcript_batch(
+        table,
+        spark.createDataFrame([("U", 30, 0, ts, "c2", 0, "user", "keep2", None, ts)], CHANGE_SCHEMA),
+        epoch=2,
+    )
+    compact(table, drop_tombstones_below_lsn=21)
+    raw2 = table.read(deltas="include", tombstones="include")
+    assert raw2.where(F.col("op") == "D").count() == 0
 
 
 def test_empty_batch_commits_epoch(spark, tmp_path, changes):
@@ -181,3 +182,43 @@ def test_empty_batch_commits_epoch(spark, tmp_path, changes):
     assert res.applied and res.n_keys == 0
     res2 = bronze.apply_transcript_batch(table, empty, epoch=0)
     assert not res2.applied
+
+
+def test_apply_is_one_delta_append_over_one_exchange(spark, tmp_path, monkeypatch):
+    """The one apply path: the batch winners reach ``append_deltas``
+    marked pre-partitioned, through a plan whose only exchange is the
+    bucket window of the dedup — the partitioned delta write reuses it."""
+    import datetime as dt
+
+    from maritime_activity_reports_cdc_spark.sources.generator import CHANGE_SCHEMA
+
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+    ts = dt.datetime(2025, 1, 1)
+    batch = spark.createDataFrame(
+        [
+            ("I", 1, 0, ts, "c1", 0, "user", "a", None, ts),
+            ("U", 2, 0, ts, "c1", 0, "user", "b", None, ts),
+            ("I", 3, 0, ts, "c2", 0, "user", "c", None, ts),
+            ("D", 4, 0, ts, "c3", 0, None, None, None, None),
+        ],
+        CHANGE_SCHEMA,
+    )
+    calls = []
+    real = LakeTable.append_deltas
+
+    def spy(self, df, *args, **kwargs):
+        plan = df._jdf.queryExecution().executedPlan().treeString()
+        calls.append((plan, kwargs.get("pre_partitioned")))
+        return real(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "append_deltas", spy)
+    table = bronze.create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=4)
+    res = bronze.apply_transcript_batch(table, batch, epoch=0)
+    assert res.applied and (res.n_insert_update, res.n_delete) == (2, 1)
+    assert len(calls) == 1
+    plan, pre_partitioned = calls[0]
+    assert pre_partitioned is True
+    assert plan.count("Exchange") == 1, plan
+    # nothing was rewritten: the batch landed as delta files only
+    assert table.delta_partition_values()
+    assert not any(table.snapshot().files.values())

@@ -1,6 +1,7 @@
-"""Change-data-feed producer tests: per-commit classification on both
-apply modes, maintenance-commit neutrality, durable-offset tailing, and
-the round-trip law (replaying a table's own feed reproduces the table).
+"""Change-data-feed producer tests: per-commit classification (on fresh
+bronze tables and on ones carrying the legacy copy-on-write mode
+property), maintenance-commit neutrality, durable-offset tailing, and the
+round-trip law (replaying a table's own feed reproduces the table).
 
 Reference analog: the pipeline consumes Delta CDF with the same
 _change_type taxonomy (silver/cdf_processor.py:255-275 in
@@ -26,7 +27,7 @@ from maritime_activity_reports_cdc_spark.plans import bronze
 from maritime_activity_reports_cdc_spark.sources.generator import (
     generate_transcript_changes,
 )
-from tests.helpers import assert_states_equal, table_state
+from tests.helpers import BRONZE_ORIGINS, assert_states_equal, create_bronze, table_state
 
 CH_SCHEMA = (
     "op string, lsn long, op_ordinal int, commit_ts timestamp, conv_id string, "
@@ -65,12 +66,10 @@ def _changes_map(df):
     }
 
 
-@pytest.fixture(scope="module", params=["cow", "mor"])
+@pytest.fixture(scope="module", params=BRONZE_ORIGINS)
 def fed_table(request, spark, tmp_path_factory):
     root = tmp_path_factory.mktemp(f"cdf_{request.param}")
-    t = bronze.create_transcripts_table(
-        spark, str(root / "t"), n_buckets=4, apply_mode=request.param
-    )
+    t = create_bronze(spark, str(root / "t"), 4, request.param)
     bronze.apply_transcript_batch(t, _epoch0(spark), epoch=0)
     v1 = t.current_version()
     bronze.apply_transcript_batch(t, _epoch1(spark), epoch=1)
@@ -114,33 +113,14 @@ def test_range_spans_commits_with_versions(fed_table):
 
 def test_compaction_commit_emits_nothing(fed_table):
     t, _, v2 = fed_table
-    if t.properties().get("apply_mode") != "mor":
-        pytest.skip("compaction applies to MoR tables")
     assert compact(t)
     v3 = t.current_version()
     assert v3 > v2
     assert read_changes(t, v2, v3).count() == 0
 
 
-def test_cow_and_mor_feeds_agree(spark, tmp_path):
-    feeds = {}
-    for mode in ("cow", "mor"):
-        t = bronze.create_transcripts_table(
-            spark, str(tmp_path / mode), n_buckets=4, apply_mode=mode
-        )
-        bronze.apply_transcript_batch(t, _epoch0(spark), epoch=0)
-        bronze.apply_transcript_batch(t, _epoch1(spark), epoch=1)
-        feeds[mode] = {
-            (r.conv_id, r.turn_idx, r[CHANGE_TYPE_COL], r.text, r.role)
-            for r in read_changes(t, 0).collect()
-        }
-    assert feeds["cow"] == feeds["mor"]
-
-
 def test_tail_poll_ack_resume(spark, tmp_path):
-    t = bronze.create_transcripts_table(
-        spark, str(tmp_path / "t"), n_buckets=4, apply_mode="mor"
-    )
+    t = bronze.create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=4)
     ck = str(tmp_path / "offsets.json")
     tail = ChangeFeedTail(t, ck)
     assert tail.poll() is None  # only the create commit exists
@@ -165,22 +145,18 @@ def test_tail_poll_ack_resume(spark, tmp_path):
     assert ChangeFeedTail(t, ck).poll() is None
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_feed_round_trip_replicates_table(spark, tmp_path, mode):
+@pytest.mark.parametrize("origin", BRONZE_ORIGINS)
+def test_feed_round_trip_replicates_table(spark, tmp_path, origin):
     """The law that makes the feed a real medallion transport: consuming
     a table's own change feed and applying each polled batch to an empty
     replica reproduces the source state exactly."""
-    src = bronze.create_transcripts_table(
-        spark, str(tmp_path / "src"), n_buckets=4, apply_mode=mode
-    )
+    src = create_bronze(spark, str(tmp_path / "src"), 4, origin)
     log = generate_transcript_changes(
         spark, n_conversations=30, turns_per_conv=6,
         update_ratio=0.3, delete_ratio=0.1, duplicate_ratio=0.05, seed=17,
     )
     chunks = log.randomSplit([1.0, 1.0, 1.0], seed=3)
-    replica = bronze.create_transcripts_table(
-        spark, str(tmp_path / "dst"), n_buckets=4, apply_mode="cow"
-    )
+    replica = bronze.create_transcripts_table(spark, str(tmp_path / "dst"), n_buckets=4)
     tail = ChangeFeedTail(src, str(tmp_path / "off.json"))
     for i, chunk in enumerate(chunks):
         bronze.apply_transcript_batch(src, chunk, epoch=i)
@@ -198,9 +174,7 @@ def test_schema_evolution_null_backfills_old_commits(spark, tmp_path):
         generate_evolved_changes,
     )
 
-    t = bronze.create_transcripts_table(
-        spark, str(tmp_path / "t"), n_buckets=4, apply_mode="cow"
-    )
+    t = bronze.create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=4)
     bronze.apply_transcript_batch(t, _epoch0(spark), epoch=0)
     ev, _ = generate_evolved_changes(
         spark, n_conversations=5, turns_per_conv=3, seed=9
@@ -213,14 +187,12 @@ def test_schema_evolution_null_backfills_old_commits(spark, tmp_path):
     assert old_rows.where(F.col("lang").isNotNull()).count() == 0
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_stale_update_after_tombstone_emits_nothing(spark, tmp_path, mode):
+@pytest.mark.parametrize("origin", BRONZE_ORIGINS)
+def test_stale_update_after_tombstone_emits_nothing(spark, tmp_path, origin):
     """The feed must reproduce the apply's arbitration: an out-of-order
     update older than a retained tombstone neither resurrects the key
-    nor appears in the feed (on either apply mode)."""
-    t = bronze.create_transcripts_table(
-        spark, str(tmp_path / "t"), n_buckets=4, apply_mode=mode
-    )
+    nor appears in the feed."""
+    t = create_bronze(spark, str(tmp_path / "t"), 4, origin)
     bronze.apply_transcript_batch(
         t, _batch(spark, [("I", 100, 0, TS, "c1", 0, "system", "s0", None, TS)]),
         epoch=0,
@@ -246,9 +218,7 @@ def test_feed_relay_drives_downstream_medallion(spark, tmp_path):
     from maritime_activity_reports_cdc_spark.plans.pipeline import MedallionPipeline
     from maritime_activity_reports_cdc_spark.streaming.feedrelay import FeedRelay
 
-    up = bronze.create_transcripts_table(
-        spark, str(tmp_path / "up"), n_buckets=4, apply_mode="mor"
-    )
+    up = bronze.create_transcripts_table(spark, str(tmp_path / "up"), n_buckets=4)
     log = generate_transcript_changes(
         spark, n_conversations=25, turns_per_conv=6,
         update_ratio=0.3, delete_ratio=0.1, seed=19,
@@ -298,9 +268,7 @@ def test_cli_relay_verb_tails_upstream(spark, tmp_path):
     from maritime_activity_reports_cdc_spark import cli
     from maritime_activity_reports_cdc_spark.plans.pipeline import MedallionPipeline
 
-    up = bronze.create_transcripts_table(
-        spark, str(tmp_path / "up"), n_buckets=2, apply_mode="cow"
-    )
+    up = bronze.create_transcripts_table(spark, str(tmp_path / "up"), n_buckets=2)
     bronze.apply_transcript_batch(up, _epoch0(spark), epoch=0)
     bronze.apply_transcript_batch(up, _epoch1(spark), epoch=1)
     MedallionPipeline.create(spark, str(tmp_path / "down"), n_buckets=2)
@@ -393,9 +361,7 @@ def test_expired_range_raises_typed_error(spark, tmp_path):
         FeedExpiredError,
     )
 
-    t = bronze.create_transcripts_table(
-        spark, str(tmp_path / "t"), n_buckets=2, apply_mode="cow"
-    )
+    t = bronze.create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=2)
     for i in range(4):
         bronze.apply_transcript_batch(
             t, _batch(spark, [("U", 100 + i, 0, TS, "c1", 0, "system",
@@ -445,9 +411,7 @@ def test_feed_relay_bootstraps_after_retention(spark, tmp_path):
     from maritime_activity_reports_cdc_spark.plans.pipeline import MedallionPipeline
     from maritime_activity_reports_cdc_spark.streaming.feedrelay import FeedRelay
 
-    up = bronze.create_transcripts_table(
-        spark, str(tmp_path / "up"), n_buckets=2, apply_mode="cow"
-    )
+    up = bronze.create_transcripts_table(spark, str(tmp_path / "up"), n_buckets=2)
     down = MedallionPipeline.create(spark, str(tmp_path / "down"), n_buckets=2)
     relay = FeedRelay(up, down, str(tmp_path / "ck"), bootstrap_on_expiry=True)
 
@@ -501,9 +465,7 @@ def test_feed_relay_chains_two_hops_with_crashes(spark, tmp_path):
     from maritime_activity_reports_cdc_spark.plans.pipeline import MedallionPipeline
     from maritime_activity_reports_cdc_spark.streaming.feedrelay import FeedRelay
 
-    up = bronze.create_transcripts_table(
-        spark, str(tmp_path / "up"), n_buckets=4, apply_mode="mor"
-    )
+    up = bronze.create_transcripts_table(spark, str(tmp_path / "up"), n_buckets=4)
     mid = MedallionPipeline.create(spark, str(tmp_path / "mid"), n_buckets=4)
     out = MedallionPipeline.create(spark, str(tmp_path / "out"), n_buckets=4)
     relay1 = FeedRelay(up, mid, str(tmp_path / "ck1"))
@@ -573,9 +535,7 @@ def test_feed_relay_propagates_schema_evolution(spark, tmp_path):
     )
     from maritime_activity_reports_cdc_spark.streaming.feedrelay import FeedRelay
 
-    up = bronze.create_transcripts_table(
-        spark, str(tmp_path / "up"), n_buckets=2, apply_mode="cow"
-    )
+    up = bronze.create_transcripts_table(spark, str(tmp_path / "up"), n_buckets=2)
     down = MedallionPipeline.create(spark, str(tmp_path / "down"), n_buckets=2)
     relay = FeedRelay(up, down, str(tmp_path / "ck"))
 

@@ -57,8 +57,8 @@ def test_load_config_parses_and_validates(tmp_path):
     assert cfg.maintenance.target_file_rows == 5000
     assert cfg.maintenance.sort_by == ("conv_id", "turn_idx")
     assert cfg.replay.chunks == 3
-    # unset sections keep defaults
-    assert cfg.lake.bronze_mode == "mor"
+    # unset keys keep defaults
+    assert cfg.lake.compact_every == 8
 
     import pytest as _pytest
 
@@ -67,9 +67,10 @@ def test_load_config_parses_and_validates(tmp_path):
     with _pytest.raises(ValueError, match="unknown key"):
         load_config(str(bad))
     # a removed knob is an unknown key too
-    bad.write_text("[replay]\nadaptive_shuffle = true\n")
-    with _pytest.raises(ValueError, match="unknown key"):
-        load_config(str(bad))
+    for removed in ("[replay]\nadaptive_shuffle = true\n", "[lake]\nbronze_mode = \"mor\"\n"):
+        bad.write_text(removed)
+        with _pytest.raises(ValueError, match="unknown key"):
+            load_config(str(bad))
     bad2 = tmp_path / "bad2.toml"
     for mode in ("zebra", "mor"):  # misspelled, and the retired generation-MoR
         bad2.write_text(f"[lake]\nlayer_mode = \"{mode}\"\n")
@@ -112,7 +113,7 @@ def test_cli_config_file_end_to_end(spark, tmp_path, engine_zip):
     cfg = tmp_path / "engine.toml"
     cfg.write_text(
         "[session]\nshuffle_partitions = 8\n"
-        "[lake]\nn_buckets = 4\nbronze_mode = \"mor\"\nlayer_mode = \"auto\"\n"
+        "[lake]\nn_buckets = 4\nlayer_mode = \"auto\"\n"
         "derived_every = 2\n"
         "[replay]\nchunks = 2\n"
     )
@@ -185,8 +186,8 @@ def test_cli_setup_replay_status_compact_expire(spark, tmp_path, engine_zip):
     root = str(tmp_path / "lake")
 
     out = _cli(engine_zip, "setup", "--root", root, "--n-buckets", "4",
-               "--bronze-mode", "mor", "--layer-mode", "cow")
-    assert out["n_buckets"] == 4 and out["bronze_mode"] == "mor"
+               "--layer-mode", "cow")
+    assert out["n_buckets"] == 4 and "bronze_mode" not in out
 
     out = _cli(engine_zip, "replay", "--root", root, "--changes", changes_path,
                "--chunks", "2", "--checkpoint", str(tmp_path / "ck"))

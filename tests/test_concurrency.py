@@ -41,9 +41,7 @@ def _rows(spark, lsn0, conv, n=4, text="t"):
 def test_concurrent_delta_appends_both_commit(spark, tmp_path):
     """Two writers losing the CAS race to each other rebase and land:
     every delta file survives into the final snapshot, no writer errors."""
-    t = bronze.create_transcripts_table(
-        spark, str(tmp_path / "t"), n_buckets=2, apply_mode="mor"
-    )
+    t = bronze.create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=2)
     bronze.apply_transcript_batch(t, _rows(spark, 100, "c0"), epoch=0)
     v0 = t.current_version()
     errors: list[Exception] = []
@@ -78,9 +76,7 @@ def test_replace_validation_rejects_stale_compaction(spark, tmp_path):
     """A replace built against a snapshot whose partitions have since
     gained a delta must raise CommitConflict, never clobber the delta
     (the data-loss mode async compaction would otherwise have)."""
-    t = bronze.create_transcripts_table(
-        spark, str(tmp_path / "t"), n_buckets=1, apply_mode="mor"
-    )
+    t = bronze.create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=1)
     bronze.apply_transcript_batch(t, _rows(spark, 100, "c0"), epoch=0)
     bronze.apply_transcript_batch(
         t, _rows(spark, 200, "c0", text="v2-"), epoch=1
@@ -112,9 +108,7 @@ def test_compaction_retries_through_concurrent_ingest(spark, tmp_path):
     """Soak the real race: one thread ingests epochs while another runs
     compact() in a loop. Nothing errors, no update is lost, and the
     final resolved state equals last-writer-wins over every batch."""
-    t = bronze.create_transcripts_table(
-        spark, str(tmp_path / "t"), n_buckets=2, apply_mode="mor"
-    )
+    t = bronze.create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=2)
     bronze.apply_transcript_batch(t, _rows(spark, 0, "c0", n=6), epoch=0)
     errors: list[Exception] = []
     done = threading.Event()
@@ -169,7 +163,7 @@ def test_async_maintenance_replay_converges(spark, tmp_path):
     for tag in ("async", "inline"):
         pipe = MedallionPipeline.create(
             spark, str(tmp_path / tag), n_buckets=4,
-            bronze_mode="mor", compact_every=2, derived_every=2,
+            compact_every=2, derived_every=2,
         )
         rep = CheckpointedReplayer(pipe, str(tmp_path / f"ck_{tag}"))
         if tag == "inline":

@@ -31,7 +31,7 @@ def test_mid_replay_evolution(spark, tmp_path):
     cols_after = [f.name for f in table.schema().fields]
     assert cols_after[-2:] == ["tool_args", "lang"]
 
-    state = table.read()
+    state = bronze.read_transcripts(table)
     # pre-cutover rows (not later updated) null-backfill the new columns
     untouched_pre = state.where(F.col("lsn") < cutover)
     assert untouched_pre.where(F.col("lang").isNotNull()).count() == 0
@@ -48,7 +48,7 @@ def test_mid_replay_evolution(spark, tmp_path):
 
     # time travel: the pre-evolution snapshot still reads with the old schema
     old_snap_version = 1  # create=0, first apply=1
-    old = table.read(version=old_snap_version)
+    old = table.read(version=old_snap_version, deltas="include")
     assert "lang" not in old.columns
     changes.unpersist()
 
@@ -57,9 +57,7 @@ def test_evolution_in_mor_mode(spark, tmp_path):
     changes, cutover = generate_evolved_changes(
         spark, n_conversations=20, turns_per_conv=6, cutover_frac=0.5, seed=10,
     )
-    table = bronze.create_transcripts_table(
-        spark, str(tmp_path / "t"), n_buckets=4, apply_mode="mor"
-    )
+    table = bronze.create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=4)
     bronze.apply_transcript_batch(
         table, changes.where(F.col("lsn") < cutover).drop("tool_args", "lang"), epoch=0
     )

@@ -112,7 +112,8 @@ def test_commit_rewrites_only_touched_partition_manifests(spark, tmp_path):
     snap2 = t.snapshot()
     assert snap2.refs == snap.refs
     # resolved reads are unaffected by the ref indirection
-    assert t.read().where(F.col("conv_id") == "c0").collect()[0].text == "t0v2"
+    resolved = bronze.read_transcripts(t)
+    assert resolved.where(F.col("conv_id") == "c0").collect()[0].text == "t0v2"
 
 
 def test_relay_with_expiry_cadence_converges_and_bounds_metadata(spark, tmp_path):
@@ -131,8 +132,7 @@ def test_relay_with_expiry_cadence_converges_and_bounds_metadata(spark, tmp_path
     ref = MedallionPipeline.create(spark, str(tmp_path / "ref"), n_buckets=4)
     CheckpointedReplayer(ref, str(tmp_path / "ck1")).run(changes, n_chunks=6)
 
-    exp = MedallionPipeline.create(spark, str(tmp_path / "exp"), n_buckets=4,
-                                   bronze_mode="mor")
+    exp = MedallionPipeline.create(spark, str(tmp_path / "exp"), n_buckets=4)
     exp.expire_keep_last = 3
     CheckpointedReplayer(exp, str(tmp_path / "ck2")).run(changes, n_chunks=6)
 
@@ -157,7 +157,7 @@ def test_rewrite_resolves_mor_deltas_and_keeps_tombstones(spark, tmp_path):
         spark, n_conversations=25, turns_per_conv=6, update_ratio=0.4,
         delete_ratio=0.15, seed=29,
     ).cache()
-    t = bronze.create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=4, apply_mode="mor")
+    t = bronze.create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=4)
     bronze.replay_change_log(t, changes, n_chunks=4)
     assert t.delta_partition_values()
 
@@ -343,12 +343,13 @@ def test_bloom_index_skips_files_for_point_lookups(spark, tmp_path):
     got = pruned.where(F.col("conv_id").isin("c07", "c31"))
     assert got.count() == want.count() == 100
 
-    # files written after the index build are conservatively kept
+    # files written after the index build (here the apply's delta file)
+    # are conservatively kept
     late = [("I", 10**9, 0, t0, "c99", 0, "user", "late", None, t0)]
     bronze.apply_transcript_batch(
         t, spark.createDataFrame(late, CHANGE_SCHEMA), epoch=1
     )
-    seen = t.read_partitions([0], bloom_keys={"conv_id": ["c99"]})
+    seen = t.read_partitions([0], bloom_keys={"conv_id": ["c99"]}, deltas="include")
     assert seen.where(F.col("conv_id") == "c99").count() == 1
 
 

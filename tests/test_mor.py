@@ -1,5 +1,7 @@
-"""Merge-on-read mode: delta-append apply + read-time resolution +
-compaction must be byte-equivalent to copy-on-write."""
+"""Merge-on-read: delta-append apply + read-time resolution + compaction
+must equal the naive fold, and a bronze with deltas must feed the same
+derived layers as one folded to base files after every epoch (the shape
+the retired copy-on-write apply kept)."""
 
 from __future__ import annotations
 
@@ -37,7 +39,7 @@ def _state(df):
 def test_mor_replay_matches_oracle_and_cow(spark, tmp_path, changes):
     expected = naive_replay(changes)
 
-    mor = bronze.create_transcripts_table(spark, str(tmp_path / "mor"), n_buckets=8, apply_mode="mor")
+    mor = bronze.create_transcripts_table(spark, str(tmp_path / "mor"), n_buckets=8)
     bronze.replay_change_log(mor, changes, n_chunks=5)
     assert mor.delta_partition_values(), "deltas should exist before compaction"
     assert_states_equal(_state(read_merged(mor)), expected)
@@ -57,7 +59,7 @@ def test_mor_interleaved_compaction(spark, tmp_path, changes):
     """Compact between chunks — resolution across base+new deltas stays
     correct (tombstones must survive until folded)."""
     expected = naive_replay(changes)
-    t = bronze.create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=8, apply_mode="mor")
+    t = bronze.create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=8)
     lo, hi = changes.agg(F.min("lsn"), F.max("lsn")).collect()[0]
     step = (hi - lo) // 4 + 1
     for i in range(4):
@@ -69,11 +71,15 @@ def test_mor_interleaved_compaction(spark, tmp_path, changes):
 
 
 def test_mor_pipeline_matches_cow_pipeline(spark, tmp_path, changes):
-    cow = MedallionPipeline.create(spark, str(tmp_path / "cow"), n_buckets=4)
+    """Bronze compacted after every epoch (base files only, as a
+    copy-on-write bronze was) vs. deltas carried across epochs: silver
+    and gold agree."""
+    cow = MedallionPipeline.create(spark, str(tmp_path / "cow"), n_buckets=4, compact_every=1)
     CheckpointedReplayer(cow, str(tmp_path / "ck1")).run(changes, n_chunks=4)
+    assert cow.bronze.delta_partition_values() == []
 
     mor = MedallionPipeline.create(
-        spark, str(tmp_path / "mor"), n_buckets=4, bronze_mode="mor", compact_every=3
+        spark, str(tmp_path / "mor"), n_buckets=4, compact_every=3
     )
     CheckpointedReplayer(mor, str(tmp_path / "ck2")).run(changes, n_chunks=4)
 
@@ -97,7 +103,7 @@ def test_turn_incremental_silver_matches_cow(spark, tmp_path, changes):
 
     tn = MedallionPipeline.create(
         spark, str(tmp_path / "turn"), n_buckets=4,
-        bronze_mode="mor", layer_mode="turn", compact_every=0, compact_delta_depth=10**6,
+        layer_mode="turn", compact_every=0, compact_delta_depth=10**6,
     )
     rep = CheckpointedReplayer(tn, str(tmp_path / "ckt"))
     with pytest.raises(RuntimeError, match="injected crash"):

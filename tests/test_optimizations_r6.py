@@ -45,7 +45,7 @@ def test_bucketed_dedup_matches_agg_dedup(spark):
     changes = _changes(spark).withColumn(BUCKET_COL, bucket_expr("conv_id", 8))
     keys = ("conv_id", "turn_idx")
     order = ("lsn", "op_ordinal")
-    ref = dedup_latest(changes, keys, order, strategy="agg")
+    ref = dedup_latest(changes, keys, order)
     fused = dedup_latest_bucketed(changes, keys, order)
     ref_rows = {tuple(r) for r in ref.collect()}
     fused_rows = {tuple(r) for r in fused.collect()}

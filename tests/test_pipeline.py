@@ -9,6 +9,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
+from maritime_activity_reports_cdc_spark.plans import bronze as bronze_plan
 from maritime_activity_reports_cdc_spark.plans.pipeline import MedallionPipeline
 from maritime_activity_reports_cdc_spark.sources.generator import (
     CHANGE_SCHEMA,
@@ -18,6 +19,8 @@ from maritime_activity_reports_cdc_spark.streaming.runner import (
     CheckpointedReplayer,
     start_stream,
 )
+
+from tests.helpers import assert_states_equal, naive_replay, table_state
 
 T0 = dt.datetime(2025, 3, 1, 12, 0, 0)
 
@@ -252,7 +255,7 @@ def test_relay_never_writes_sqlconf(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(RuntimeConfig, "set", recording_set)
     p = MedallionPipeline.create(
         spark, str(tmp_path / "m"), n_buckets=4, layer_mode="auto",
-        bronze_mode="mor", compact_every=3, compact_delta_depth=10**6,
+        compact_every=3, compact_delta_depth=10**6,
     )
     p.async_derived = p.async_maintenance = True
     for epoch, batch in enumerate([load, *sparse]):
@@ -312,11 +315,11 @@ def test_checkpointed_replay_and_crash_restart(spark, tmp_path):
     report = CheckpointedReplayer(p2b, str(tmp_path / "ck2")).run(changes, n_chunks=6)
     assert report.epochs_skipped == 3 and report.epochs_run >= 1
 
-    for layer in ("bronze", "silver"):
-        a = getattr(p1, layer).read().orderBy("conv_id", "turn_idx").select(
+    for read in (lambda p: bronze_plan.read_transcripts(p.bronze), MedallionPipeline.read_silver):
+        a = read(p1).orderBy("conv_id", "turn_idx").select(
             "conv_id", "turn_idx", "role", "text", "tool", "ts"
         ).toPandas()
-        b = getattr(p2b, layer).read().orderBy("conv_id", "turn_idx").select(
+        b = read(p2b).orderBy("conv_id", "turn_idx").select(
             "conv_id", "turn_idx", "role", "text", "tool", "ts"
         ).toPandas()
         import pandas as pd
@@ -392,8 +395,10 @@ def test_prechunk_resume_with_grown_log(spark, tmp_path):
     CheckpointedReplayer(p_ref, str(tmp_path / "ckgref")).run(log2, n_chunks=1)
 
     cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    a = p_ref.bronze.read().orderBy("conv_id", "turn_idx").select(*cols).toPandas()
-    b = p2.bronze.read().orderBy("conv_id", "turn_idx").select(*cols).toPandas()
+    a = bronze_plan.read_transcripts(p_ref.bronze).orderBy("conv_id", "turn_idx") \
+        .select(*cols).toPandas()
+    b = bronze_plan.read_transcripts(p2.bronze).orderBy("conv_id", "turn_idx") \
+        .select(*cols).toPandas()
     pd.testing.assert_frame_equal(a, b, check_dtype=False)
     # the grown rows specifically must have landed
     assert b[b.text.str.startswith("UPDATED")].shape[0] == 20
@@ -523,16 +528,97 @@ def test_epoch_metrics_count_raw_batch_rows(spark, tmp_path):
 
 def test_create_and_load_reject_unsupported_modes(spark, tmp_path):
     """Unknown and retired modes fail at the engine boundary instead of
-    silently running as 'cow'."""
+    silently running as something else; bronze is merge-on-read only."""
     for kwargs in ({"layer_mode": "zebra"}, {"layer_mode": "mor"},
-                   {"bronze_mode": "turn"}):
+                   {"bronze_mode": "turn"}, {"bronze_mode": "cow"}):
         with pytest.raises(ValueError, match="_mode must be"):
             MedallionPipeline.create(spark, str(tmp_path / "bad"), n_buckets=2, **kwargs)
     assert not (tmp_path / "bad").exists()
 
     root = str(tmp_path / "lake")
-    p = MedallionPipeline.create(spark, root, n_buckets=2, with_gold=False, with_daily=False)
+    p = MedallionPipeline.create(spark, root, n_buckets=2, with_gold=False, with_daily=False,
+                                 bronze_mode="mor")
     # a lake written with the retired generation-MoR derived layers
     p.silver.set_properties({"layer_mode": "mor"})
     with pytest.raises(ValueError, match="'mor', which is no longer supported"):
         MedallionPipeline.load(spark, root)
+
+
+def test_overlapped_sparse_epoch_times_bronze_on_its_own_thread(spark, tmp_path, monkeypatch):
+    """Under the bronze/silver overlap each layer books its own wall:
+    a bronze apply that takes 0.5 s shows in ``bronze_secs`` even though
+    it ran on a pool thread beside the silver refresh."""
+    import threading
+    import time
+
+    from maritime_activity_reports_cdc_spark.plans import silver as silver_plan
+    from maritime_activity_reports_cdc_spark.sources.generator import (
+        generate_sparse_update_epochs,
+    )
+
+    load = generate_transcript_changes(
+        spark, n_conversations=20, turns_per_conv=4,
+        update_ratio=0.0, delete_ratio=0.0, seed=5,
+    )
+    sparse = generate_sparse_update_epochs(
+        spark, n_conversations=20, turns_per_conv=4, n_epochs=1,
+        convs_per_epoch=1, updates_per_conv=1, delete_frac=0.0,
+        window_frac=0.2, seed=5,
+    )
+    p = MedallionPipeline.create(spark, str(tmp_path / "m"), n_buckets=2, layer_mode="auto")
+    p.apply_epoch(load, epoch=0)
+
+    bronze_threads, turn_calls = [], []
+    real_apply = bronze_plan.apply_transcript_batch
+    real_turn = silver_plan.refresh_silver_turn
+
+    def slow_apply(*args, **kwargs):
+        bronze_threads.append(threading.current_thread())
+        time.sleep(0.5)
+        return real_apply(*args, **kwargs)
+
+    def turn(*args, **kwargs):
+        turn_calls.append(1)
+        return real_turn(*args, **kwargs)
+
+    monkeypatch.setattr(bronze_plan, "apply_transcript_batch", slow_apply)
+    monkeypatch.setattr(silver_plan, "refresh_silver_turn", turn)
+    m = p.apply_epoch(sparse, epoch=1)
+    assert turn_calls, "the epoch must take the sparse turn path"
+    assert bronze_threads and bronze_threads[0] is not threading.main_thread()
+    assert m.bronze_secs >= 0.5
+    assert m.silver_secs > 0 and m.total_secs >= m.bronze_secs
+
+
+def test_legacy_copy_on_write_lake_runs_merge_on_read(spark, tmp_path):
+    """A lake written when bronze had a copy-on-write mode — bronze
+    stamped ``apply_mode='cow'`` and holding base files only — loads
+    unchanged: later epochs append bronze deltas, ``compact_all`` folds
+    them, and bronze equals the naive fold of the log throughout."""
+    changes = generate_transcript_changes(
+        spark, n_conversations=20, turns_per_conv=5, update_ratio=0.3,
+        delete_ratio=0.1, duplicate_ratio=0.05, seed=31,
+    ).cache()
+    lo, hi = changes.agg(F.min("lsn"), F.max("lsn")).first()
+    step = (hi - lo) // 3 + 1
+    chunks = [changes.where((F.col("lsn") >= lo + i * step) & (F.col("lsn") < lo + (i + 1) * step))
+              for i in range(3)]
+    expected = naive_replay(changes)
+
+    root = str(tmp_path / "lake")
+    old = MedallionPipeline.create(spark, root, n_buckets=4)
+    old.apply_epoch(chunks[0], epoch=0)
+    old.bronze.set_properties({"apply_mode": "cow"})
+    old.compact_all()
+    assert old.bronze.delta_partition_values() == []
+
+    p = MedallionPipeline.load(spark, root)
+    for epoch in (1, 2):
+        p.apply_epoch(chunks[epoch], epoch=epoch)
+    assert p.bronze.delta_partition_values(), "epochs after load append bronze deltas"
+    assert_states_equal(table_state(bronze_plan.read_transcripts(p.bronze)), expected)
+    p.compact_all()
+    assert p.bronze.delta_partition_values() == []
+    assert_states_equal(table_state(p.bronze.read()), expected)
+    assert p.read_silver().count() == len(expected)
+    changes.unpersist()

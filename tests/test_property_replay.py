@@ -18,7 +18,7 @@ from hypothesis import strategies as st
 from maritime_activity_reports_cdc_spark.plans import bronze
 from maritime_activity_reports_cdc_spark.sources.generator import CHANGE_SCHEMA
 
-from tests.helpers import assert_states_equal, naive_replay, table_state
+from tests.helpers import BRONZE_ORIGINS, assert_states_equal, create_bronze, naive_replay, table_state
 
 T0 = dt.datetime(2025, 6, 1, 0, 0, 0)
 
@@ -51,20 +51,18 @@ def _rows(ops):
     return rows
 
 
-@pytest.mark.parametrize("apply_mode", ["cow", "mor"])
+@pytest.mark.parametrize("origin", BRONZE_ORIGINS)
 @settings(
     max_examples=12, deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(ops=_ops, n_chunks=st.integers(min_value=1, max_value=5))
-def test_replay_converges_to_naive_fold(spark, tmp_path_factory, ops, n_chunks, apply_mode):
+def test_replay_converges_to_naive_fold(spark, tmp_path_factory, ops, n_chunks, origin):
     changes = spark.createDataFrame(_rows(ops), CHANGE_SCHEMA)
     expected = naive_replay(changes)
 
     root = tmp_path_factory.mktemp("prop")
-    t = bronze.create_transcripts_table(
-        spark, str(root / "t"), n_buckets=2, apply_mode=apply_mode
-    )
+    t = create_bronze(spark, str(root / "t"), 2, origin)
     bronze.replay_change_log(t, changes, n_chunks=n_chunks)
     # replaying the identical log again must be absorbed (exactly-once)
     stats = bronze.replay_change_log(t, changes, n_chunks=n_chunks)
@@ -79,14 +77,14 @@ def test_replay_converges_to_naive_fold(spark, tmp_path_factory, ops, n_chunks, 
         assert_states_equal(actual, expected)
 
 
-@pytest.mark.parametrize("apply_mode", ["cow", "mor"])
+@pytest.mark.parametrize("origin", BRONZE_ORIGINS)
 @settings(
     max_examples=8, deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(ops=_ops, n_chunks=st.integers(min_value=1, max_value=4))
 def test_changefeed_round_trip_converges_to_naive_fold(
-    spark, tmp_path_factory, ops, n_chunks, apply_mode
+    spark, tmp_path_factory, ops, n_chunks, origin
 ):
     """Change-feed round-trip law under ADVERSARIAL logs: for any
     well-formed op interleaving and chunking, a replica built solely
@@ -103,12 +101,8 @@ def test_changefeed_round_trip_converges_to_naive_fold(
     expected = naive_replay(changes)
 
     root = tmp_path_factory.mktemp("cdfprop")
-    src = bronze.create_transcripts_table(
-        spark, str(root / "src"), n_buckets=2, apply_mode=apply_mode
-    )
-    replica = bronze.create_transcripts_table(
-        spark, str(root / "dst"), n_buckets=2, apply_mode="cow"
-    )
+    src = create_bronze(spark, str(root / "src"), 2, origin)
+    replica = bronze.create_transcripts_table(spark, str(root / "dst"), n_buckets=2)
     tail = ChangeFeedTail(src, str(root / "off.json"))
     chunks = changes.randomSplit([1.0] * n_chunks, seed=11)
     for i, chunk in enumerate(chunks):

@@ -57,7 +57,7 @@ def test_sparse_relay_epoch_compiles_almost_nothing(spark, tmp_path):
 
     p = MedallionPipeline.create(
         spark, str(tmp_path / "m"), n_buckets=4, layer_mode="auto",
-        bronze_mode="mor", compact_every=2, derived_every=1,
+        compact_every=2, derived_every=1,
     )
     p.async_derived = p.async_maintenance = True
     try:

@@ -1,11 +1,12 @@
 """Hot-key skew fixture (FIXTURES.md §5): a few mega-conversations must
-not break correctness, and both dedup strategies (partial-agg and salted
-two-phase window) agree on it."""
+not break correctness under either dedup strategy — the apply's and the
+compaction's bucket-window dedup, and the read-time partial-agg resolve."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from maritime_activity_reports_cdc_spark.operators.apply import compact, read_merged
 from maritime_activity_reports_cdc_spark.plans import bronze
 from maritime_activity_reports_cdc_spark.sources.generator import generate_transcript_changes
 
@@ -28,55 +29,14 @@ def test_skewed_replay_correct_under_both_strategies(spark, tmp_path):
     assert hot_sizes[0] > 20 * hot_sizes[1], "fixture must actually be skewed"
 
     expected = naive_replay(changes)
-    for strategy in ("agg", "window"):
-        t = bronze.create_transcripts_table(spark, str(tmp_path / strategy), n_buckets=4)
-        bronze.replay_change_log(t, changes, n_chunks=3, dedup_strategy=strategy)
-        assert_states_equal(table_state(t.read()), expected)
+    t = bronze.create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=4)
+    bronze.replay_change_log(t, changes, n_chunks=3)
+    # read-time resolve of the delta files: partial-agg dedup
+    assert_states_equal(table_state(read_merged(t)), expected)
+    # compaction folds them with the bucket-window dedup
+    assert compact(t)
+    assert_states_equal(table_state(t.read()), expected)
     changes.unpersist()
-
-
-def test_chunked_enrichment_matches_plain_on_mega_conversation(spark):
-    """A 10^5-turn conversation: the chunked two-phase window (bounded
-    rows-per-task) must produce byte-identical enrichment to the plain
-    per-conversation window, including across sparse turn_idx gaps and
-    chunk boundaries."""
-    import pandas as pd
-
-    from maritime_activity_reports_cdc_spark.plans import silver as sp
-
-    n = 100_000
-    base = spark.range(n).select(
-        F.lit("mega").alias("conv_id"),
-        # sparse, irregular turn indices (every 3rd missing)
-        (F.col("id") * 3 + F.pmod(F.col("id"), 2)).cast("int").alias("turn_idx"),
-        F.element_at(
-            F.array(F.lit("user"), F.lit("assistant"), F.lit("tool")),
-            (F.pmod(F.col("id"), 3) + 1).cast("int"),
-        ).alias("role"),
-        F.concat(F.lit("turn text "), F.col("id")).alias("text"),
-        F.lit(None).cast("string").alias("tool"),
-        F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id") * 7).alias("ts"),
-    )
-    small = spark.range(5).select(
-        F.lit("tiny").alias("conv_id"),
-        F.col("id").cast("int").alias("turn_idx"),
-        F.lit("user").alias("role"),
-        F.lit("hi there").alias("text"),
-        F.lit(None).cast("string").alias("tool"),
-        F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id")).alias("ts"),
-    )
-    df = base.unionByName(small)
-    cols = ["conv_id", "turn_idx", "gap_secs", "turn_gap", "is_role_transition", "n_tokens"]
-    plain = sp.enrich_conversations(df).select(cols).toPandas().sort_values(
-        ["conv_id", "turn_idx"]).reset_index(drop=True)
-    chunked = sp.enrich_conversations_chunked(df, chunk_size=7_000).select(cols).toPandas(
-    ).sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(plain, chunked, check_dtype=False)
-    # the chunked plan really does split the mega conversation: its
-    # heavy window partitions by (conv_id, chunk), giving ~n/chunk_size
-    # independent groups instead of 1
-    n_chunks = chunked[chunked.conv_id == "mega"].turn_idx.max() // (7_000 * 3)
-    assert n_chunks >= 10
 
 
 def test_minhash_lsh_salted_hot_bucket_same_pairs(spark):
