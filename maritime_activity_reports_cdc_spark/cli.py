@@ -195,14 +195,14 @@ def cmd_rewrite(args) -> dict:
     p = MedallionPipeline.load(spark, args.root)
     table = {"bronze": p.bronze, "silver": p.silver}[args.table]
     # Resolve semantics follow the table's layer mode (same dispatch as
-    # pipeline._maybe_compact_layers): turn-mode silver deltas are ordered
+    # pipeline._maybe_compact_layers): auto-mode silver deltas are ordered
     # by refresh generation — a re-enriched row keeps its (lsn, op_ordinal)
     # envelope, so resolving by lsn would tie-break arbitrarily and could
     # keep a stale image.
     mode = p.layer_mode if args.table == "silver" else "cow"
-    if mode in ("turn", "auto"):
+    if mode == "auto":
         order = ("_gen",)
-        # turn-mode tombstone retention is governed by _gen: refresh
+        # key-MoR silver tombstone retention is governed by _gen: refresh
         # generations are monotonic, so everything below the current
         # refresh epoch is safe to drop (matches compact_all)
         horizon = (
@@ -223,14 +223,6 @@ def cmd_rewrite(args) -> dict:
     out = {"table": args.table, "mode": mode, "partitions_rewritten": n}
     if zorder:
         out["zorder"] = list(zorder)
-    if args.bloom_cols:
-        from maritime_activity_reports_cdc_spark.operators.bloomskip import (
-            build_bloom_index,
-        )
-
-        out["bloom_index"] = build_bloom_index(
-            table, tuple(args.bloom_cols.split(","))
-        )
     return out
 
 
@@ -244,12 +236,12 @@ def cmd_changes(args) -> dict:
     spark = _spark(args)
     p = MedallionPipeline.load(spark, args.root)
     table = {"bronze": p.bronze, "silver": p.silver}[args.table]
-    # turn/auto silver deltas are ordered by refresh generation — a
+    # auto silver deltas are ordered by refresh generation — a
     # re-enriched row keeps its (lsn, op_ordinal) envelope, so the feed
     # must arbitrate by _gen exactly like cmd_rewrite resolves.
     order = (
         ("_gen",)
-        if args.table == "silver" and p.layer_mode in ("turn", "auto")
+        if args.table == "silver" and p.layer_mode == "auto"
         else ("lsn", "op_ordinal")
     )
     end = (
@@ -372,15 +364,9 @@ def build_parser() -> argparse.ArgumentParser:
              "(OPTIMIZE ZORDER analog) instead of the lexicographic sort",
     )
     rw.add_argument(
-        "--bloom-cols", default=None,
-        help="comma-separated columns: build a Bloom file-skipping index "
-             "(sidecar) after the rewrite, for point lookups on "
-             "non-sort columns",
-    )
-    rw.add_argument(
         "--drop-tombstones-below-lsn", type=int, default=None,
         help="tombstone horizon: an LSN for cow/key-MoR tables; a refresh "
-             "generation for turn-mode silver (default there: current epoch)",
+             "generation for auto-mode silver (default there: current epoch)",
     )
     return ap
 

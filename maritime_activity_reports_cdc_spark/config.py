@@ -16,7 +16,7 @@ Example (every key optional)::
 
     [lake]
     n_buckets = 256
-    layer_mode = "auto"     # cow | turn | auto (silver refresh plan)
+    layer_mode = "auto"     # cow | auto (silver refresh plan)
     compact_every = 8
     compact_delta_depth = 8
     derived_every = 2
@@ -32,7 +32,10 @@ Example (every key optional)::
 Unknown keys are errors: a file that still sets a removed knob fails
 with "unknown key". Removed so far: ``[replay] adaptive_shuffle`` (gone
 since the relay stopped narrowing its shuffles per epoch) and ``[lake]
-bronze_mode`` (gone since bronze became merge-on-read only).
+bronze_mode`` (gone since bronze became merge-on-read only). The
+forced ``turn`` layer mode is gone too: a file naming it fails
+validation, and a lake stamped ``turn`` loads as ``auto`` (the same
+key-MoR silver layout).
 """
 
 from __future__ import annotations
@@ -42,7 +45,7 @@ import tomllib
 
 # accepted values of the derived-layer mode; MedallionPipeline.create/load
 # and the CLI validate against these
-LAYER_MODES = ("cow", "turn", "auto")
+LAYER_MODES = ("cow", "auto")
 
 
 @dataclasses.dataclass

@@ -184,7 +184,9 @@ def read_merged(
         return _prj(table.read_partitions(values, bounds=bounds, deltas="exclude"))
     if _delta_fraction_small(snap, values):
         # Resolution must see tombstones: base D beats an OLDER delta U.
-        base = _prj(table.read_partitions(values, bounds=bounds, tombstones="include"))
+        base = _prj(table.read_partitions(
+            values, bounds=bounds, deltas="exclude", tombstones="include"
+        ))
         delta = _prj(table.read_partitions(values, deltas="only", tombstones="include"))
         contested_keys = delta.select(*keys).distinct()
         clean = base.join(F.broadcast(contested_keys), list(keys), "left_anti")
@@ -196,7 +198,9 @@ def read_merged(
         # bounds prune BASE files only (same contract as the split
         # branch): delta files carry narrow per-epoch key spans, and
         # pruning them would drop keys whose only rows live in deltas.
-        base = _prj(table.read_partitions(values, bounds=bounds, tombstones="include"))
+        base = _prj(table.read_partitions(
+            values, bounds=bounds, deltas="exclude", tombstones="include"
+        ))
         delta = _prj(table.read_partitions(values, deltas="only", tombstones="include"))
         resolved = dedup_latest(base.unionByName(delta), keys, order)
     return resolved.where((F.col("op").isNull()) | (F.col("op") != "D"))

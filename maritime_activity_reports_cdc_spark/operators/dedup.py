@@ -96,20 +96,6 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     )
 
 
-def word_shingles(text_col: str = "text", n: int = 3) -> F.Column:
-    """n-word shingle array (distinct) for a single row — higher-order
-    functions, fine for ad-hoc use. For corpus-scale shingling prefer
-    ``shingle_table`` (set-oriented JVM operators, O(tokens); no
-    per-row array rebuilds)."""
-    words = F.split(normalize_text(text_col), " ")
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
-            lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-        )
-    )
-
-
 def shingle_table(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3,
     distinct: bool = True,

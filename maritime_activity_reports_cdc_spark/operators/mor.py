@@ -5,7 +5,7 @@ Every derived-table write stamps its rows with the refresh epoch that
 produced them:
 
 - ``_gen`` (long, = refresh epoch) — the resolution order of turn-level
-  key-MoR silver (``layer_mode`` 'turn'/'auto'): a re-enriched row keeps
+  key-MoR silver (``layer_mode`` 'auto'): a re-enriched row keeps
   its bronze ``(lsn, op_ordinal)`` envelope, so readers, compaction and
   the change feed arbitrate by ``_gen`` instead;
 - ``_rank`` (int, always 1) — kept in the on-disk schema of existing

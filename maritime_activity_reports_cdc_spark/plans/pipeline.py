@@ -97,20 +97,15 @@ class MedallionPipeline:
     # compact_delta_depth).
     compact_every: int = 8
     # Silver refresh plan: 'cow' rewrites the affected buckets per epoch
-    # (read-optimized), 'turn' appends turn-level key-MoR deltas (O(batch)
-    # fat work per epoch), 'auto' picks turn or cow per epoch from the
-    # batch's key density. Gold tables are always rewritten per key group.
+    # (read-optimized); 'auto' picks per epoch from the batch's key
+    # density between that rewrite and the turn path, which appends
+    # turn-level key-MoR deltas (O(batch) fat work per epoch). Gold
+    # tables are always rewritten per key group.
     layer_mode: str = "cow"
     # Fold deltas into the base once any partition's delta DEPTH (files a
     # single-partition reader must resolve — the read-tax proxy) reaches
     # this bound; fires independently of the epoch cadence.
     compact_delta_depth: int = 8
-    # Overlap the bronze apply with the silver refresh: the refresh
-    # derives its state from the PRE-apply snapshot overlaid
-    # with the batch winners (associative dedup), so the two commits
-    # have no data dependency. EpochMetrics times each on its own
-    # thread (bronze_secs, silver_secs).
-    overlap_layers: bool = True
     # Refresh the derived gold layers every N epochs instead of every
     # epoch — the reference's OWN trigger design (silver fires at 30 s,
     # gold reports at 60 s, gold analytics at 90 s: models/config.py:44 +
@@ -249,6 +244,13 @@ class MedallionPipeline:
         # a legacy bronze 'apply_mode' property is ignored: a copy-on-write
         # bronze is a merge-on-read table with no deltas
         p.layer_mode = p.silver.properties().get("layer_mode", "cow")
+        if p.layer_mode == "turn":
+            # The retired forced-turn mode wrote the same key-MoR silver
+            # (retained tombstones) that auto writes, and auto's dense
+            # whole-bucket rewrite is correct on either: restamp it once,
+            # so every reader that dispatches on the property sees 'auto'.
+            p.silver.set_properties({"layer_mode": "auto"})
+            p.layer_mode = "auto"
         if p.layer_mode not in LAYER_MODES:
             raise ValueError(
                 f"lake at {root!r} uses layer_mode {p.layer_mode!r}, which is no "
@@ -355,13 +357,12 @@ class MedallionPipeline:
         # the bronze apply.)
         affected = silver_plan.compute_affected(batch, self.n_buckets)
         affected.dense = self._dense_batch(affected)
-        # The silver refresh (turn OR per-conversation) can derive its
+        # The silver refresh (turn OR per-conversation) derives its
         # inputs from the PRE-apply bronze snapshot overlaid with the
         # batch winners (associative max-by dedup), so bronze and silver
         # commit concurrently on two driver threads — their epoch guards
         # keep every crash interleaving resumable (bronze-behind-silver
         # resumes by re-applying bronze and skipping silver).
-        overlap = bool(self.overlap_layers and affected.buckets)
         dates = None
         if self.daily is not None:
             # Dates carried by the batch itself (inserts and ts
@@ -380,44 +381,25 @@ class MedallionPipeline:
         # rewrite, whose replace also folds outstanding turn deltas
         # (fresh rows come from bronze — the ground truth — and
         # dense means no survivors, so clearing deltas is safe).
-        use_turn = self.layer_mode == "turn" or (
-            self.layer_mode == "auto" and not affected.dense
+        # The turn path does O(batch) fat work per epoch (fresh rows from
+        # the batch, ≤1 successor per key); the other recomputes the
+        # affected conversations and rewrites their buckets.
+        refresh = (
+            silver_plan.refresh_silver_turn
+            if self.layer_mode == "auto" and not affected.dense
+            else silver_plan.refresh_silver_for_conversations
         )
 
         def _silver() -> None:
-            if use_turn:
-                # turn-level incremental refresh: O(batch) fat work per
-                # epoch (fresh rows from the batch, ≤1 successor per key)
-                silver_plan.refresh_silver_turn(
-                    self.bronze, self.silver, batch, affected,
-                    epoch, "silver_refresh", overlap,
-                )
-                return
-            # Fresh silver rows for the affected conversations. Under
-            # overlap they derive from pre-apply bronze ∪ batch winners,
-            # so this refresh runs concurrently with the bronze apply.
-            enriched = None
-            if affected.buckets:
-                enriched = silver_plan.build_enriched(
-                    self.bronze, affected,
-                    overlay_batch=batch if overlap else None,
-                )
-            silver_plan.refresh_silver_for_conversations(
-                self.bronze, self.silver, affected, epoch=epoch,
-                enriched=enriched,
-            )
+            refresh(self.bronze, self.silver, batch, affected, epoch)
 
-        if overlap:
-            from concurrent.futures import ThreadPoolExecutor
+        from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fb = pool.submit(_timed, "bronze", _bronze)
-                fs = pool.submit(_timed, "silver", _silver)
-                res = fb.result()
-                fs.result()
-        else:
-            res = _timed("bronze", _bronze)
-            _timed("silver", _silver)
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            fb = pool.submit(_timed, "bronze", _bronze)
+            fs = pool.submit(_timed, "silver", _silver)
+            res = fb.result()
+            fs.result()
         t2 = time.monotonic()
 
         self._pending_derived.append((epoch, affected, dates))
@@ -618,7 +600,7 @@ class MedallionPipeline:
                 # consumer re-read the thin parquet columns (measured
                 # ~11 s -> ~6 s on the 10M-row load flush).
                 and not affected.dense
-                and self.silver.properties().get("layer_mode") in ("turn", "auto")
+                and self.silver.properties().get("layer_mode") == "auto"
             ):
                 # Both gold consumers need the affected conversations'
                 # post-refresh silver rows. Resolve the THIN slice once
@@ -694,7 +676,7 @@ class MedallionPipeline:
         gold_plan.refresh_daily_full_from_index(self.conv_dates, self.daily, epoch=epoch)
 
     def _maybe_compact_layers(self, epoch: int) -> None:
-        if self.layer_mode not in ("turn", "auto"):
+        if self.layer_mode != "auto":
             return
         from maritime_activity_reports_cdc_spark.operators.apply import compact
 
@@ -717,7 +699,7 @@ class MedallionPipeline:
         self._wait_maintenance()
 
         compact(self.bronze)
-        if self.layer_mode in ("turn", "auto"):
+        if self.layer_mode == "auto":
             compact(
                 self.silver, keys=("conv_id", "turn_idx"), order=("_gen",),
                 drop_tombstones_below_lsn=self.silver.last_epoch("silver_refresh") + 1,

@@ -63,16 +63,15 @@ def create_silver_table(
     spark: SparkSession, path: str, n_buckets: int = 16, layer_mode: str = "cow"
 ) -> LakeTable:
     """``layer_mode``: 'cow' replaces affected buckets per refresh (read-
-    optimized); 'turn' appends turn-level key-MoR deltas (O(batch) fat
-    work); 'auto' picks turn vs cow PER EPOCH from the batch's key
-    density (sparse feeds take the O(batch) delta path, dense ones the
-    whole-bucket rewrite — see MedallionPipeline)."""
+    optimized); 'auto' picks PER EPOCH from the batch's key density:
+    sparse feeds append turn-level key-MoR deltas (O(batch) fat work),
+    dense ones take the whole-bucket rewrite — see MedallionPipeline."""
     props = {
         "n_buckets": n_buckets,
         "stats_cols": ["conv_id", "ts"],
         "layer_mode": layer_mode,
     }
-    if layer_mode in ("turn", "auto"):
+    if layer_mode == "auto":
         # turn-level key-MoR: delete tombstone rows live in the deltas;
         # lake-level reads must hide them
         props["retain_tombstones"] = True
@@ -95,7 +94,7 @@ def read_silver(
     shuffle otherwise (Catalyst cannot prune into the resolve)."""
     from maritime_activity_reports_cdc_spark.operators.apply import read_merged
 
-    if silver_table.properties().get("layer_mode") in ("turn", "auto"):
+    if silver_table.properties().get("layer_mode") == "auto":
         # key-based MoR: one winner per (conv_id, turn_idx) in refresh-
         # epoch order; delete tombstones hidden. (Reduces to a plain base
         # scan when no deltas are outstanding — auto mode's dense epochs
@@ -196,13 +195,6 @@ def enrich_conversations(df: DataFrame) -> DataFrame:
     )
 
 
-def affected_conversations(batch: DataFrame) -> DataFrame:
-    """Distinct conv_ids touched by a change batch (D2 analog,
-    ``gold/cdf_processor.py:233-237`` — but kept distributed, never
-    collect()ed to the driver; G2 fix)."""
-    return batch.select("conv_id").distinct()
-
-
 @dataclass
 class AffectedSet:
     """The per-epoch affected-conversation set, computed ONCE and shared
@@ -271,75 +263,56 @@ def compute_affected(batch: DataFrame, n_buckets: int) -> AffectedSet:
 def build_enriched(
     bronze_table: LakeTable,
     affected: AffectedSet,
-    overlay_batch: DataFrame | None = None,
+    batch: DataFrame,
 ) -> DataFrame:
     """Fresh silver rows for exactly the affected conversations, computed
-    from FULL bronze state (G6 fix). Shared by the silver write AND the
-    gold summary refresh — compute once, persist, feed both.
+    from FULL bronze state (G6 fix).
 
-    ``overlay_batch``: derive the post-apply state from the PRE-apply
-    snapshot overlaid with this batch's winners instead of reading the
-    committed result — max-by-(lsn, op_ordinal) dedup is associative,
-    so the overlay equals the post-apply resolve, tombstones stay
-    visible through it, and the silver refresh no longer depends on the
-    bronze COMMIT (the relay overlaps them on two driver threads)."""
+    The post-apply state is derived from the PRE-apply snapshot overlaid
+    with ``batch``'s winners instead of reading the committed result —
+    max-by-(lsn, op_ordinal) dedup is associative, so the overlay equals
+    the post-apply resolve, tombstones stay visible through it, and the
+    silver refresh does not depend on the bronze COMMIT (the relay
+    overlaps them on two driver threads)."""
     # Bronze and silver share the bucket transform, so the bronze scan
     # prunes to the same buckets; conv_id file bounds prune further.
-    # read_merged resolves bronze deltas when present (a plain base scan
-    # right after a compaction).
-    from maritime_activity_reports_cdc_spark.operators.apply import (
-        BUCKET_COL as _BK,
-        bucket_expr,
-        dedup_latest_bucketed,
-        read_merged,
-    )
+    from maritime_activity_reports_cdc_spark.operators.apply import dedup_latest_bucketed
 
+    n_buckets = int(bronze_table.properties()["n_buckets"])
     # dense mode recomputes EVERY conversation of the buckets — the
     # batch's conv-span bounds must not prune the source scan
-    if overlay_batch is not None:
-        n_buckets = int(bronze_table.properties()["n_buckets"])
-        raw = bronze_table.read_partitions(
-            affected.buckets,
-            bounds=None if affected.dense else affected.prune(),
-            deltas="include", tombstones="include",
-        )
-        batch_side = overlay_batch.withColumn(
-            _BK, bucket_expr("conv_id", n_buckets)
-        )
-        # The affected-conversation restriction is applied to the raw
-        # side EXPLICITLY, before the dedup: the optimizer can push a
-        # left-semi below a hash-agg whose grouping keys cover the join
-        # key, but NOT below a window partitioned by a different column
-        # — without this, the fused plan below would shuffle the whole
-        # pruned slice instead of the affected conversations' rows.
-        # Commutes with the dedup (the filter is conversation-granular,
-        # dedup is per-(conv, turn) — batch rows are all affected by
-        # construction). No-op in dense mode, where the whole bucket
-        # really is recomputed.
-        raw = affected.semi(raw)
-        # ONE bucket-partitioned window pass dedups raw ∪ batch (max-by
-        # dedup is associative, so pre-deduping the batch separately —
-        # the old plan — only added an extra key-shuffle of the fat
-        # rows; guide §2.4). The window's bucket exchange is then
-        # REUSED by the enrichment window below AND the partitioned
-        # write: the fat rows cross the wire exactly once per refresh
-        # (previously three exchanges: batch dedup, union dedup, bucket
-        # window).
-        # allowMissingColumns: either side may carry columns the other
-        # lacks (a batch introducing evolved columns, or table columns
-        # an older batch predates) — null-fill both ways so evolved
-        # values survive the overlay
-        bronze_slice = dedup_latest_bucketed(
-            raw.unionByName(batch_side, allowMissingColumns=True)
-        ).where(F.col("op").isNull() | (F.col("op") != "D"))
-    else:
-        bronze_slice = read_merged(
-            bronze_table, affected.buckets,
-            bounds=None if affected.dense else affected.prune(),
-        )
-        bronze_slice = affected.semi(bronze_slice)
-    # (overlay path: the semi restriction is already applied above the
-    # scan — re-applying it here would just build the broadcast twice)
+    raw = bronze_table.read_partitions(
+        affected.buckets,
+        bounds=None if affected.dense else affected.prune(),
+        deltas="include", tombstones="include",
+    )
+    batch_side = batch.withColumn(BUCKET_COL, bucket_expr("conv_id", n_buckets))
+    # The affected-conversation restriction is applied to the raw
+    # side EXPLICITLY, before the dedup: the optimizer can push a
+    # left-semi below a hash-agg whose grouping keys cover the join
+    # key, but NOT below a window partitioned by a different column
+    # — without this, the fused plan below would shuffle the whole
+    # pruned slice instead of the affected conversations' rows.
+    # Commutes with the dedup (the filter is conversation-granular,
+    # dedup is per-(conv, turn) — batch rows are all affected by
+    # construction). No-op in dense mode, where the whole bucket
+    # really is recomputed.
+    raw = affected.semi(raw)
+    # ONE bucket-partitioned window pass dedups raw ∪ batch (max-by
+    # dedup is associative, so pre-deduping the batch separately —
+    # the old plan — only added an extra key-shuffle of the fat
+    # rows; guide §2.4). The window's bucket exchange is then
+    # REUSED by the enrichment window below AND the partitioned
+    # write: the fat rows cross the wire exactly once per refresh
+    # (previously three exchanges: batch dedup, union dedup, bucket
+    # window).
+    # allowMissingColumns: either side may carry columns the other
+    # lacks (a batch introducing evolved columns, or table columns
+    # an older batch predates) — null-fill both ways so evolved
+    # values survive the overlay
+    bronze_slice = dedup_latest_bucketed(
+        raw.unionByName(batch_side, allowMissingColumns=True)
+    ).where(F.col("op").isNull() | (F.col("op") != "D"))
     # Window by the storage bucket so the silver write reuses this one
     # exchange instead of re-shuffling the fat rows.
     return quality_exprs(enrich_conversations(bronze_slice))
@@ -352,7 +325,6 @@ def refresh_silver_turn(
     affected: AffectedSet,
     epoch: int,
     source: str = "silver_refresh",
-    pre_apply_batch: bool = False,
 ) -> bool:
     """TURN-level incremental silver refresh — epoch cost O(batch) in the
     fat-text dimension, even when every conversation is touched.
@@ -370,7 +342,10 @@ def refresh_silver_turn(
       from current silver.
 
     Window context (each affected turn's predecessor values) comes from
-    one THIN pass over post-apply bronze (4 columns, text never read).
+    one THIN pass over post-apply bronze state (4 columns, text never
+    read), derived like ``build_enriched``'s: the pre-apply snapshot
+    overlaid with the batch winners, so this refresh, too, runs
+    concurrently with the bronze apply.
     Fresh rows + delete tombstones append as one key-MoR delta ordered
     by the refresh epoch; reads resolve via read_merged and compaction
     folds (tombstones dropped — generations are monotonic, so no
@@ -384,7 +359,6 @@ def refresh_silver_turn(
         bucket_expr,
         dedup_latest,
         dedup_latest_bucketed,
-        read_merged,
     )
 
     if silver_table.last_epoch(source) >= epoch:
@@ -411,16 +385,12 @@ def refresh_silver_turn(
         winners = dedup_latest(batch.select(*thin_w)).persist()
 
     # 1. thin window pass over post-apply bronze state: predecessor
-    # values for every live turn of the affected buckets.
-    #
-    # ``pre_apply_batch``: derive the SAME state from the pre-apply
-    # snapshot overlaid with this batch's winners — max-by-(lsn,
-    # op_ordinal) is associative, so dedup(pre-resolved ∪ winners) ==
-    # the post-apply resolve. Tombstones must stay visible through the
+    # values for every live turn of the affected buckets, derived from
+    # the pre-apply snapshot overlaid with this batch's winners — max-by-
+    # (lsn, op_ordinal) is associative, so dedup(pre-resolved ∪ winners)
+    # == the post-apply resolve. Tombstones must stay visible through the
     # overlay (a hidden pre-state delete would let a stale batch update
-    # resurrect the key). This removes the dependency on the bronze
-    # COMMIT, letting the relay run the bronze apply and this refresh
-    # concurrently.
+    # resurrect the key).
     # The window context below only ever feeds turns of AFFECTED
     # conversations (step 2 semi-joins to batch keys, which share the
     # batch's conv_ids by construction), and lag() partitions by
@@ -433,29 +403,24 @@ def refresh_silver_turn(
     # scan) and a no-op in dense mode, where the whole bucket really is
     # affected.
     thin_cols = ["conv_id", "turn_idx", "ts", "role", "op", "lsn", "op_ordinal"]
-    if pre_apply_batch:
-        pre = affected.semi(
-            bronze_table.read_partitions(
-                affected.buckets, bounds=affected.prune(),
-                deltas="include", tombstones="include",
-            ).select(*thin_cols)
+    pre = affected.semi(
+        bronze_table.read_partitions(
+            affected.buckets, bounds=affected.prune(),
+            deltas="include", tombstones="include",
+        ).select(*thin_cols)
+    )
+    # Dedup inside a conv_id-partitioned window (guide §2.4): the lag()
+    # pass below partitions by conv_id too, so the one exchange serves
+    # both — previously the key-hash dedup exchange was immediately
+    # followed by a second conv_id exchange for the window. Per-window-
+    # group stays one conversation, exactly the bound the lag window
+    # already imposes.
+    thin = (
+        dedup_latest_bucketed(
+            pre.unionByName(winners.select(*thin_cols)), bucket_col="conv_id"
         )
-        # Dedup inside a conv_id-partitioned window (guide §2.4): the
-        # lag() pass below partitions by conv_id too, so the one
-        # exchange serves both — previously the key-hash dedup exchange
-        # was immediately followed by a second conv_id exchange for the
-        # window. Per-window-group stays one conversation, exactly the
-        # bound the lag window already imposes.
-        thin = (
-            dedup_latest_bucketed(
-                pre.unionByName(winners.select(*thin_cols)), bucket_col="conv_id"
-            )
-            .where("op IS NULL OR op != 'D'")
-        )
-    else:
-        thin = affected.semi(
-            read_merged(bronze_table, affected.buckets, bounds=affected.prune())
-        )
+        .where("op IS NULL OR op != 'D'")
+    )
     # One selectExpr builds all three lags (hot path: SQL strings keep
     # the per-epoch driver plan-construction serial cost down — see
     # dedup_latest docstring; Catalyst collapses the shared window spec)
@@ -616,7 +581,7 @@ def read_silver_for_affected(
     from maritime_activity_reports_cdc_spark.operators.apply import dedup_latest
 
     mode = silver_table.properties().get("layer_mode")
-    if affected.dense or mode not in ("turn", "auto"):
+    if affected.dense or mode != "auto":
         return affected.semi(
             read_silver(silver_table, affected.buckets,
                         bounds=None if affected.dense else affected.prune(),
@@ -624,7 +589,8 @@ def read_silver_for_affected(
         )
     cols = list(dict.fromkeys(["conv_id", "turn_idx", "op", "_gen", *columns]))
     base = silver_table.read_partitions(
-        affected.buckets, bounds=affected.prune(), tombstones="include"
+        affected.buckets, bounds=affected.prune(), deltas="exclude",
+        tombstones="include",
     ).select(*cols)
     delta = silver_table.read_partitions(
         affected.buckets, deltas="only", tombstones="include"
@@ -668,12 +634,13 @@ def union_affected(sets: list[AffectedSet]) -> AffectedSet:
 def refresh_silver_for_conversations(
     bronze_table: LakeTable,
     silver_table: LakeTable,
+    batch: DataFrame,
     affected: AffectedSet,
     epoch: int,
     source: str = "silver_refresh",
-    enriched: DataFrame | None = None,
 ) -> bool:
-    """Swap in the affected conversations' recomputed silver rows:
+    """Swap in the affected conversations' recomputed silver rows
+    (``build_enriched`` over pre-apply bronze overlaid with ``batch``):
     survivors of the affected buckets are rewritten alongside the fresh
     rows (read-optimized, write cost ∝ affected buckets). Returns False
     on an idempotent epoch skip."""
@@ -684,10 +651,8 @@ def refresh_silver_for_conversations(
     if not affected.buckets:
         silver_table.commit_epoch_noop(source, epoch, {"rows": 0})
         return True
-    if enriched is None:
-        enriched = build_enriched(bronze_table, affected)
 
-    enriched = mor.stamp_generation(enriched, epoch)
+    enriched = mor.stamp_generation(build_enriched(bronze_table, affected, batch), epoch)
     target_cols = [f.name for f in silver_table.schema().fields]
     aligned = enriched.select(*[
         F.col(c) if c in enriched.columns else F.lit(None).alias(c) for c in target_cols
@@ -695,9 +660,9 @@ def refresh_silver_for_conversations(
     # Auto-mode tables can carry outstanding turn-level deltas from
     # earlier sparse epochs; survivors must then be RESOLVED state, not
     # base files (the replace clears the replaced buckets' delta files).
-    # The pipeline only routes DENSE batches here (survivors -> None), so
-    # this read is a safety net for direct callers; pure-cow tables have
-    # no deltas and take the plain base scan.
+    # An auto pipeline routes only DENSE batches here (survivors -> None),
+    # so this read is a safety net for direct callers; cow tables have no
+    # deltas and take the plain base scan.
     snap = silver_table.snapshot()
     has_deltas = any(snap.delta_files.get(str(b)) for b in affected.buckets)
     base = (

@@ -1,9 +1,7 @@
-"""Human-facing observability: structured logging + data-quality report.
+"""Human-facing observability: data-quality and pipeline reports.
 
-Functional rebuild of the reference's ``utils/logging.py`` (structlog
-JSON logging) and ``utils/data_quality.py:167-247`` (quality-report
-object) — stdlib-only (no structlog dependency): a JSON log formatter
-and a one-pass quality report.
+Functional rebuild of the reference's ``utils/data_quality.py:167-247``
+(quality-report object) as a one-pass quality report.
 
 Shape note vs the reference: ``get_quality_report`` there runs one
 ``count()`` job PER key field plus separate agg/groupBy jobs. Here the
@@ -14,43 +12,8 @@ regardless of field count.
 
 from __future__ import annotations
 
-import json
-import logging
-from datetime import datetime, timezone
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-class JsonFormatter(logging.Formatter):
-    def format(self, record: logging.LogRecord) -> str:
-        out = {
-            "ts": datetime.fromtimestamp(record.created, tz=timezone.utc).isoformat(),
-            "level": record.levelname,
-            "logger": record.name,
-            "msg": record.getMessage(),
-        }
-        if record.exc_info:
-            out["exc"] = self.formatException(record.exc_info)
-        return json.dumps(out)
-
-
-def setup_logging(level: str = "INFO", log_file: str | None = None,
-                  json_logs: bool = True) -> None:
-    """Configure engine logging (reference ``utils/logging.py:9-56``):
-    JSON lines by default so log shippers parse them without grok."""
-    handlers: list[logging.Handler] = [logging.StreamHandler()]
-    if log_file:
-        handlers.append(logging.FileHandler(log_file))
-    fmt = JsonFormatter() if json_logs else logging.Formatter(
-        "%(asctime)s %(levelname)s %(name)s %(message)s"
-    )
-    root = logging.getLogger("maritime_activity_reports_cdc_spark")
-    root.setLevel(getattr(logging, level.upper()))
-    root.handlers = []
-    for h in handlers:
-        h.setFormatter(fmt)
-        root.addHandler(h)
 
 
 def quality_report(

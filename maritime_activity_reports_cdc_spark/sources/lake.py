@@ -282,18 +282,22 @@ class LakeTable:
     # reads
     # ------------------------------------------------------------------
     def read(
-        self, version: int | None = None, deltas: str = "exclude", tombstones: str = "exclude"
+        self, version: int | None = None, deltas: str | None = None,
+        tombstones: str = "exclude",
     ) -> DataFrame:
         """Full-table base scan at a snapshot (time travel when version
-        given). ``deltas``: 'exclude' (base only — correct for CoW tables),
-        'include' (base ∪ delta rows, unresolved), 'only'. MoR callers
-        resolve via ``operators.apply.read_merged``.
+        given). ``deltas``: 'exclude' (base only), 'include' (base ∪ delta
+        rows, unresolved), 'only'. Left unset, the read is base-only and
+        raises if the snapshot has outstanding delta files: a base-only
+        read of a merge-on-read table is stale. MoR callers resolve via
+        ``operators.apply.read_merged``.
 
         ``tombstones``: on tables with ``retain_tombstones`` set, persisted
         delete rows (op='D') are invisible by default — pass 'include' to
         see them (resolution paths must)."""
         snap = self.snapshot(version)
-        df = self._read_files(snap, self._file_list(snap, snap.files.keys(), deltas))
+        keys = snap.files.keys() | snap.delta_files.keys()
+        df = self._read_files(snap, self._file_list(snap, keys, deltas))
         return self._hide_tombstones(snap, df, tombstones)
 
     def _hide_tombstones(self, snap: Snapshot, df: DataFrame, tombstones: str) -> DataFrame:
@@ -306,43 +310,39 @@ class LakeTable:
         values: Iterable[Any],
         version: int | None = None,
         bounds: dict[str, tuple] | None = None,
-        deltas: str = "exclude",
+        deltas: str | None = None,
         tombstones: str = "exclude",
-        bloom_keys: dict[str, Iterable[Any]] | None = None,
     ) -> DataFrame:
-        """Manifest-level partition pruning: scan only the named partitions.
-
-        This is the scan side of the copy-on-write merge — the file list
-        never touches partitions outside the change batch, so apply cost
-        scales with batch footprint, not table size.
+        """Manifest-level partition pruning: scan only the named partitions,
+        so a refresh costs its batch footprint, not the table size.
+        ``deltas`` as in :meth:`read`: unset raises if a named partition
+        has outstanding delta files.
 
         ``bounds`` adds file-level pruning: {col: (lo, hi)} keeps only
         files whose recorded [min, max] for ``col`` intersects [lo, hi]
         (files without stats are kept). With time-correlated ingest this
         skips the bulk of a bucket's historical files when refreshing
         recently-active keys.
-
-        ``bloom_keys`` adds point-lookup pruning on columns the files
-        are NOT clustered by: {col: [values]} drops files whose Bloom
-        filter (see ``operators.bloomskip.build_bloom_index``) proves
-        every probed value absent; files without filters are kept.
         """
         snap = self.snapshot(version)
         wanted = {_part_key(v) for v in values}
         files = self._file_list(snap, wanted, deltas)
         if bounds:
             files = [f for f in files if _stats_overlap(snap.file_stats.get(f), bounds)]
-        if bloom_keys:
-            from maritime_activity_reports_cdc_spark.operators.bloomskip import (
-                prune_files_by_bloom,
-            )
-
-            files = prune_files_by_bloom(self, files, bloom_keys)
         return self._hide_tombstones(snap, self._read_files(snap, files), tombstones)
 
     @staticmethod
-    def _file_list(snap: Snapshot, keys: Iterable[str], deltas: str) -> list[str]:
+    def _file_list(snap: Snapshot, keys: Iterable[str], deltas: str | None) -> list[str]:
         keys = set(keys)
+        if deltas is None:
+            if any(snap.delta_files.get(k) for k in keys):
+                raise ValueError(
+                    f"snapshot v{snap.version} has outstanding delta files in the "
+                    "partitions read: a base-only read would be stale. Resolve "
+                    "with operators.apply.read_merged, or pass deltas='exclude' "
+                    "(base only) or 'include' (unresolved rows)"
+                )
+            deltas = "exclude"
         out: list[str] = []
         if deltas in ("exclude", "include"):
             out += [f for k, fl in snap.files.items() if k in keys for f in fl]
@@ -581,37 +581,6 @@ class LakeTable:
                     removed_files += 1
                 except FileNotFoundError:
                     pass
-        # Bloom sidecars/shard blobs referenced only by expired snapshots
-        # — plus orphan shards from failed/speculative build tasks and
-        # stale .tmp files — leak a full filter byte volume per rebuild
-        # without this (judge ADVICE r5 #1).
-        # A kept sidecar that fails to parse leaves its live shards
-        # unknown: skip the bloom pass entirely rather than delete them.
-        live_bloom: set[str] | None = set()
-        for v in keep:
-            ref = self.snapshot(v).properties.get("bloom_index")
-            if isinstance(ref, dict) and ref.get("sidecar"):
-                from maritime_activity_reports_cdc_spark.operators.bloomskip import (
-                    referenced_sidecar_files,
-                )
-
-                files = referenced_sidecar_files(self._manifest_path(), ref["sidecar"])
-                if files is None:
-                    live_bloom = None
-                    break
-                live_bloom |= files
-        bloom_names = os.listdir(self._manifest_path()) if live_bloom is not None else []
-        for name in bloom_names:
-            if not name.startswith("bloom-") or name in live_bloom:
-                continue
-            try:
-                removed_bytes += os.path.getsize(
-                    os.path.join(self._manifest_path(), name)
-                )
-                os.unlink(os.path.join(self._manifest_path(), name))
-                removed_files += 1
-            except FileNotFoundError:
-                pass
         return {
             "manifests_removed": len(expire),
             "files_removed": removed_files,
@@ -624,7 +593,7 @@ class LakeTable:
         both expose this). A value of None removes the key. Property
         changes that alter READ semantics (e.g. ``layer_mode``) are the
         caller's responsibility to apply only on states where the modes
-        agree (a delta-free table reads identically in cow/turn/auto).
+        agree (a delta-free table reads identically in cow/auto).
         Metadata-only: a lost CAS race rebases and retries."""
         for attempt in range(_MAX_COMMIT_RETRIES + 1):
             parent = self.snapshot()

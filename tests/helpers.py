@@ -52,3 +52,12 @@ def create_bronze(spark, path: str, n_buckets: int, origin: str = "mor"):
     if origin == "cow":
         table.set_properties({"apply_mode": "cow"})
     return table
+
+
+def shuffle_exchanges(df: DataFrame) -> int:
+    """Shuffle exchanges in ``df``'s executed plan (broadcast exchanges
+    and reused exchanges are not counted)."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().treeString()
+    return len(re.findall(r"(?<![A-Za-z])Exchange\b", plan))

@@ -20,6 +20,7 @@ from tests.helpers import (
     assert_states_equal,
     create_bronze,
     naive_replay,
+    shuffle_exchanges,
     table_state,
 )
 
@@ -160,7 +161,7 @@ def test_out_of_order_older_update_cannot_resurrect_deleted_key(spark, tmp_path,
     state = {(r.conv_id, r.turn_idx): r.text for r in bronze.read_transcripts(table).collect()}
     assert state == {("c2", 0): "keep"}, state
     # and lake-level reads never surface the tombstone row
-    assert table.read().where(F.col("conv_id") == "c1").count() == 0
+    assert table.read(deltas="exclude").where(F.col("conv_id") == "c1").count() == 0
     # the tombstone IS physically present until the horizon passes ...
     raw = table.read(deltas="include", tombstones="include")
     assert raw.where((F.col("conv_id") == "c1") & (F.col("op") == "D")).count() >= 1
@@ -222,3 +223,58 @@ def test_apply_is_one_delta_append_over_one_exchange(spark, tmp_path, monkeypatc
     # nothing was rewritten: the batch landed as delta files only
     assert table.delta_partition_values()
     assert not any(table.snapshot().files.values())
+
+
+def test_bucketed_compaction_is_one_replace_over_one_exchange(spark, tmp_path, monkeypatch):
+    """Compacting a bucket-partitioned bronze folds base ∪ deltas through
+    one shuffle: the bucket window of the dedup, which the partitioned
+    replace reuses (it is marked pre-partitioned)."""
+    from maritime_activity_reports_cdc_spark.operators.apply import compact
+
+    changes = generate_transcript_changes(
+        spark, n_conversations=12, turns_per_conv=4, update_ratio=0.3,
+        delete_ratio=0.1, seed=43,
+    )
+    table = bronze.create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=4)
+    bronze.replay_change_log(table, changes, n_chunks=2)
+    assert table.delta_partition_values()
+
+    calls = []
+    real = LakeTable.replace_partitions
+
+    def spy(self, df, *args, **kwargs):
+        calls.append((shuffle_exchanges(df), kwargs.get("pre_partitioned")))
+        return real(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "replace_partitions", spy)
+    assert compact(table) is True
+    assert calls == [(1, True)]
+    assert table.delta_partition_values() == []
+
+
+def test_base_only_read_of_a_merge_on_read_table_raises(spark, tmp_path):
+    """A read that leaves ``deltas`` unset refuses partitions with
+    outstanding delta files instead of returning the stale base; an
+    explicit ``deltas='exclude'`` still reads the base, and the resolved
+    read returns the applied rows."""
+    import datetime as dt
+
+    from maritime_activity_reports_cdc_spark.sources.generator import CHANGE_SCHEMA
+
+    ts = dt.datetime(2025, 1, 1)
+    batch = spark.createDataFrame(
+        [("I", 1, 0, ts, "c1", 0, "user", "a", None, ts),
+         ("I", 2, 0, ts, "c2", 0, "user", "b", None, ts)],
+        CHANGE_SCHEMA,
+    )
+    table = bronze.create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=4)
+    bronze.apply_transcript_batch(table, batch, epoch=0)
+    with_deltas = table.delta_partition_values()
+    assert with_deltas
+    with pytest.raises(ValueError, match="read_merged"):
+        table.read()
+    with pytest.raises(ValueError, match="read_merged"):
+        table.read_partitions(with_deltas)
+    assert table.read(deltas="exclude").count() == 0
+    assert table.read_partitions(with_deltas, deltas="exclude").count() == 0
+    assert sorted(r.conv_id for r in bronze.read_transcripts(table).collect()) == ["c1", "c2"]

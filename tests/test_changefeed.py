@@ -290,8 +290,9 @@ def test_cli_relay_verb_tails_upstream(spark, tmp_path):
     assert got[("c2", 0)] == "new"
 
 
-def test_silver_turn_mode_feed_arbitrates_by_generation(spark, tmp_path):
-    """Change feed over a TURN-mode silver table: deltas are re-enriched
+def test_silver_turn_mode_feed_arbitrates_by_generation(spark, tmp_path, monkeypatch):
+    """Change feed over silver written by the turn path (auto mode with
+    every epoch routed sparse): deltas are re-enriched
     rows whose (lsn, op_ordinal) envelope is unchanged — only _gen
     distinguishes images — so the feed must resolve by generation (the
     cmd_rewrite lesson applied to the feed). A ts-moving update must
@@ -302,9 +303,10 @@ def test_silver_turn_mode_feed_arbitrates_by_generation(spark, tmp_path):
     from maritime_activity_reports_cdc_spark.plans.pipeline import MedallionPipeline
     from maritime_activity_reports_cdc_spark.sources.generator import CHANGE_SCHEMA
 
+    monkeypatch.setattr(MedallionPipeline, "_dense_batch", lambda self, affected: False)
     T0 = dt.datetime(2025, 5, 1, 12, 0, 0)
     p = MedallionPipeline.create(
-        spark, str(tmp_path / "lake"), n_buckets=2, layer_mode="turn",
+        spark, str(tmp_path / "lake"), n_buckets=2, layer_mode="auto",
         compact_every=10_000,
     )
     rows0 = [

@@ -129,8 +129,9 @@ def test_cli_config_file_end_to_end(spark, tmp_path, engine_zip):
     assert out["tables"]["bronze"]["version"] > 0
 
 
-def test_cmd_rewrite_turn_mode_resolves_by_generation(spark, tmp_path):
-    """`rewrite` on a turn-mode silver table must resolve deltas by _gen:
+def test_cmd_rewrite_turn_mode_resolves_by_generation(spark, tmp_path, monkeypatch):
+    """`rewrite` on silver written by the turn path (auto mode with every
+    epoch routed sparse) must resolve deltas by _gen:
     a re-enriched successor row carries the SAME (lsn, op_ordinal)
     envelope as the stale image, so resolving by lsn tie-breaks
     arbitrarily and can keep the stale enrichment (round-2 review)."""
@@ -141,9 +142,10 @@ def test_cmd_rewrite_turn_mode_resolves_by_generation(spark, tmp_path):
     from maritime_activity_reports_cdc_spark.plans.pipeline import MedallionPipeline
     from maritime_activity_reports_cdc_spark.sources.generator import CHANGE_SCHEMA
 
+    monkeypatch.setattr(MedallionPipeline, "_dense_batch", lambda self, affected: False)
     T0 = dt.datetime(2025, 3, 1, 12, 0, 0)
     root = str(tmp_path / "lake")
-    p = MedallionPipeline.create(spark, root, n_buckets=2, layer_mode="turn",
+    p = MedallionPipeline.create(spark, root, n_buckets=2, layer_mode="auto",
                                  compact_every=10_000)
     rows0 = [
         ("I", 1, 0, T0, "cA", 0, "system", "sys", None, T0),
@@ -161,10 +163,10 @@ def test_cmd_rewrite_turn_mode_resolves_by_generation(spark, tmp_path):
     args = argparse.Namespace(
         cmd="rewrite", master="local[4]", shuffle_partitions=8, root=root,
         table="silver", target_file_rows=None, drop_tombstones_below_lsn=None,
-        zorder=None, bloom_cols=None,
+        zorder=None,
     )
     out = cli.cmd_rewrite(args)
-    assert out["mode"] == "turn" and out["partitions_rewritten"] >= 1
+    assert out["mode"] == "auto" and out["partitions_rewritten"] >= 1
 
     p2 = MedallionPipeline.load(spark, root)
     # no outstanding deltas: the BASE files must hold the fresh enrichment

@@ -279,227 +279,3 @@ def test_zorder_rewrite_tightens_stats_on_every_dimension(spark, tmp_path):
     z_ext2 = _extents(zt.snapshot())
     assert _weighted_extent(z_ext2, 0) <= 32
     assert _weighted_extent(z_ext2, 1) <= 32
-
-
-def test_bloom_index_skips_files_for_point_lookups(spark, tmp_path):
-    """Bloom file skipping on a NON-sort column: after a ts-ordered
-    rewrite every file's conv_id [min,max] spans the whole key domain
-    (bounds pruning keeps everything), but the bloom sidecar proves most
-    files cannot contain a probed conversation — and never drops a file
-    that does (no false negatives, by construction)."""
-    import datetime as dt
-
-    from maritime_activity_reports_cdc_spark.operators.bloomskip import (
-        build_bloom_index,
-    )
-    from maritime_activity_reports_cdc_spark.sources.generator import CHANGE_SCHEMA
-
-    t0 = dt.datetime(2025, 4, 1)
-    # 40 conversations x 50 turns, ts striped so a ts-sort scatters each
-    # conversation across every file
-    rows = [
-        ("I", turn * 1000 + conv, 0, t0, f"c{conv:02d}", turn, "user",
-         f"c{conv}t{turn}", None, t0 + dt.timedelta(seconds=turn * 40 + conv))
-        for conv in range(40) for turn in range(50)
-    ]
-    t = bronze.create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=1)
-    bronze.apply_transcript_batch(
-        t, spark.createDataFrame(rows, CHANGE_SCHEMA), epoch=0
-    )
-    rewrite_files(t, sort_by=("ts",), order=("lsn", "op_ordinal"),
-                  target_file_rows=200)
-    snap = t.snapshot()
-    n_files = len(snap.all_files())
-    assert n_files >= 8
-    # min/max on conv_id is useless under the ts layout
-    spans_all = sum(
-        1 for f in snap.all_files()
-        if snap.file_stats[f]["conv_id"][0] <= "c01"
-        and snap.file_stats[f]["conv_id"][1] >= "c38"
-    )
-    assert spans_all == n_files
-
-    out = build_bloom_index(t, ("conv_id",), fpp=0.01)
-    assert out["files"] == n_files
-
-    probe = t.read_partitions([0], bloom_keys={"conv_id": ["c07"]})
-    # every file contains every conversation here, so bloom keeps all —
-    # use a key that exists in only SOME files instead: delete-free
-    # striping puts each conv in every file... probe a nonexistent key:
-    ghost = t.read_partitions([0], bloom_keys={"conv_id": ["zz-missing"]})
-    assert len(ghost.inputFiles()) == 0 and ghost.count() == 0
-    assert probe.where(F.col("conv_id") == "c07").count() == 50
-
-    # a layout where keys ARE localized: rewrite 200-row files sorted by
-    # conv_id but probe via bloom only (no bounds) — skipping must agree
-    # with ground truth
-    rewrite_files(t, sort_by=("conv_id", "turn_idx"), target_file_rows=200)
-    build_bloom_index(t, ("conv_id",), fpp=0.01)
-    snap = t.snapshot()
-    full = t.read_partitions([0])
-    pruned = t.read_partitions([0], bloom_keys={"conv_id": ["c07", "c31"]})
-    assert len(pruned.inputFiles()) < len(full.inputFiles())
-    want = full.where(F.col("conv_id").isin("c07", "c31"))
-    got = pruned.where(F.col("conv_id").isin("c07", "c31"))
-    assert got.count() == want.count() == 100
-
-    # files written after the index build (here the apply's delta file)
-    # are conservatively kept
-    late = [("I", 10**9, 0, t0, "c99", 0, "user", "late", None, t0)]
-    bronze.apply_transcript_batch(
-        t, spark.createDataFrame(late, CHANGE_SCHEMA), epoch=1
-    )
-    seen = t.read_partitions([0], bloom_keys={"conv_id": ["c99"]}, deltas="include")
-    assert seen.where(F.col("conv_id") == "c99").count() == 1
-
-
-def test_bloom_canonicalizes_probe_types(spark, tmp_path):
-    """Probe values hash through the indexed column's type kind: an int
-    probe against a LONG column, a float, and a numpy scalar all agree —
-    and a present key is NEVER a false 'definitely absent' whatever the
-    probe's Python type (judge ADVICE r4). Un-coercible probes raise."""
-    import datetime as dt
-
-    import numpy as np
-    import pytest as _pytest
-
-    from maritime_activity_reports_cdc_spark.operators.bloomskip import (
-        build_bloom_index,
-    )
-    from maritime_activity_reports_cdc_spark.sources.generator import CHANGE_SCHEMA
-
-    t0 = dt.datetime(2025, 4, 1)
-    rows = [
-        ("I", 1000 + i, 0, t0, f"c{i:02d}", i, "user", f"t{i}", None,
-         t0 + dt.timedelta(hours=i))
-        for i in range(40)
-    ]
-    t = bronze.create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=1)
-    bronze.apply_transcript_batch(
-        t, spark.createDataFrame(rows, CHANGE_SCHEMA), epoch=0
-    )
-    rewrite_files(t, sort_by=("conv_id",), order=("lsn", "op_ordinal"),
-                  target_file_rows=8)
-    out = build_bloom_index(t, ("lsn", "ts", "conv_id"), fpp=0.01)
-    assert out["shards"] >= 1 and out["skipped_cols"] == []
-
-    full = len(t.snapshot().all_files())
-    # lsn=1007 exists; int / float / numpy probes must prune identically
-    # and keep the file that holds it
-    kept = {
-        kind: len(t.read_partitions([0], bloom_keys={"lsn": [probe]})
-                  .inputFiles())
-        for kind, probe in (
-            ("int", 1007), ("float", 1007.0), ("np", np.int64(1007)),
-        )
-    }
-    assert len(set(kept.values())) == 1
-    assert 0 < kept["int"] < full
-    got = t.read_partitions([0], bloom_keys={"lsn": [1007.0]})
-    assert got.where(F.col("lsn") == 1007).count() == 1  # no false negative
-
-    # timestamp column probed with an equal datetime
-    ts_probe = t0 + dt.timedelta(hours=7)
-    got_ts = t.read_partitions([0], bloom_keys={"ts": [ts_probe]})
-    assert got_ts.where(F.col("ts") == ts_probe).count() == 1
-
-    # a probe that cannot coerce to the column kind fails loudly,
-    # never as a silent empty scan
-    with _pytest.raises(ValueError, match="not coercible"):
-        t.read_partitions([0], bloom_keys={"lsn": ["not-a-number"]}).count()
-
-
-def test_bloom_sidecar_sharded_at_1e5_files(tmp_path):
-    """Scale shape of the sharded sidecar (judge r4 next-round #3): 10^5
-    files' filters live in executor-written shard blobs; the driver-side
-    artifact is the header alone. Exercises write/load/prune end-to-end
-    at that file count without Spark: per-file blooms -> 32 shard blobs
-    -> header sidecar -> load -> prune 100k files to the handful holding
-    the probed key."""
-    import os as _os
-
-    from maritime_activity_reports_cdc_spark.operators import bloomskip as B
-
-    manifest_dir = str(tmp_path / "_manifests")
-    _os.makedirs(manifest_dir)
-    n_files, n_shards = 100_000, 32
-    header: dict = {}
-    hits = {f"f{i:06d}.parquet" for i in range(0, n_files, 10_000)}  # 10 files
-    for s in range(n_shards):
-        blob_parts, off = [], 0
-        shard = f"bloom-v00000001-shard{s:04d}.blob"
-        for i in range(s, n_files, n_shards):
-            rel = f"f{i:06d}.parquet"
-            vals = [i, i + n_files] + ([424242] if rel in hits else [])
-            m, k = B._size_for(len(vals), 0.01)
-            bits = B._build_bits(vals, "int", m, k)
-            header.setdefault(rel, {})["lsn"] = {
-                "shard": shard, "off": off, "len": len(bits),
-                "m": m, "k": k, "n": len(vals), "t": "int",
-            }
-            blob_parts.append(bits)
-            off += len(bits)
-        with open(_os.path.join(manifest_dir, shard), "wb") as fh:
-            fh.writelines(blob_parts)
-    name = B._write_header_sidecar(manifest_dir, 1, header)
-
-    # the driver-written artifact carries headers only: a small constant
-    # per (file, col) — INDEPENDENT of filter bytes (real tables carry
-    # KB-MB of bits per file; the header stays ~140 B/entry either way)
-    hdr_size = _os.path.getsize(_os.path.join(manifest_dir, name))
-    assert hdr_size < n_files * 200
-
-    class _StubTable:
-        def properties(self):
-            return {"bloom_index": {"sidecar": name, "built_at_version": 1,
-                                    "cols": ["lsn"]}}
-
-        def _manifest_path(self):
-            return manifest_dir
-
-    t = _StubTable()
-    files = sorted(header)
-    kept = B.prune_files_by_bloom(t, files, {"lsn": [424242]})
-    assert hits <= set(kept)            # zero false negatives
-    assert len(kept) < n_files * 0.02   # ~fpp tail of false positives
-    # probing a per-file-unique key keeps exactly that file (+fp tail)
-    kept_one = B.prune_files_by_bloom(t, files, {"lsn": [123]})
-    assert "f000123.parquet" in kept_one and len(kept_one) < n_files * 0.02
-
-
-def test_expiry_keeps_bloom_files_when_live_sidecar_unparseable(spark, tmp_path):
-    """Bloom GC keeps data when unsure: if a kept snapshot's sidecar
-    cannot be parsed, its live shard blobs are unknown, so expiry deletes
-    no bloom file at all (not even an orphan) and still expires the
-    snapshots themselves."""
-    from maritime_activity_reports_cdc_spark.operators.bloomskip import (
-        build_bloom_index,
-        referenced_sidecar_files,
-    )
-
-    df = spark.range(0, 200).selectExpr(
-        "concat('k', id) AS key", "id AS val", "CAST(pmod(id, 4) AS INT) AS bucket"
-    )
-    t = LakeTable.create(
-        spark, str(tmp_path / "t"), df.schema, partition_by="bucket",
-        properties={"stats_cols": ["key"]},
-    )
-    t.append(df)
-    build_bloom_index(t, ("key",))
-    t.append(df)
-    mdir = t._manifest_path()
-    sidecar = t.properties()["bloom_index"]["sidecar"]
-    shards = referenced_sidecar_files(mdir, sidecar) - {sidecar}
-    assert shards
-    orphan = "bloom-v99999999-deadbeef.blob"
-    with open(os.path.join(mdir, orphan), "wb") as fh:
-        fh.write(b"orphan")
-    path = os.path.join(mdir, sidecar)
-    with open(path, "r+b") as fh:
-        fh.truncate(os.path.getsize(path) // 2)
-    assert referenced_sidecar_files(mdir, sidecar) is None
-
-    stats = t.expire_snapshots(keep_last=1)
-    assert stats["manifests_removed"] >= 1
-    remaining = set(os.listdir(mdir))
-    assert {sidecar, orphan} | shards <= remaining

@@ -92,24 +92,30 @@ def test_mor_pipeline_matches_cow_pipeline(spark, tmp_path, changes):
         pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
 
-def test_turn_incremental_silver_matches_cow(spark, tmp_path, changes):
-    """layer_mode='turn' (turn-level key-MoR silver: fresh rows from the
-    batch + ≤1 successor per changed key) must resolve to exactly the
-    CoW pipeline's state — window columns (gap_secs/turn_gap/role
-    transitions) included, across chunked replay, crash-resume, deletes,
-    and compaction."""
+def _always_sparse(monkeypatch):
+    """Route every auto-mode epoch to the turn path."""
+    monkeypatch.setattr(MedallionPipeline, "_dense_batch", lambda self, affected: False)
+
+
+def test_turn_incremental_silver_matches_cow(spark, tmp_path, changes, monkeypatch):
+    """The turn path (turn-level key-MoR silver: fresh rows from the
+    batch + ≤1 successor per changed key), taken by every epoch of an
+    auto pipeline, must resolve to exactly the CoW pipeline's state —
+    window columns (gap_secs/turn_gap/role transitions) included, across
+    chunked replay, crash-resume, deletes, and compaction."""
     cow = MedallionPipeline.create(spark, str(tmp_path / "cow"), n_buckets=4)
     CheckpointedReplayer(cow, str(tmp_path / "ckc")).run(changes, n_chunks=5)
 
+    _always_sparse(monkeypatch)
     tn = MedallionPipeline.create(
         spark, str(tmp_path / "turn"), n_buckets=4,
-        layer_mode="turn", compact_every=0, compact_delta_depth=10**6,
+        layer_mode="auto", compact_every=0, compact_delta_depth=10**6,
     )
     rep = CheckpointedReplayer(tn, str(tmp_path / "ckt"))
     with pytest.raises(RuntimeError, match="injected crash"):
         rep.run(changes, n_chunks=5, fail_after_epoch=1)
     tn2 = MedallionPipeline.load(spark, str(tmp_path / "turn"))
-    assert tn2.layer_mode == "turn"
+    assert tn2.layer_mode == "auto"
     CheckpointedReplayer(tn2, str(tmp_path / "ckt")).run(changes, n_chunks=5)
 
     def check(p):
@@ -209,7 +215,7 @@ def test_auto_layer_mode_matches_cow_and_flips_plans(spark, tmp_path):
         df.unpersist()
 
 
-def test_overlap_turn_refresh_no_resurrection_on_stale_update(spark, tmp_path):
+def test_overlap_turn_refresh_no_resurrection_on_stale_update(spark, tmp_path, monkeypatch):
     """With bronze/silver overlapped, the turn refresh derives state from
     the PRE-apply snapshot overlaid with batch winners. A batch carrying
     an update OLDER than a persisted delete must not resurrect the key
@@ -226,22 +232,21 @@ def test_overlap_turn_refresh_no_resurrection_on_stale_update(spark, tmp_path):
         return (op, lsn, lsn, T0, conv, turn, "user", text, None,
                 T0 + dt.timedelta(seconds=ts_off))
 
-    for overlap in (False, True):
-        p = MedallionPipeline.create(
-            spark, str(tmp_path / f"ov{overlap}"), n_buckets=2,
-            layer_mode="turn", compact_every=0, compact_delta_depth=10**6,
-        )
-        p.overlap_layers = overlap
-        p.apply_epoch(spark.createDataFrame(
-            [row("I", 1, "cX", 0, "hello", 0), row("I", 2, "cX", 1, "there", 60)],
-            CHANGE_SCHEMA), epoch=0)
-        # delete turn 1 at lsn 10
-        p.apply_epoch(spark.createDataFrame(
-            [row("D", 10, "cX", 1)], CHANGE_SCHEMA), epoch=1)
-        # redelivered STALE update for turn 1 at lsn 5 (< 10)
-        p.apply_epoch(spark.createDataFrame(
-            [row("U", 5, "cX", 1, "stale resurrect attempt", 60)],
-            CHANGE_SCHEMA), epoch=2)
-        silver = {(r.conv_id, r.turn_idx) for r in p.read_silver().collect()}
-        assert ("cX", 1) not in silver, f"stale update resurrected key (overlap={overlap})"
-        assert ("cX", 0) in silver
+    _always_sparse(monkeypatch)
+    p = MedallionPipeline.create(
+        spark, str(tmp_path / "ov"), n_buckets=2,
+        layer_mode="auto", compact_every=0, compact_delta_depth=10**6,
+    )
+    p.apply_epoch(spark.createDataFrame(
+        [row("I", 1, "cX", 0, "hello", 0), row("I", 2, "cX", 1, "there", 60)],
+        CHANGE_SCHEMA), epoch=0)
+    # delete turn 1 at lsn 10
+    p.apply_epoch(spark.createDataFrame(
+        [row("D", 10, "cX", 1)], CHANGE_SCHEMA), epoch=1)
+    # redelivered STALE update for turn 1 at lsn 5 (< 10)
+    p.apply_epoch(spark.createDataFrame(
+        [row("U", 5, "cX", 1, "stale resurrect attempt", 60)],
+        CHANGE_SCHEMA), epoch=2)
+    silver = {(r.conv_id, r.turn_idx) for r in p.read_silver().collect()}
+    assert ("cX", 1) not in silver, "stale update resurrected key"
+    assert ("cX", 0) in silver

@@ -111,50 +111,6 @@ def test_minhash_signatures_unchanged_by_distinct_removal(spark):
     assert got == want
 
 
-def test_expiry_garbage_collects_bloom_sidecars(spark, tmp_path):
-    """ADVICE r5 #1: superseded bloom sidecars/shards (and orphan .tmp
-    blobs) are deleted by expire_snapshots; the live index survives and
-    still prunes."""
-    import os
-
-    from maritime_activity_reports_cdc_spark.operators.bloomskip import (
-        build_bloom_index,
-        prune_files_by_bloom,
-    )
-    from maritime_activity_reports_cdc_spark.sources.lake import LakeTable
-
-    df = spark.range(0, 200).selectExpr(
-        "concat('k', id) AS key", "id AS val", "CAST(pmod(id, 4) AS INT) AS bucket"
-    )
-    table = LakeTable.create(
-        spark, str(tmp_path / "t"), df.schema, partition_by="bucket",
-        properties={"stats_cols": ["key"]},
-    )
-    table.append(df)
-    build_bloom_index(table, ("key",))
-    mdir = table._manifest_path()
-    old_blooms = {n for n in os.listdir(mdir) if n.startswith("bloom-")}
-    assert old_blooms
-    # orphan shard from a "failed task" + a rebuild superseding the index
-    with open(os.path.join(mdir, "bloom-v99999999-deadbeef.blob"), "wb") as fh:
-        fh.write(b"orphan")
-    table.append(df.selectExpr("concat(key, 'x') AS key", "val", "bucket"))
-    build_bloom_index(table, ("key",))
-    live = table.properties()["bloom_index"]["sidecar"]
-    # keep only the newest snapshot: earlier snapshots still carrying
-    # the superseded bloom_index property drop out of retention
-    table.expire_snapshots(keep_last=1)
-    remaining = {n for n in os.listdir(mdir) if n.startswith("bloom-")}
-    assert live in remaining
-    assert "bloom-v99999999-deadbeef.blob" not in remaining
-    # nothing from the superseded generation survives unless still referenced
-    assert not (remaining & old_blooms - {live})
-    # live index still prunes (no false negatives on a present key)
-    files = [f for fl in table.snapshot().files.values() for f in fl]
-    kept = prune_files_by_bloom(table, files, {"key": ["k7"]})
-    assert any("data/" in f for f in kept)
-
-
 def test_feed_expired_only_for_missing_manifests(spark, tmp_path, monkeypatch):
     """ADVICE r5 #2: a FileNotFoundError that is NOT a missing manifest
     must surface as-is, never as FeedExpiredError (which would trigger a

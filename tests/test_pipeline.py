@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -20,7 +21,7 @@ from maritime_activity_reports_cdc_spark.streaming.runner import (
     start_stream,
 )
 
-from tests.helpers import assert_states_equal, naive_replay, table_state
+from tests.helpers import assert_states_equal, naive_replay, shuffle_exchanges, table_state
 
 T0 = dt.datetime(2025, 3, 1, 12, 0, 0)
 
@@ -529,7 +530,7 @@ def test_epoch_metrics_count_raw_batch_rows(spark, tmp_path):
 def test_create_and_load_reject_unsupported_modes(spark, tmp_path):
     """Unknown and retired modes fail at the engine boundary instead of
     silently running as something else; bronze is merge-on-read only."""
-    for kwargs in ({"layer_mode": "zebra"}, {"layer_mode": "mor"},
+    for kwargs in ({"layer_mode": "zebra"}, {"layer_mode": "mor"}, {"layer_mode": "turn"},
                    {"bronze_mode": "turn"}, {"bronze_mode": "cow"}):
         with pytest.raises(ValueError, match="_mode must be"):
             MedallionPipeline.create(spark, str(tmp_path / "bad"), n_buckets=2, **kwargs)
@@ -622,3 +623,81 @@ def test_legacy_copy_on_write_lake_runs_merge_on_read(spark, tmp_path):
     assert_states_equal(table_state(p.bronze.read()), expected)
     assert p.read_silver().count() == len(expected)
     changes.unpersist()
+
+
+def test_legacy_turn_lake_loads_as_auto(spark, tmp_path, monkeypatch):
+    """A lake written by the retired forced-turn mode (silver stamped
+    ``layer_mode='turn'``, turn deltas outstanding) loads as ``auto``:
+    the stamp is rewritten, reads resolve the deltas, and a dense
+    epoch's whole-bucket rewrite folds them — matching a CoW pipeline
+    fed the same log."""
+    changes = generate_transcript_changes(
+        spark, n_conversations=12, turns_per_conv=4, update_ratio=0.3,
+        delete_ratio=0.1, seed=37,
+    ).cache()
+    lo, hi = changes.agg(F.min("lsn"), F.max("lsn")).first()
+    mid = (lo + hi) // 2
+    chunks = [changes.where(F.col("lsn") <= mid), changes.where(F.col("lsn") > mid)]
+    cow = MedallionPipeline.create(spark, str(tmp_path / "cow"), n_buckets=2)
+    for epoch, chunk in enumerate(chunks):
+        cow.apply_epoch(chunk, epoch=epoch)
+
+    root = str(tmp_path / "lake")
+    with monkeypatch.context() as m:
+        m.setattr(MedallionPipeline, "_dense_batch", lambda self, affected: False)
+        old = MedallionPipeline.create(spark, root, n_buckets=2, layer_mode="auto",
+                                       compact_every=0, compact_delta_depth=10**6)
+        old.apply_epoch(chunks[0], epoch=0)
+    old.silver.set_properties({"layer_mode": "turn"})
+    assert old.silver.delta_partition_values()
+
+    p = MedallionPipeline.load(spark, root)
+    assert p.layer_mode == "auto" and p.silver.properties()["layer_mode"] == "auto"
+    monkeypatch.setattr(MedallionPipeline, "_dense_batch", lambda self, affected: True)
+    p.apply_epoch(chunks[1], epoch=1)
+    assert p.silver.delta_partition_values() == [], "the dense rewrite folds turn deltas"
+
+    for cols, a_df, b_df in [
+        (["conv_id", "turn_idx", "text", "gap_secs", "turn_gap", "is_role_transition"],
+         cow.read_silver(), p.read_silver()),
+        (["conv_id", "n_turns", "total_tokens", "risk_level"],
+         cow.read_summary(), p.read_summary()),
+    ]:
+        a = a_df.select(cols).toPandas().sort_values(cols[:2]).reset_index(drop=True)
+        b = b_df.select(cols).toPandas().sort_values(cols[:2]).reset_index(drop=True)
+        pd.testing.assert_frame_equal(a, b, check_dtype=False)
+    changes.unpersist()
+
+
+def test_dense_cow_silver_refresh_is_one_replace_over_one_exchange(
+    spark, tmp_path, monkeypatch
+):
+    """A dense epoch of a ``cow`` pipeline rewrites silver's affected
+    buckets from one shuffle: the bucket window that dedups pre-apply
+    bronze ∪ batch, reused by the enrichment window and by the
+    partitioned replace (marked pre-partitioned)."""
+    from maritime_activity_reports_cdc_spark.sources.lake import LakeTable
+
+    load = [_row("I", i + 1, f"c{i % 4}", i // 4, "user", f"t{i}") for i in range(12)]
+    update = [_row("U", 100 + i, f"c{i}", 0, "user", f"u{i}") for i in range(4)]
+    p = MedallionPipeline.create(spark, str(tmp_path / "m"), n_buckets=2, compact_every=0)
+    p.apply_epoch(spark.createDataFrame(load, CHANGE_SCHEMA), epoch=0)
+
+    dense, calls = [], []
+    real_dense = MedallionPipeline._dense_batch
+    real_replace = LakeTable.replace_partitions
+
+    def spy_dense(self, affected):
+        dense.append(real_dense(self, affected))
+        return dense[-1]
+
+    def spy_replace(self, df, *args, **kwargs):
+        if self is p.silver:
+            calls.append((shuffle_exchanges(df), kwargs.get("pre_partitioned")))
+        return real_replace(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(MedallionPipeline, "_dense_batch", spy_dense)
+    monkeypatch.setattr(LakeTable, "replace_partitions", spy_replace)
+    p.apply_epoch(spark.createDataFrame(update, CHANGE_SCHEMA), epoch=1)
+    assert dense[0] is True, "every conversation is touched: the epoch is dense"
+    assert calls == [(1, True)]
