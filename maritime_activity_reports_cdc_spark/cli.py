@@ -13,6 +13,7 @@ the reference's status output).
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import json
 import os
 import sys
@@ -47,11 +48,8 @@ def _apply_config(args) -> None:
         "master": cfg.session.master or os.environ.get("SPARK_GRAFT_MASTER"),
         "shuffle_partitions": cfg.session.shuffle_partitions
         or (int(shuffle_env) if shuffle_env else None),
-        "n_buckets": cfg.lake.n_buckets,
-        "layer_mode": cfg.lake.layer_mode,
-        "compact_every": cfg.lake.compact_every,
-        "compact_delta_depth": cfg.lake.compact_delta_depth,
-        "derived_every": cfg.lake.derived_every,
+        # every [lake] key but expire_keep_last is a setup flag of its name
+        **dataclasses.asdict(cfg.lake),
         "keep_last": cfg.lake.expire_keep_last or 10,
         "chunks": cfg.replay.chunks,
         "target_file_rows": cfg.maintenance.target_file_rows,
@@ -194,25 +192,21 @@ def cmd_rewrite(args) -> dict:
     spark = _spark(args)
     p = MedallionPipeline.load(spark, args.root)
     table = {"bronze": p.bronze, "silver": p.silver}[args.table]
-    # Resolve semantics follow the table's layer mode (same dispatch as
-    # pipeline._maybe_compact_layers): auto-mode silver deltas are ordered
-    # by refresh generation — a re-enriched row keeps its (lsn, op_ordinal)
-    # envelope, so resolving by lsn would tie-break arbitrarily and could
-    # keep a stale image.
-    mode = p.layer_mode if args.table == "silver" else "cow"
-    if mode == "auto":
-        order = ("_gen",)
-        # key-MoR silver tombstone retention is governed by _gen: refresh
-        # generations are monotonic, so everything below the current
-        # refresh epoch is safe to drop (matches compact_all)
-        horizon = (
-            args.drop_tombstones_below_lsn
-            if args.drop_tombstones_below_lsn is not None
-            else table.last_epoch("silver_refresh") + 1
-        )
+    horizon = args.drop_tombstones_below_lsn
+    if args.table == "silver":
+        # silver deltas are ordered by refresh generation — a re-enriched
+        # row keeps its (lsn, op_ordinal) envelope, so resolving by lsn
+        # would tie-break arbitrarily and could keep a stale image. A cow
+        # silver has no deltas and no tombstones, so this changes nothing
+        # there.
+        mode, order = "generation", ("_gen",)
+        if horizon is None:
+            # refresh generations are monotonic, so every tombstone below
+            # the current refresh epoch is safe to drop (matches
+            # compact_all)
+            horizon = table.last_epoch("silver_refresh") + 1
     else:
-        order = ("lsn", "op_ordinal")
-        horizon = args.drop_tombstones_below_lsn
+        mode, order = "lsn", ("lsn", "op_ordinal")
     zorder = tuple(args.zorder.split(",")) if args.zorder else None
     n = rewrite_files(
         table, sort_by=("conv_id", "turn_idx"), order=order,
@@ -236,14 +230,10 @@ def cmd_changes(args) -> dict:
     spark = _spark(args)
     p = MedallionPipeline.load(spark, args.root)
     table = {"bronze": p.bronze, "silver": p.silver}[args.table]
-    # auto silver deltas are ordered by refresh generation — a
-    # re-enriched row keeps its (lsn, op_ordinal) envelope, so the feed
-    # must arbitrate by _gen exactly like cmd_rewrite resolves.
-    order = (
-        ("_gen",)
-        if args.table == "silver" and p.layer_mode == "auto"
-        else ("lsn", "op_ordinal")
-    )
+    # silver deltas are ordered by refresh generation — a re-enriched
+    # row keeps its (lsn, op_ordinal) envelope, so the feed must
+    # arbitrate by _gen exactly like cmd_rewrite resolves.
+    order = ("_gen",) if args.table == "silver" else ("lsn", "op_ordinal")
     end = (
         args.end_version if args.end_version is not None
         else table.current_version()
@@ -365,8 +355,8 @@ def build_parser() -> argparse.ArgumentParser:
     )
     rw.add_argument(
         "--drop-tombstones-below-lsn", type=int, default=None,
-        help="tombstone horizon: an LSN for cow/key-MoR tables; a refresh "
-             "generation for auto-mode silver (default there: current epoch)",
+        help="tombstone horizon: an LSN for bronze; a refresh generation "
+             "for silver (default there: current epoch)",
     )
     return ap
 

@@ -29,6 +29,12 @@ Example (every key optional)::
     [replay]
     chunks = 8
 
+``setup`` records ``compact_every``, ``compact_delta_depth`` and
+``derived_every`` in the lake (bronze table properties, next to
+``n_buckets``), so ``replay``, ``stream`` and ``relay`` run the cadence
+the lake was set up with; a lake set up before they were recorded runs
+the defaults.
+
 Unknown keys are errors: a file that still sets a removed knob fails
 with "unknown key". Removed so far: ``[replay] adaptive_shuffle`` (gone
 since the relay stopped narrowing its shuffles per epoch) and ``[lake]

@@ -178,8 +178,7 @@ def read_merged(
         need = list(dict.fromkeys([*keys, *order, "op", *columns]))
         return df.select(*[c for c in need if c in df.columns])
 
-    has_deltas = any(snap.delta_files.get(_k) for _k in map(str, values))
-    if not has_deltas:
+    if not table.has_deltas(values, snap.version):
         # Lake-level read hides retained tombstones (op='D') by default.
         return _prj(table.read_partitions(values, bounds=bounds, deltas="exclude"))
     if _delta_fraction_small(snap, values):
@@ -361,9 +360,7 @@ def rewrite_files(
         )
     if not values:
         return 0
-    has_deltas = any(
-        table.snapshot().delta_files.get(str(v)) for v in values
-    )
+    has_deltas = table.has_deltas(values)
     part_col = table.snapshot().partition_by
     fused = has_deltas and _bucket_partitioned(table, part_col)
     df = table.read_partitions(values, deltas="include", tombstones="include")

@@ -53,7 +53,11 @@ def transcript_table_schema(extra_fields: list[T.StructField] | None = None) -> 
     return T.StructType(fields + (extra_fields or []))
 
 
-def create_transcripts_table(spark: SparkSession, path: str, n_buckets: int = 16) -> LakeTable:
+def create_transcripts_table(
+    spark: SparkSession, path: str, n_buckets: int = 16, properties: dict | None = None
+) -> LakeTable:
+    """``properties``: extra table properties recorded at creation (the
+    pipeline stores its cadence settings here)."""
     return LakeTable.create(
         spark,
         path,
@@ -76,6 +80,7 @@ def create_transcripts_table(spark: SparkSession, path: str, n_buckets: int = 16
             # feeds that can't promise that must leave this unset (the
             # apply then counts deletes with an explicit aggregate).
             "mor_tombstone_col": "role",
+            **(properties or {}),
         },
     )
 

@@ -193,7 +193,7 @@ def refresh_daily_via_index(
     index_table: LakeTable,
     daily_table: LakeTable,
     affected,
-    batch_dates: DataFrame | None,
+    batch_dates: DataFrame,
     epoch: int,
     enriched: DataFrame | None = None,
     source: str = "gold_daily",
@@ -237,16 +237,13 @@ def refresh_daily_via_index(
         # the write anyway) — re-scanning the change batches for their
         # ts dates here was a full extra pass over each pending chunk.
         months_set = set(index_table.snapshot().files)
-        batch_dates = None
     else:
         vacated = _restrict_to_affected(
             index_table.read().select("conv_id", "business_month"), affected, n_buckets
         ).select(F.col("business_month").alias("_m"))
-        src = vacated
-        if batch_dates is not None:
-            src = src.unionByName(
-                batch_dates.select(_month("business_date").alias("_m"))
-            )
+        src = vacated.unionByName(
+            batch_dates.select(_month("business_date").alias("_m"))
+        )
         # one discovery job per flush (vacated ∪ batch months fused)
         months_set = {r[0] for r in src.distinct().collect()}
     months = sorted(months_set)
@@ -296,18 +293,6 @@ def refresh_daily_via_index(
                 daily_table.commit_epoch_noop(source, epoch, {"rows": 0})
                 return True
         else:
-            if batch_dates is None:
-                # without the batch's ts dates the months-covered
-                # invariant (fresh months ⊆ vacated ∪ batch months)
-                # doesn't hold for fresh inserts — derive the missing
-                # months from fresh itself so no fresh row lands outside
-                # a replaced partition (survivors depend on the final
-                # month set, so this must run before building merged)
-                extra = {
-                    r[0] for r in fresh.select("business_month").distinct().collect()
-                } - set(months)
-                if extra:
-                    months = sorted(set(months) | extra)
             survivors = _restrict_to_affected(
                 index_table.read_partitions(months), affected, n_buckets, negate=True
             )

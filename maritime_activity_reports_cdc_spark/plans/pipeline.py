@@ -72,9 +72,10 @@ class EpochMetrics:
     n_upserts: int
     n_deletes: int
     # Each layer's own wall, timed on the thread that ran it: bronze
-    # (apply, plus a compaction it ran inline) and silver overlap on
-    # sparse epochs, so their sum can exceed total_secs. gold_secs is the
-    # derived-flush dispatch (the whole flush unless async_derived).
+    # (the apply; its compaction runs in the background) and silver
+    # overlap, so their sum can exceed total_secs. gold_secs is the
+    # derived-flush dispatch: the wait for the previous background flush
+    # (the flush itself runs behind the next epoch).
     bronze_secs: float
     silver_secs: float
     gold_secs: float
@@ -140,47 +141,19 @@ class MedallionPipeline:
     # mid-cadence): the next derived refresh rebuilds gold from full
     # silver state instead of an (unknowable) incremental set
     _derived_behind: bool = field(init=False, default=False)
-    # Run each derived flush on a background driver thread, overlapped
-    # with the NEXT epoch's bronze/silver work (the flush writes only
-    # gold tables; the next epoch writes only bronze/silver — disjoint
-    # commit targets, and the flush constructs its read plans against
-    # whatever silver snapshot is current when it runs, which is always
-    # a superset-fresh state for its affected conversations — a later
-    # flush re-covers those conversations, so the final state converges
-    # exactly as with the derived_every cadence). At most ONE flush is
-    # in flight; the next flush/finalize/expiry waits. A flush failure
-    # surfaces on that wait — same crash semantics as the synchronous
-    # path (epoch guards + behind-detection rebuild on resume).
-    # OFF by default: a direct apply_epoch caller must read current gold
-    # right after the call returns (least surprise). Drivers that
-    # guarantee a drain point enable it for their duration — the bounded
-    # CheckpointedReplayer does (finalize() at the end), and that is
-    # where the overlap pays: the flush hides behind the next epoch's
-    # bronze/silver wall.
-    async_derived: bool = False
     _flush_future: object = field(init=False, default=None)
     _flush_pool: object = field(init=False, default=None)
-    # Run layer compactions on a background driver thread, overlapped
-    # with subsequent epochs' ingest. Sound because commits are
-    # optimistically concurrent (sources/lake.py): the ingest path's
-    # delta APPENDS rebase through a racing compaction commit, and the
-    # compaction's REPLACE validates that nothing touched its partitions
-    # between read and commit — a mid-flight delta append makes it
-    # re-read (folding the new delta too) and retry, never clobber.
-    # Readers are snapshot-isolated (superseded files persist until
-    # expiry, which drains maintenance first). One in flight; failures
-    # surface at the next drain point. OFF by default (same least-
-    # surprise contract as async_derived); the bounded replayer enables
-    # both — compaction cost then hides behind ingest instead of
-    # stalling an epoch (the sparse-floor profile's single biggest
-    # non-compute wall chunk).
-    async_maintenance: bool = False
     _maint_future: object = field(init=False, default=None)
     _maint_pool: object = field(init=False, default=None)
     # compactions requested during the CURRENT epoch (bronze + silver can
     # both come due on the same epoch); submitted as ONE background task
     # at the end of the epoch so they don't drain each other mid-epoch
     _maint_requests: list = field(init=False, default_factory=list)
+
+    # the knobs create() records in the bronze table's properties (next to
+    # n_buckets) and load() restores, so every verb that loads a lake runs
+    # the cadence it was set up with
+    CADENCE_KEYS = ("compact_every", "compact_delta_depth", "derived_every")
 
     CONV_META_ATTRS = T.StructType(
         [
@@ -213,7 +186,8 @@ class MedallionPipeline:
                 compact_delta_depth=compact_delta_depth, derived_every=derived_every)
         os.makedirs(root, exist_ok=True)
         p.bronze = bronze_plan.create_transcripts_table(
-            spark, p._p("bronze_transcripts"), n_buckets
+            spark, p._p("bronze_transcripts"), n_buckets,
+            properties={k: getattr(p, k) for k in cls.CADENCE_KEYS},
         )
         p.silver = silver_plan.create_silver_table(
             spark, p._p("silver_transcripts"), n_buckets, layer_mode=layer_mode
@@ -240,7 +214,12 @@ class MedallionPipeline:
         p = cls(spark, root)
         p.bronze = LakeTable.load(spark, p._p("bronze_transcripts"))
         p.silver = LakeTable.load(spark, p._p("silver_transcripts"))
-        p.n_buckets = int(p.bronze.properties()["n_buckets"])
+        props = p.bronze.properties()
+        p.n_buckets = int(props["n_buckets"])
+        # a lake created before the cadence was recorded keeps the defaults
+        for k in cls.CADENCE_KEYS:
+            if k in props:
+                setattr(p, k, int(props[k]))
         # a legacy bronze 'apply_mode' property is ignored: a copy-on-write
         # bronze is a merge-on-read table with no deltas
         p.layer_mode = p.silver.properties().get("layer_mode", "cow")
@@ -299,7 +278,8 @@ class MedallionPipeline:
     def enriched_summary_view(self) -> DataFrame:
         """Gold summary joined to the current conversation metadata —
         the reference's current-records enrichment view (J1,
-        ``silver/table_setup.py:327-343``). Dimension side is broadcast."""
+        ``silver/table_setup.py:327-343``). Dimension side is broadcast.
+        Drains the background flush first (through ``read_summary``)."""
         if self.summary is None or self.conv_master is None:
             raise RuntimeError("needs gold summary + conv_master")
         current = scd2_op.current_view(self.conv_master).select(
@@ -307,18 +287,22 @@ class MedallionPipeline:
         )
         return self.read_summary().join(F.broadcast(current), "conv_id", "left")
 
-    # -- resolved state views (mode-aware: CoW base scan or MoR resolve) --
+    # -- resolved state views. The gold reads drain the background flush
+    # first, so with derived_every=1 they see the last applied epoch;
+    # reading a gold LakeTable directly needs finalize() for that. --
     def read_silver(self) -> DataFrame:
         return silver_plan.read_silver(self.silver)
 
     def read_summary(self) -> DataFrame:
         if self.summary is None:
             raise RuntimeError("pipeline has no gold summary table")
+        self._wait_flush()
         return gold_plan.read_summary(self.summary)
 
     def read_daily(self) -> DataFrame:
         if self.daily is None:
             raise RuntimeError("pipeline has no daily rollup table")
+        self._wait_flush()
         return gold_plan.read_daily(self.daily)
 
     # ------------------------------------------------------------------
@@ -412,10 +396,10 @@ class MedallionPipeline:
             # compaction has eagerly-resolved file lists pinned, so
             # drain both first. Runs BEFORE dispatching THIS epoch's
             # queued maintenance: draining here only waits on the
-            # PREVIOUS epoch's task (usually long done), so expiry no
-            # longer swallows the ingest overlap async_maintenance
-            # buys (the queued compactions read their inputs at
-            # dispatch time, after the deletes — safe).
+            # PREVIOUS epoch's task (usually long done), so expiry does
+            # not swallow the compaction's overlap with ingest (the
+            # queued compactions read their inputs at dispatch time,
+            # after the deletes — safe).
             self._wait_flush()
             self._wait_maintenance()
             for table in (self.bronze, self.silver, self.summary, self.daily,
@@ -502,14 +486,20 @@ class MedallionPipeline:
             fut.result()
 
     def _submit_maintenance(self, fn, *args, **kwargs) -> None:
-        """Run a compaction inline, or queue it for this epoch's single
-        background maintenance task when ``async_maintenance`` (queued
-        requests dispatch together in ``_dispatch_maintenance`` so two
-        layers coming due on the same epoch don't drain each other
-        mid-epoch)."""
-        if not self.async_maintenance:
-            fn(*args, **kwargs)
-            return
+        """Queue a compaction for this epoch's single background
+        maintenance task (``_dispatch_maintenance``), so that two layers
+        coming due on the same epoch don't drain each other mid-epoch.
+
+        Compaction overlaps later epochs' ingest safely because commits
+        are optimistically concurrent (``sources/lake.py``): the ingest
+        path's delta APPENDS rebase through a racing compaction commit,
+        and the compaction's REPLACE validates that nothing touched its
+        partitions between read and commit — a mid-flight delta append
+        makes it re-read (folding the new delta too) and retry, never
+        clobber. Readers are snapshot-isolated: superseded files persist
+        until expiry, which drains maintenance first. One task is in
+        flight at a time; a failure surfaces at the next drain point
+        (the next dispatch, ``finalize`` or ``compact_all``)."""
         self._maint_requests.append((fn, args, kwargs))
 
     def _dispatch_maintenance(self) -> None:
@@ -536,19 +526,29 @@ class MedallionPipeline:
         self._maint_future = self._maint_pool.submit(_run_all)
 
     def _submit_flush(self, epoch: int) -> None:
-        """Dispatch the derived flush: background thread when
-        ``async_derived`` (overlapping it with the next epoch), inline
-        otherwise. The pending list is captured HERE, on the relay
-        thread, so the next epoch's append never races the worker; the
-        previous flush is always drained first (one in flight, derived
-        epoch stamps stay monotonic)."""
+        """Run the derived flush on the ``derived-flush`` thread,
+        overlapped with the NEXT epoch's bronze/silver work, as the
+        reference runs gold as its own streaming queries on slower
+        triggers than silver.
+
+        The overlap is safe: the flush writes only gold tables and the
+        next epoch writes only bronze/silver (disjoint commit targets);
+        the flush builds its read plans against whatever silver snapshot
+        is current when it runs, which is at least as fresh as its
+        affected conversations need, and a later flush re-covers them,
+        so the final state converges exactly as per-epoch refresh does.
+
+        The pending list is captured HERE, on the relay thread, so the
+        next epoch's append never races the worker. The previous flush
+        is always drained first: one flush in flight, derived epoch
+        stamps stay monotonic. A flush failure surfaces at that drain
+        (the next submit, a pipeline-level gold read or ``finalize``);
+        the epoch guards and the behind-detection rebuild on load make
+        a crash resumable."""
         pend, self._pending_derived = self._pending_derived, []
         if not pend:
             return
         self._wait_flush()
-        if not self.async_derived:
-            self._flush_derived(epoch, pend)
-            return
         if self._flush_pool is None:
             from concurrent.futures import ThreadPoolExecutor
 
@@ -579,12 +579,12 @@ class MedallionPipeline:
             affected.dense = self._dense_batch(affected)
             dates = None
             if self.daily is not None:
-                date_frames = [d for (_e, _a, d) in pend if d is not None]
-                if date_frames:
-                    dates = date_frames[0]
-                    for d in date_frames[1:]:
-                        dates = dates.unionByName(d)
-                    dates = dates.distinct()
+                # apply_epoch queues a dates frame with every entry when
+                # the pipeline has a daily table
+                dates = pend[0][2]
+                for _e, _a, d in pend[1:]:
+                    dates = dates.unionByName(d)
+                dates = dates.distinct()
 
             shared_slice = None
             if (
@@ -592,15 +592,16 @@ class MedallionPipeline:
                 and self.daily is not None
                 and affected.buckets
                 # Cache ONLY when the slice is a real MoR resolve over a
-                # key-restricted set (non-dense turn/auto): there the
-                # semi-join + dedup is worth computing once for both
-                # consumers. A DENSE slice is a plain column-pruned base
-                # scan — materializing it as a deserialized cache costs
-                # more (heap churn + GC at 10^7 rows) than letting each
+                # key-restricted set (non-dense, and the affected buckets
+                # carry silver delta files): there the semi-join + dedup
+                # is worth computing once for both consumers. A DENSE or
+                # delta-free slice is a plain column-pruned base scan —
+                # materializing it as a deserialized cache costs more
+                # (heap churn + GC at 10^7 rows) than letting each
                 # consumer re-read the thin parquet columns (measured
                 # ~11 s -> ~6 s on the 10M-row load flush).
                 and not affected.dense
-                and self.silver.properties().get("layer_mode") == "auto"
+                and self.silver.has_deltas(affected.buckets)
             ):
                 # Both gold consumers need the affected conversations'
                 # post-refresh silver rows. Resolve the THIN slice once
@@ -676,8 +677,8 @@ class MedallionPipeline:
         gold_plan.refresh_daily_full_from_index(self.conv_dates, self.daily, epoch=epoch)
 
     def _maybe_compact_layers(self, epoch: int) -> None:
-        if self.layer_mode != "auto":
-            return
+        """Queue a silver compaction when its deltas come due (only auto
+        silver ever has any; ``_compaction_due`` is False without)."""
         from maritime_activity_reports_cdc_spark.operators.apply import compact
 
         if self._compaction_due(self.silver, epoch):
@@ -699,11 +700,11 @@ class MedallionPipeline:
         self._wait_maintenance()
 
         compact(self.bronze)
-        if self.layer_mode == "auto":
-            compact(
-                self.silver, keys=("conv_id", "turn_idx"), order=("_gen",),
-                drop_tombstones_below_lsn=self.silver.last_epoch("silver_refresh") + 1,
-            )
+        # a no-op on a silver with no deltas (every cow silver)
+        compact(
+            self.silver, keys=("conv_id", "turn_idx"), order=("_gen",),
+            drop_tombstones_below_lsn=self.silver.last_epoch("silver_refresh") + 1,
+        )
 
     def flush_observability(self) -> None:
         """Write buffered lineage/metrics rows (one append each instead of

@@ -87,29 +87,20 @@ def create_silver_table(
 def read_silver(
     silver_table: LakeTable, buckets=None, bounds=None, columns: list[str] | None = None
 ) -> DataFrame:
-    """Mode-dispatched resolved view of silver state.
+    """Resolved view of silver state: one winner per (conv_id, turn_idx)
+    in refresh-generation order, delete tombstones hidden. Partitions
+    with no delta files (every cow silver; auto silver after a dense
+    epoch or a compaction) read as the plain base scan.
 
     ``columns``: thin consumers (aggs that never touch text) should pass
     their column set — MoR resolution carries whole rows through its
     shuffle otherwise (Catalyst cannot prune into the resolve)."""
     from maritime_activity_reports_cdc_spark.operators.apply import read_merged
 
-    if silver_table.properties().get("layer_mode") == "auto":
-        # key-based MoR: one winner per (conv_id, turn_idx) in refresh-
-        # epoch order; delete tombstones hidden. (Reduces to a plain base
-        # scan when no deltas are outstanding — auto mode's dense epochs
-        # clear them.)
-        return read_merged(
-            silver_table, buckets, bounds=bounds,
-            keys=("conv_id", "turn_idx"), order=("_gen",), columns=columns,
-        )
-    if buckets is None:
-        df = silver_table.read()
-    else:
-        df = silver_table.read_partitions(buckets, bounds=bounds)
-    if columns is not None:
-        df = df.select(*[c for c in dict.fromkeys(["conv_id", *columns]) if c in df.columns])
-    return df
+    return read_merged(
+        silver_table, buckets, bounds=bounds,
+        keys=("conv_id", "turn_idx"), order=("_gen",), columns=columns,
+    )
 
 
 # ---------------------------------------------------------------------
@@ -577,11 +568,11 @@ def read_silver_for_affected(
     the key restriction pushed BELOW the MoR resolve: base and delta
     rows are semi-joined to the affected keys BEFORE the dedup, so the
     resolve shuffles O(affected rows) instead of the whole pruned slice.
-    Dense mode reads the whole buckets (no key set to push)."""
+    Dense mode reads the whole buckets (no key set to push), and buckets
+    with no delta files (every cow silver) need no resolve at all."""
     from maritime_activity_reports_cdc_spark.operators.apply import dedup_latest
 
-    mode = silver_table.properties().get("layer_mode")
-    if affected.dense or mode != "auto":
+    if affected.dense or not silver_table.has_deltas(affected.buckets):
         return affected.semi(
             read_silver(silver_table, affected.buckets,
                         bounds=None if affected.dense else affected.prune(),
@@ -657,19 +648,12 @@ def refresh_silver_for_conversations(
     aligned = enriched.select(*[
         F.col(c) if c in enriched.columns else F.lit(None).alias(c) for c in target_cols
     ])
-    # Auto-mode tables can carry outstanding turn-level deltas from
-    # earlier sparse epochs; survivors must then be RESOLVED state, not
-    # base files (the replace clears the replaced buckets' delta files).
-    # An auto pipeline routes only DENSE batches here (survivors -> None),
-    # so this read is a safety net for direct callers; cow tables have no
-    # deltas and take the plain base scan.
-    snap = silver_table.snapshot()
-    has_deltas = any(snap.delta_files.get(str(b)) for b in affected.buckets)
-    base = (
-        read_silver(silver_table, affected.buckets)
-        if has_deltas
-        else silver_table.read_partitions(affected.buckets)
-    )
+    # Survivors are RESOLVED state (the replace clears the replaced
+    # buckets' delta files): auto silver can carry turn-level deltas from
+    # earlier sparse epochs. An auto pipeline routes only DENSE batches
+    # here (survivors -> None), and cow silver has no deltas, so this is
+    # the plain base scan on every relay path.
+    base = read_silver(silver_table, affected.buckets)
     survivors = affected.anti(base)
     merged = aligned if survivors is None else survivors.unionByName(aligned)
     # merged is already clustered by bucket: the fresh side came through

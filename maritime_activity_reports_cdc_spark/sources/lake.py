@@ -32,13 +32,13 @@ stands in for the catalog's atomic CAS.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import shutil
 import threading
 import time
 import uuid
-from dataclasses import dataclass
 from typing import Any, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -93,7 +93,7 @@ class EpochAlreadyApplied(RuntimeError):
     """Commit for this (source, epoch) is already in the table history."""
 
 
-@dataclass
+@dataclasses.dataclass
 class Snapshot:
     version: int
     parent: int | None
@@ -350,6 +350,12 @@ class LakeTable:
             out += [f for k, fl in snap.delta_files.items() if k in keys for f in fl]
         return out
 
+    def has_deltas(self, values: Iterable[Any], version: int | None = None) -> bool:
+        """True when any of the named partitions has outstanding delta
+        files (read from the snapshot; no Spark job)."""
+        snap = self.snapshot(version)
+        return any(snap.delta_files.get(_part_key(v)) for v in values)
+
     def delta_partition_values(self, version: int | None = None) -> list[str]:
         snap = self.snapshot(version)
         return sorted(k for k, fl in snap.delta_files.items() if fl)
@@ -468,33 +474,15 @@ class LakeTable:
         )
 
     def commit_epoch_noop(self, source: str, epoch: int, summary: dict | None = None) -> Snapshot:
-        """Record an epoch with no data change (empty batch exactly-once).
-        Metadata-only: a lost CAS race always rebases and retries."""
-        for attempt in range(_MAX_COMMIT_RETRIES + 1):
-            parent = self.snapshot()
+        """Record an epoch with no data change (empty batch exactly-once)."""
+        def build(parent: Snapshot) -> dict:
             self._check_epoch(parent, source, epoch)
-            snap = Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                schema_json=parent.schema_json,
-                partition_by=parent.partition_by,
-                files=parent.files,
-                summary={"operation": "noop", **(summary or {})},
-                epochs={**parent.epochs, source: epoch},
-                properties=parent.properties,
-                file_stats=parent.file_stats,
-                delta_files=parent.delta_files,
-            )
-            try:
-                self._write_snapshot(
-                    snap, expected_parent=parent.version, touched=set(),
-                    parent_refs=parent.refs,
-                )
-                return snap
-            except CommitConflict:
-                if attempt == _MAX_COMMIT_RETRIES:
-                    raise
-        raise AssertionError("unreachable")
+            return {
+                "summary": {"operation": "noop", **(summary or {})},
+                "epochs": {**parent.epochs, source: epoch},
+            }
+
+        return self._commit_metadata(build)
 
     # ------------------------------------------------------------------
     # maintenance: snapshot expiry + orphan cleanup
@@ -593,26 +581,55 @@ class LakeTable:
         both expose this). A value of None removes the key. Property
         changes that alter READ semantics (e.g. ``layer_mode``) are the
         caller's responsibility to apply only on states where the modes
-        agree (a delta-free table reads identically in cow/auto).
-        Metadata-only: a lost CAS race rebases and retries."""
+        agree (a delta-free table reads identically in cow/auto)."""
+        def build(parent: Snapshot) -> dict:
+            return {
+                "summary": {"operation": "set-properties", "keys": sorted(updates)},
+                "properties": {
+                    **{k: v for k, v in parent.properties.items()
+                       if updates.get(k, "") is not None},
+                    **{k: v for k, v in updates.items() if v is not None},
+                },
+            }
+
+        return self._commit_metadata(build)
+
+    # ------------------------------------------------------------------
+    # schema evolution (additive)
+    # ------------------------------------------------------------------
+    def add_columns(self, new_fields: list[T.StructField]) -> Snapshot:
+        """ALTER TABLE ADD COLUMNS — existing files read the new columns
+        as null (reference's opt-in ``mergeSchema`` S6 made explicit).
+        The columns to add are recomputed against each parent, so a
+        retry after a lost race adds only what is still missing."""
+        def build(parent: Snapshot) -> dict | None:
+            schema = parent.schema()
+            existing = {f.name for f in schema.fields}
+            added = [f for f in new_fields if f.name not in existing]
+            if not added:
+                return None
+            return {
+                "schema_json": json.dumps(T.StructType(schema.fields + added).jsonValue()),
+                "summary": {"operation": "add-columns", "columns": [f.name for f in added]},
+            }
+
+        return self._commit_metadata(build)
+
+    def _commit_metadata(self, build) -> Snapshot:
+        """Commit a metadata-only snapshot: data files, stats and deltas
+        carry over from the parent; ``build(parent)`` returns the changed
+        snapshot fields (always a fresh ``summary``), or None when there
+        is nothing to change (the parent is returned). A lost CAS race
+        rebuilds against the new parent and retries — a metadata commit
+        never conflicts with a concurrent data commit."""
         for attempt in range(_MAX_COMMIT_RETRIES + 1):
             parent = self.snapshot()
-            properties = {
-                **{k: v for k, v in parent.properties.items()
-                   if updates.get(k, "") is not None},
-                **{k: v for k, v in updates.items() if v is not None},
-            }
-            snap = Snapshot(
-                version=parent.version + 1,
-                parent=parent.version,
-                schema_json=parent.schema_json,
-                partition_by=parent.partition_by,
-                files=parent.files,
-                summary={"operation": "set-properties", "keys": sorted(updates)},
-                epochs=parent.epochs,
-                properties=properties,
-                file_stats=parent.file_stats,
-                delta_files=parent.delta_files,
+            changes = build(parent)
+            if changes is None:
+                return parent
+            snap = dataclasses.replace(
+                parent, version=parent.version + 1, parent=parent.version,
+                refs=None, **changes,
             )
             try:
                 self._write_snapshot(
@@ -624,36 +641,6 @@ class LakeTable:
                 if attempt == _MAX_COMMIT_RETRIES:
                     raise
         raise AssertionError("unreachable")
-
-    # ------------------------------------------------------------------
-    # schema evolution (additive)
-    # ------------------------------------------------------------------
-    def add_columns(self, new_fields: list[T.StructField]) -> Snapshot:
-        """ALTER TABLE ADD COLUMNS — existing files read the new columns
-        as null (reference's opt-in ``mergeSchema`` S6 made explicit)."""
-        parent = self.snapshot()
-        schema = parent.schema()
-        existing = {f.name for f in schema.fields}
-        added = [f for f in new_fields if f.name not in existing]
-        if not added:
-            return parent
-        evolved = T.StructType(schema.fields + added)
-        snap = Snapshot(
-            version=parent.version + 1,
-            parent=parent.version,
-            schema_json=json.dumps(evolved.jsonValue()),
-            partition_by=parent.partition_by,
-            files=parent.files,
-            summary={"operation": "add-columns", "columns": [f.name for f in added]},
-            epochs=parent.epochs,
-            properties=parent.properties,
-            file_stats=parent.file_stats,
-            delta_files=parent.delta_files,
-        )
-        self._write_snapshot(
-            snap, expected_parent=parent.version, touched=set(), parent_refs=parent.refs
-        )
-        return snap
 
     # ------------------------------------------------------------------
     # internals
@@ -851,7 +838,7 @@ class LakeTable:
                     raise
                 parent = current
         # Per-phase commit profile (diagnostics only; read by
-        # BENCH/floor_profile.py for the per-epoch serial breakdown):
+        # perfbench/spans.py for the per-layer commit split):
         # write = the Spark job, stats = footer bounds, manifest = JSON IO.
         _prof_t3 = time.monotonic()
         self.last_commit_profile = {

@@ -148,7 +148,8 @@ class FeedRelay:
         """Bounded tail loop (the CLI/stream-manager cadence shape):
         polls until ``max_idle_polls`` consecutive empty polls (the
         upstream went quiet) or ``max_polls`` cycles, then finalizes the
-        downstream (drains the async flush + derived refresh)."""
+        downstream (runs pending derived refreshes, drains the background
+        flush and compaction)."""
         cycles, idle, applied = 0, 0, 0
         while (max_polls is None or cycles < max_polls) and idle < max_idle_polls:
             out = self.run_once()

@@ -18,6 +18,12 @@ identical microbatch functions from Delta-CDF streams
    even if Spark replays a batch: the relay's epoch guard makes the
    second apply a no-op (the reference relies on MERGE idempotence alone,
    which breaks for its non-idempotent branches — G5).
+
+The relay always runs the gold flush and compaction on background
+threads, as the reference runs gold as its own, slower-triggered
+queries. The replayer lets the flush overlap the next epoch and drains
+everything at ``finalize``; ``start_stream`` drains the flush at the end
+of every batch, so a finished batch means current gold.
 """
 
 from __future__ import annotations
@@ -169,27 +175,17 @@ class CheckpointedReplayer:
                 self._materialize_chunks(tail, chunk_dir, lo, step, mode="append")
                 self._write_chunk_meta(chunk_dir, int(hi))
         metrics: list[EpochMetrics] = []
-        # Bounded replay guarantees a drain point (finalize below), so
-        # the derived flush runs on a background thread here, hidden
-        # behind the next epoch's bronze/silver work.
-        prior_async = self.pipeline.async_derived
-        prior_maint = self.pipeline.async_maintenance
-        self.pipeline.async_derived = True
-        # compaction overlaps ingest too (optimistic commits make the
-        # race safe — see MedallionPipeline.async_maintenance); finalize
-        # below is the drain point
-        self.pipeline.async_maintenance = True
         try:
             skip_count = self._replay_epochs(
                 changes, lo, span, step, state, prechunk, chunk_dir,
                 start_epoch, fail_after_epoch, metrics,
             )
         except BaseException:
-            # on an abnormal exit the in-flight flush must not keep
-            # writing gold while a restarted pipeline takes over — drain
-            # it, suppressing only ITS failure (secondary to the one
-            # propagating; the success path surfaces flush failures via
-            # finalize's own wait below)
+            # on an abnormal exit the in-flight flush and compaction must
+            # not keep writing while a restarted pipeline takes over —
+            # drain them, suppressing only THEIR failures (secondary to
+            # the one propagating; the success path surfaces them via
+            # finalize's own waits below)
             try:
                 self.pipeline._wait_flush()
             except Exception:  # noqa: BLE001
@@ -199,9 +195,6 @@ class CheckpointedReplayer:
             except Exception:  # noqa: BLE001
                 pass
             raise
-        finally:
-            self.pipeline.async_derived = prior_async
-            self.pipeline.async_maintenance = prior_maint
         run_count = len(metrics)
         events = sum(m.n_events for m in metrics)
         # bounded replay epilogue: flush any pending derived refreshes
@@ -218,7 +211,7 @@ class CheckpointedReplayer:
         start_epoch, fail_after_epoch, metrics,
     ) -> int:
         """Inner epoch loop; returns the skip count. Split out so the
-        caller can wrap async-flush enable/drain around it."""
+        caller can drain the background work around it."""
         skip_count = 0
         i = -1
         while True:
@@ -270,7 +263,8 @@ def start_stream(
         # drain the background derived flush inside the batch body:
         # foreachBatch completion must mean gold is current (consumers
         # read between triggers); the bounded replayer keeps the
-        # cross-epoch overlap instead
+        # cross-epoch overlap instead. Compaction stays in the
+        # background across batches.
         pipeline._wait_flush()
         pipeline.flush_observability()
 

@@ -129,6 +129,36 @@ def test_cli_config_file_end_to_end(spark, tmp_path, engine_zip):
     assert out["tables"]["bronze"]["version"] > 0
 
 
+def test_setup_cadence_survives_load(spark, tmp_path):
+    """``setup``'s cadence settings, from flags or from ``[lake]``, are
+    recorded in the lake, so every verb that loads it (replay, stream,
+    relay) runs them; a lake that never recorded them loads the
+    defaults."""
+    from maritime_activity_reports_cdc_spark import cli
+    from maritime_activity_reports_cdc_spark.plans.pipeline import MedallionPipeline
+
+    session = ["--master", "local[4]", "--shuffle-partitions", "8"]
+    flags_root = str(tmp_path / "flags")
+    cli.main([*session, "setup", "--root", flags_root, "--n-buckets", "2",
+              "--compact-every", "3", "--compact-delta-depth", "5",
+              "--derived-every", "2"])
+    cfg = tmp_path / "engine.toml"
+    cfg.write_text("[lake]\nn_buckets = 2\ncompact_every = 0\n"
+                   "compact_delta_depth = 12\nderived_every = 4\n")
+    cfg_root = str(tmp_path / "cfg")
+    cli.main([*session, "--config", str(cfg), "setup", "--root", cfg_root])
+
+    def cadence(p):
+        return p.compact_every, p.compact_delta_depth, p.derived_every
+
+    assert cadence(MedallionPipeline.load(spark, flags_root)) == (3, 5, 2)
+    assert cadence(MedallionPipeline.load(spark, cfg_root)) == (0, 12, 4)
+
+    legacy = MedallionPipeline.load(spark, flags_root)
+    legacy.bronze.set_properties({k: None for k in MedallionPipeline.CADENCE_KEYS})
+    assert cadence(MedallionPipeline.load(spark, flags_root)) == (8, 8, 1)
+
+
 def test_cmd_rewrite_turn_mode_resolves_by_generation(spark, tmp_path, monkeypatch):
     """`rewrite` on silver written by the turn path (auto mode with every
     epoch routed sparse) must resolve deltas by _gen:
@@ -166,7 +196,7 @@ def test_cmd_rewrite_turn_mode_resolves_by_generation(spark, tmp_path, monkeypat
         zorder=None,
     )
     out = cli.cmd_rewrite(args)
-    assert out["mode"] == "auto" and out["partitions_rewritten"] >= 1
+    assert out["mode"] == "generation" and out["partitions_rewritten"] >= 1
 
     p2 = MedallionPipeline.load(spark, root)
     # no outstanding deltas: the BASE files must hold the fresh enrichment

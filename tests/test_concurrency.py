@@ -142,10 +142,10 @@ def test_compaction_retries_through_concurrent_ingest(spark, tmp_path):
     assert state == {i: f"e8-{i}" for i in range(6)}
 
 
-def test_async_maintenance_replay_converges(spark, tmp_path):
-    """The bounded replayer now overlaps compaction with ingest
-    (async_maintenance): final bronze/silver state must equal a replay
-    with maintenance inline, and finalize() must leave zero outstanding
+def test_background_maintenance_replay_converges(spark, tmp_path):
+    """The relay overlaps compaction with ingest (background
+    maintenance): final bronze/silver state must equal a replay with
+    maintenance inline, and finalize() must leave zero outstanding
     deltas exactly as before."""
     from maritime_activity_reports_cdc_spark.plans.pipeline import MedallionPipeline
     from maritime_activity_reports_cdc_spark.sources.generator import (
@@ -167,8 +167,8 @@ def test_async_maintenance_replay_converges(spark, tmp_path):
         )
         rep = CheckpointedReplayer(pipe, str(tmp_path / f"ck_{tag}"))
         if tag == "inline":
-            # force the old inline behavior through the replayer by
-            # disabling the flag as soon as run() sets it
+            # reference run: every compaction inline, on the thread
+            # that requested it
             orig = MedallionPipeline._submit_maintenance
 
             def sync_submit(self, fn, *a, **k):

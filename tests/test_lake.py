@@ -154,6 +154,32 @@ def test_add_columns_null_backfill(spark, tmp_path):
     assert t.read().where(F.col("extra") == "x").count() == 1
 
 
+def test_add_columns_retries_past_a_racing_commit(spark, tmp_path, monkeypatch):
+    """A commit that lands between ``add_columns``' parent read and its
+    manifest write (a background compaction racing a schema-evolving
+    epoch) makes the evolution rebase and retry instead of failing with
+    ``CommitConflict``; the racing commit survives."""
+    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, partition_by="p")
+    t.append(_df(spark, [("a", 1, 0)]))
+    real_write = t._write_snapshot
+    raced = []
+
+    def racing_write(snap, *args, **kwargs):
+        if not raced:
+            raced.append(snap.version)
+            t.commit_epoch_noop("racer", 0)  # lands first, on the same parent
+        return real_write(snap, *args, **kwargs)
+
+    monkeypatch.setattr(t, "_write_snapshot", racing_write)
+    v = t.current_version()
+    t.add_columns([T.StructField("extra", T.StringType(), True)])
+    assert raced == [v + 1]
+    assert t.current_version() == v + 2
+    assert "extra" in t.schema().fieldNames()
+    assert t.last_epoch("racer") == 0
+    assert t.read().where(F.col("extra").isNull()).count() == 1
+
+
 def test_file_stats_pruning(spark, tmp_path):
     t = LakeTable.create(
         spark, str(tmp_path / "t"), SCHEMA, partition_by="p",

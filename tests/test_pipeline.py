@@ -45,6 +45,7 @@ def tiny_batch(spark):
 def test_silver_gold_golden_numbers(spark, tmp_path, tiny_batch):
     p = MedallionPipeline.create(spark, str(tmp_path / "m"), n_buckets=4)
     p.apply_epoch(tiny_batch, epoch=0)
+    p.finalize()  # the gold flush runs in the background
 
     silver = {(r.conv_id, r.turn_idx): r for r in p.silver.read().collect()}
     assert silver[("cA", 1)].n_tokens == 3
@@ -80,6 +81,7 @@ def test_update_and_delete_ripple_to_gold(spark, tmp_path, tiny_batch):
     # D rows carry null image
     upd[1] = ("D", 11, 0, T0, "cB", 0, None, None, None, None)
     p.apply_epoch(spark.createDataFrame(upd, CHANGE_SCHEMA), epoch=1)
+    p.finalize()
 
     silver = {(r.conv_id, r.turn_idx): r for r in p.silver.read().collect()}
     assert silver[("cA", 1)].n_tokens == 5
@@ -104,6 +106,7 @@ def test_delete_only_epoch_shrinks_daily_rollup(spark, tmp_path, tiny_batch):
     extra = [("I", 6, 0, T0, "cC", 0, "user", "next month text", None, day2)]
     batch0 = tiny_batch.unionByName(spark.createDataFrame(extra, CHANGE_SCHEMA))
     p.apply_epoch(batch0, epoch=0)
+    p.finalize()
     daily = {r.business_date: r for r in p.daily.read().collect()}
     assert daily[dt.date(2025, 4, 2)].n_turns == 1
 
@@ -112,6 +115,7 @@ def test_delete_only_epoch_shrinks_daily_rollup(spark, tmp_path, tiny_batch):
 
     delete_only = [("D", 10, 0, T0, "cC", 0, None, None, None, None)]
     p.apply_epoch(spark.createDataFrame(delete_only, CHANGE_SCHEMA), epoch=1)
+    p.finalize()
     daily2 = {r.business_date: r for r in p.daily.read().collect()}
     assert dt.date(2025, 4, 2) not in daily2      # vacated date dropped
     assert daily2[dt.date(2025, 3, 1)].n_turns == 5  # other date untouched
@@ -140,6 +144,7 @@ def test_daily_retry_after_crash_between_index_and_daily_commits(
     p.apply_epoch(
         tiny_batch.unionByName(spark.createDataFrame(extra, CHANGE_SCHEMA)), epoch=0
     )
+    p.finalize()  # epoch 0's background flush must not meet the fault
 
     real = p.daily.replace_partitions
     calls = {"n": 0}
@@ -156,14 +161,17 @@ def test_daily_retry_after_crash_between_index_and_daily_commits(
     # BEFORE the index replace (D rows carry no ts)
     delete_only = [("D", 10, 0, T0, "cC", 0, None, None, None, None)]
     batch1 = spark.createDataFrame(delete_only, CHANGE_SCHEMA)
+    p.apply_epoch(batch1, epoch=1)
+    # the flush ran in the background: its failure surfaces at the drain
     with pytest.raises(RuntimeError, match="injected"):
-        p.apply_epoch(batch1, epoch=1)
+        p.finalize()
     assert p.conv_dates.last_epoch("gold_conv_dates") == 1
     assert p.daily.last_epoch("gold_daily") == 0
 
     # same-process retry: bronze/silver skip idempotently; the derived
     # flush replays the recorded month set and drops the vacated date
     p.apply_epoch(batch1, epoch=1)
+    p.finalize()
     assert p.daily.last_epoch("gold_daily") == 1
     daily2 = {r.business_date: r for r in p.daily.read().collect()}
     assert dt.date(2025, 4, 2) not in daily2
@@ -214,7 +222,7 @@ def test_relay_never_writes_sqlconf(spark, tmp_path, monkeypatch):
     """The relay and every background thread it starts (overlap pool,
     derived flush, SCD2, compaction) plan under the session conf as
     ``get_spark`` built it: a load epoch and two sparse auto-mode epochs
-    with SCD2, async flush and async maintenance, finalize and the
+    with SCD2, background flush and background compaction, finalize and the
     observability flush make no ``spark.conf.set`` call at all, leave the
     shuffle width and AQE as they were, and the background compaction
     still folds the deltas."""
@@ -258,7 +266,6 @@ def test_relay_never_writes_sqlconf(spark, tmp_path, monkeypatch):
         spark, str(tmp_path / "m"), n_buckets=4, layer_mode="auto",
         compact_every=3, compact_delta_depth=10**6,
     )
-    p.async_derived = p.async_maintenance = True
     for epoch, batch in enumerate([load, *sparse]):
         p.apply_epoch(batch, epoch=epoch)
         p.apply_meta_epoch(meta_batches[epoch], epoch=epoch)
@@ -284,7 +291,6 @@ def test_async_flush_failure_surfaces_on_next_epoch(
     p = MedallionPipeline.create(
         spark, str(tmp_path / "m"), n_buckets=4, derived_every=1,
     )
-    p.async_derived = True  # direct-call default is sync; opt in here
 
     def boom(*a, **kw):
         raise RuntimeError("injected flush failure")
@@ -568,6 +574,8 @@ def test_overlapped_sparse_epoch_times_bronze_on_its_own_thread(spark, tmp_path,
     )
     p = MedallionPipeline.create(spark, str(tmp_path / "m"), n_buckets=2, layer_mode="auto")
     p.apply_epoch(load, epoch=0)
+    # the dense/sparse routing reads the summary table's file stats
+    p.finalize()
 
     bronze_threads, turn_calls = [], []
     real_apply = bronze_plan.apply_transcript_batch
@@ -648,6 +656,7 @@ def test_legacy_turn_lake_loads_as_auto(spark, tmp_path, monkeypatch):
         old = MedallionPipeline.create(spark, root, n_buckets=2, layer_mode="auto",
                                        compact_every=0, compact_delta_depth=10**6)
         old.apply_epoch(chunks[0], epoch=0)
+        old.finalize()
     old.silver.set_properties({"layer_mode": "turn"})
     assert old.silver.delta_partition_values()
 
@@ -682,6 +691,7 @@ def test_dense_cow_silver_refresh_is_one_replace_over_one_exchange(
     update = [_row("U", 100 + i, f"c{i}", 0, "user", f"u{i}") for i in range(4)]
     p = MedallionPipeline.create(spark, str(tmp_path / "m"), n_buckets=2, compact_every=0)
     p.apply_epoch(spark.createDataFrame(load, CHANGE_SCHEMA), epoch=0)
+    p.finalize()  # the spies below see epoch 1 alone
 
     dense, calls = [], []
     real_dense = MedallionPipeline._dense_batch

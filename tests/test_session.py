@@ -59,19 +59,15 @@ def test_sparse_relay_epoch_compiles_almost_nothing(spark, tmp_path):
         spark, str(tmp_path / "m"), n_buckets=4, layer_mode="auto",
         compact_every=2, derived_every=1,
     )
-    p.async_derived = p.async_maintenance = True
-    try:
-        # warm-up: one small epoch plans every layer once
-        p.apply_epoch(load, epoch=0)
-        p.apply_meta_epoch(meta_load, epoch=0)
-        p.finalize()
-        before = _compilations(spark)
-        m = p.apply_epoch(sparse, epoch=1)
-        p.apply_meta_epoch(meta_sparse, epoch=1)
-        p.finalize()
-        compiled = _compilations(spark) - before
-    finally:
-        p.async_derived = p.async_maintenance = False
+    # warm-up: one small epoch plans every layer once
+    p.apply_epoch(load, epoch=0)
+    p.apply_meta_epoch(meta_load, epoch=0)
+    p.finalize()
+    before = _compilations(spark)
+    m = p.apply_epoch(sparse, epoch=1)
+    p.apply_meta_epoch(meta_sparse, epoch=1)
+    p.finalize()
+    compiled = _compilations(spark) - before
 
     # the epoch applied keys, and its background compaction committed
     assert m.n_keys > 0 and p.bronze.current_version() >= 3
