@@ -120,7 +120,6 @@ def cmd_stream(args) -> dict:
 
 
 def cmd_status(args) -> dict:
-    from maritime_activity_reports_cdc_spark.operators.mor import delta_load
     from maritime_activity_reports_cdc_spark.plans.pipeline import MedallionPipeline
 
     spark = _spark(args)
@@ -133,7 +132,7 @@ def cmd_status(args) -> dict:
         if table is None:
             continue
         snap = table.snapshot()
-        n_files, depth, _ = delta_load(table)
+        n_files, depth = table.delta_load()
         out["tables"][name] = {
             "version": snap.version,
             "base_files": len(snap.all_files()),

@@ -52,6 +52,20 @@ ENVELOPE_COLS = ("op", "lsn", "op_ordinal", "commit_ts")
 DEFAULT_KEYS = ("conv_id", "turn_idx")
 DEFAULT_ORDER = ("lsn", "op_ordinal")
 
+# Refresh generation of the DERIVED tables (silver/gold): every derived
+# write stamps its rows with the refresh epoch that produced them. A
+# re-enriched silver row keeps its bronze ``(lsn, op_ordinal)`` envelope,
+# so readers, compaction and the change feed of turn-level key-MoR silver
+# (``layer_mode`` 'auto') arbitrate by ``_gen`` instead. Provenance, not
+# business data. Lakes written before it was dropped also carry an
+# always-1 ``_rank`` column; writes fill it with null and nothing reads it.
+GEN_COL = "_gen"
+GEN_FIELDS = [T.StructField(GEN_COL, T.LongType(), True)]
+
+
+def stamp_generation(df: DataFrame, epoch: int) -> DataFrame:
+    return df.withColumn(GEN_COL, F.lit(int(epoch)).cast("long"))
+
 
 def bucket_expr(key_col: str | F.Column, n_buckets: int) -> F.Column:
     """Deterministic hash bucket — the table partition transform

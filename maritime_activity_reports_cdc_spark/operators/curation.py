@@ -119,28 +119,6 @@ def contamination_pairs(
     )
 
 
-def contaminated_docs(
-    train: DataFrame,
-    test: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    min_containment: float = 0.5,
-) -> DataFrame:
-    """Doc-level contamination verdicts: (test_id, max_containment,
-    n_train_matches) for every test document with at least one train
-    document over the threshold — the frame a pipeline anti-joins
-    against its eval sets (or uses to drop train docs, depending on
-    which side is canonical)."""
-    pairs = contamination_pairs(
-        train, test, id_col, text_col, shingle_n, min_containment
-    )
-    return pairs.groupBy(F.col("test_id")).agg(
-        F.max("containment").alias("max_containment"),
-        F.count("*").alias("n_train_matches"),
-    )
-
-
 def hash_sample(
     df: DataFrame,
     fraction: float,

@@ -342,57 +342,6 @@ def _strip_seed_centroids(
     ).select("_cell", vec.alias("_cvec"))
 
 
-def train_ivf_centroids(
-    vectors: DataFrame,
-    n_lists: int = 16,
-    n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Train an IVF quantizer with the engine's spherical k-means: strip
-    seeds refined by ``n_iter`` Lloyd rounds (assign by max cosine,
-    recompute centroids as member means). Returns a ``(cell, centroid)``
-    frame that plugs straight into ``ivf_topk(centroids=...)`` /
-    ``knn_classify(method='ivf', centroids=...)`` — the offline
-    train-once / probe-many split a 100-TB ANN deployment runs (FAISS's
-    IVF train/add separation). Same determinism discipline as
-    ``kmeans_embeddings``: RNG-free seeds, every updated component
-    rounded to 6 dp so summation order never leaks into assignments.
-    Scale: each round is one broadcast-join assignment (no vector
-    shuffle) + a (cluster, dim)-keyed partial agg; centroids stay a
-    k-row frame, never collected."""
-    if n_lists <= 0 or n_iter <= 0:
-        raise ValueError(
-            f"n_lists and n_iter must be positive, got {n_lists}, {n_iter}"
-        )
-    cent = _strip_seed_centroids(vectors, n_lists, id_col, vec_col, round_dp=6)
-    for _ in range(n_iter):
-        scored = vectors.join(F.broadcast(cent)).withColumn(
-            "_csim", cosine_similarity(F.col(vec_col), F.col("_cvec"))
-        )
-        w = Window.partitionBy(id_col).orderBy(F.desc("_csim"), "_cell")
-        assigned = (
-            scored.withColumn("_crk", F.row_number().over(w))
-            .where(F.col("_crk") == 1)
-            .select(id_col, vec_col, "_cell")
-        )
-        cent = (
-            assigned.select("_cell", F.posexplode(vec_col).alias("_p", "_x"))
-            .groupBy("_cell", "_p")
-            .agg(F.round(F.avg(F.col("_x").cast("double")), 6).alias("_m"))
-            .groupBy("_cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("_p", "_m"))),
-                    lambda s: s["_m"],
-                ).alias("_cvec")
-            )
-        )
-    return cent.select(
-        F.col("_cell").cast("long").alias("cell"), F.col("_cvec").alias("centroid")
-    )
-
-
 def ivf_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -403,7 +352,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     query_id_col: str = "qid",
     query_vec_col: str = "qe",
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k — the cell-probe
     alternative to hyperplane LSH: vectors partition into ``n_lists``
@@ -418,21 +366,11 @@ def ivf_topk(
     yield centroids; a prior modular scheme assumed dense ids from 0 and
     could silently produce zero centroids), pure column algebra, and
     reproducible in any SQL engine (the DuckDB oracle runs the identical
-    quantizer). Pass ``centroids`` — a ``(cell, centroid)`` frame, e.g.
-    from :func:`train_ivf_centroids` — to use a TRAINED quantizer
-    instead: cells hug the data's actual clusters, so recall at a fixed
-    ``n_probe`` budget rises (measured in pytest) while the plan shape
-    is unchanged. Shapes: one thin min/max agg + one tiny groupBy seed
-    the centroids (skipped entirely with trained centroids); assignment
-    is a broadcast join against <= n_lists centroids (no shuffle of the
-    vectors beyond the cell grouping); the probe is an equi-join on the
-    cell id. Returns (qid, nid, rk, sim)."""
-    if centroids is not None:
-        cent = centroids.select(
-            F.col("cell").alias("_cell"), F.col("centroid").alias("_cvec")
-        )
-    else:
-        cent = _strip_seed_centroids(vectors, n_lists, id_col, vec_col)
+    quantizer). Shapes: one thin min/max agg + one tiny groupBy seed
+    the centroids; assignment is a broadcast join against <= n_lists
+    centroids (no shuffle of the vectors beyond the cell grouping); the
+    probe is an equi-join on the cell id. Returns (qid, nid, rk, sim)."""
+    cent = _strip_seed_centroids(vectors, n_lists, id_col, vec_col)
     # cell assignment: argmax cosine over the (broadcast) centroid set
     def _assign(df: DataFrame, idc: str, vc: str, out: str) -> DataFrame:
         scored = df.join(F.broadcast(cent)).withColumn(
@@ -595,7 +533,6 @@ def knn_classify(
     hash_fn: str = "xxhash64",
     n_lists: int = 16,
     n_probe: int = 4,
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """Majority label among the top-k neighbors (ties -> smallest
     label). Returns (qid, predicted_label).
@@ -608,10 +545,9 @@ def knn_classify(
     search, and at high band budgets the candidate set covers the true
     top-k so the predictions match the brute classifier (asserted in
     pytest). ``method='ivf'``: neighbors from the IVF cell-probe index
-    (``ivf_topk``) — the alternative scale path when the corpus already
-    carries a centroid partition (recall tunes via n_probe;
-    n_probe >= n_lists scans every cell and matches brute, asserted in
-    pytest)."""
+    (``ivf_topk``, strip-seeded centroids) — the alternative scale path
+    (recall tunes via n_probe; n_probe >= n_lists scans every cell and
+    matches brute, asserted in pytest)."""
     if method == "banded":
         topk = banded_lsh_topk(
             vectors, queries, k, bands, rows_per_band, id_col, vec_col,
@@ -620,7 +556,7 @@ def knn_classify(
     elif method == "ivf":
         topk = ivf_topk(
             vectors, queries, k, n_lists, n_probe, id_col, vec_col,
-            query_id_col, query_vec_col, centroids=centroids,
+            query_id_col, query_vec_col
         )
     elif method == "brute":
         topk = brute_force_topk(

@@ -24,8 +24,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from maritime_activity_reports_cdc_spark.operators import mor
-from maritime_activity_reports_cdc_spark.operators.apply import BUCKET_COL, bucket_expr
+from maritime_activity_reports_cdc_spark.operators.apply import (
+    BUCKET_COL,
+    GEN_FIELDS,
+    bucket_expr,
+    stamp_generation,
+)
 from maritime_activity_reports_cdc_spark.sources.lake import LakeTable
 
 # the summary agg's input column set — passed into MoR-resolved silver
@@ -55,7 +59,7 @@ SUMMARY_SCHEMA = T.StructType(
         T.StructField("risk_level", T.StringType(), True),
         T.StructField(BUCKET_COL, T.IntegerType(), False),
     ]
-    + mor.GEN_FIELDS
+    + GEN_FIELDS
 )
 
 DAILY_SCHEMA = T.StructType(
@@ -74,7 +78,7 @@ DAILY_SCHEMA = T.StructType(
         T.StructField("total_tokens", T.LongType(), True),
         T.StructField("avg_quality", T.DoubleType(), True),
     ]
-    + mor.GEN_FIELDS
+    + GEN_FIELDS
 )
 
 
@@ -313,7 +317,7 @@ def refresh_daily_via_index(
         index_rows = (
             merged if merged is not None else index_table.read_partitions(months)
         )
-        rollup = mor.stamp_generation(_daily_from_index(index_rows), epoch)
+        rollup = stamp_generation(_daily_from_index(index_rows), epoch)
         daily_table.replace_partitions(
             rollup, summary={"source": source}, epoch=(source, epoch),
             partition_values=months,
@@ -334,7 +338,7 @@ def refresh_daily_full_from_index(
     pairs with rebuild_conv_dates_full so silver is scanned once)."""
     if daily_table.last_epoch(source) >= epoch:
         return False
-    rollup = mor.stamp_generation(_daily_from_index(index_table.read()), epoch)
+    rollup = stamp_generation(_daily_from_index(index_table.read()), epoch)
     daily_table.overwrite(
         rollup, summary={"source": source, "operation_kind": "full"},
         epoch=(source, epoch),
@@ -440,16 +444,16 @@ def refresh_summary_for_conversations(
     fresh = conversation_summary(enriched).withColumn(
         BUCKET_COL, bucket_expr("conv_id", n_buckets)
     )
-    fresh = mor.stamp_generation(fresh, epoch)
-    target_cols = [f.name for f in summary_table.schema().fields]
+    fresh = stamp_generation(fresh, epoch)
     # A conversation whose rows were ALL deleted upstream produces no
     # agg row — its stale summary must go too, which the anti-join +
     # union (or the whole-bucket replace in dense mode) guarantees.
+    # A legacy lake's survivors still carry ``_rank``; the union fills
+    # it with null for the fresh rows and the commit aligns the rest.
     survivors = affected.anti(summary_table.read_partitions(affected.buckets))
     merged = (
-        fresh.select(*target_cols)
-        if survivors is None
-        else survivors.unionByName(fresh.select(*target_cols))
+        fresh if survivors is None
+        else survivors.unionByName(fresh, allowMissingColumns=True)
     )
     summary_table.replace_partitions(
         merged, summary={"source": source}, epoch=(source, epoch),
@@ -475,10 +479,9 @@ def refresh_summary_full(
     fresh = conversation_summary(
         read_silver(silver_table, columns=SUMMARY_INPUT_COLS)
     ).withColumn(BUCKET_COL, bucket_expr("conv_id", n_buckets))
-    fresh = mor.stamp_generation(fresh, epoch)
-    target_cols = [f.name for f in summary_table.schema().fields]
     summary_table.overwrite(
-        fresh.select(*target_cols), summary={"source": source, "operation_kind": "full"},
+        stamp_generation(fresh, epoch),
+        summary={"source": source, "operation_kind": "full"},
         epoch=(source, epoch),
     )
     return True

@@ -462,9 +462,7 @@ class MedallionPipeline:
         on the MoR read tax) OR the epoch cadence — whichever fires
         first. The cadence alone let read cost grow unboundedly when
         epochs were configured infrequent-compact (round-1 defect)."""
-        from maritime_activity_reports_cdc_spark.operators.mor import delta_load
-
-        n_files, depth, _ = delta_load(table)
+        n_files, depth = table.delta_load()
         if n_files == 0:
             return False
         if depth >= self.compact_delta_depth:

@@ -34,7 +34,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from maritime_activity_reports_cdc_spark.operators.apply import BUCKET_COL, bucket_expr
+from maritime_activity_reports_cdc_spark.operators.apply import (
+    BUCKET_COL,
+    GEN_FIELDS,
+    bucket_expr,
+    stamp_generation,
+)
 from maritime_activity_reports_cdc_spark.plans import bronze as bronze_plan
 from maritime_activity_reports_cdc_spark.sources.lake import LakeTable
 
@@ -42,8 +47,6 @@ VALID_ROLES = ("user", "assistant", "system", "tool")
 
 
 def silver_table_schema() -> T.StructType:
-    from maritime_activity_reports_cdc_spark.operators.mor import GEN_FIELDS
-
     base = bronze_plan.transcript_table_schema()
     extra = [
         T.StructField("text_len", T.IntegerType(), True),
@@ -345,9 +348,7 @@ def refresh_silver_turn(
     Requires full row images on U events (true for this change-log
     model; partial-update feeds need the per-conversation path).
     """
-    from maritime_activity_reports_cdc_spark.operators import mor
     from maritime_activity_reports_cdc_spark.operators.apply import (
-        bucket_expr,
         dedup_latest,
         dedup_latest_bucketed,
     )
@@ -547,7 +548,7 @@ def refresh_silver_turn(
         # key-partitioned off the cached winners, and a narrow epoch's
         # write is cheap anyway.
         tombs = tombs.repartition(F.col(BUCKET_COL))
-    delta = mor.stamp_generation(
+    delta = stamp_generation(
         _align(enriched).unionByName(_align(tombs)), epoch
     ).select(*cols)
     try:
@@ -635,15 +636,13 @@ def refresh_silver_for_conversations(
     survivors of the affected buckets are rewritten alongside the fresh
     rows (read-optimized, write cost ∝ affected buckets). Returns False
     on an idempotent epoch skip."""
-    from maritime_activity_reports_cdc_spark.operators import mor
-
     if silver_table.last_epoch(source) >= epoch:
         return False
     if not affected.buckets:
         silver_table.commit_epoch_noop(source, epoch, {"rows": 0})
         return True
 
-    enriched = mor.stamp_generation(build_enriched(bronze_table, affected, batch), epoch)
+    enriched = stamp_generation(build_enriched(bronze_table, affected, batch), epoch)
     target_cols = [f.name for f in silver_table.schema().fields]
     aligned = enriched.select(*[
         F.col(c) if c in enriched.columns else F.lit(None).alias(c) for c in target_cols

@@ -263,12 +263,6 @@ class LakeTable:
             while len(cache) > 4:
                 cache.pop(min(cache))
 
-    def history(self) -> list[Snapshot]:
-        names = sorted(
-            n for n in os.listdir(self._manifest_path()) if n.startswith("v") and n.endswith(".json")
-        )
-        return [self.snapshot(int(n[1:-5])) for n in names]
-
     def schema(self) -> T.StructType:
         return self.snapshot().schema()
 
@@ -355,6 +349,14 @@ class LakeTable:
         files (read from the snapshot; no Spark job)."""
         snap = self.snapshot(version)
         return any(snap.delta_files.get(_part_key(v)) for v in values)
+
+    def delta_load(self) -> tuple[int, int]:
+        """(total delta files, max delta files per partition), read from
+        the current snapshot (no Spark job). Max-per-partition is the
+        read-tax proxy behind compaction triggers: a reader of one
+        partition resolves that many delta files."""
+        deltas = self.snapshot().delta_files.values()
+        return sum(len(v) for v in deltas), max((len(v) for v in deltas), default=0)
 
     def delta_partition_values(self, version: int | None = None) -> list[str]:
         snap = self.snapshot(version)

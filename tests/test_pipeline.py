@@ -334,8 +334,8 @@ def test_checkpointed_replay_and_crash_restart(spark, tmp_path):
         pd.testing.assert_frame_equal(a, b, check_dtype=False)
     # _gen provenance legitimately differs across chunkings — compare
     # business columns only
-    sa = p1.summary.read().drop("_gen", "_rank").orderBy("conv_id").toPandas()
-    sb = p2b.summary.read().drop("_gen", "_rank").orderBy("conv_id").toPandas()
+    sa = p1.summary.read().drop("_gen").orderBy("conv_id").toPandas()
+    sb = p2b.summary.read().drop("_gen").orderBy("conv_id").toPandas()
     import pandas as pd
 
     pd.testing.assert_frame_equal(sa, sb, check_dtype=False)
@@ -439,8 +439,8 @@ def test_derived_cadence_matches_per_epoch_refresh(spark, tmp_path):
     CheckpointedReplayer(p3b, str(tmp_path / "ck3")).run(changes, n_chunks=6)
 
     def frames(p):
-        s = p.read_summary().drop("_gen", "_rank").orderBy("conv_id").toPandas()
-        d = p.read_daily().drop("_gen", "_rank").orderBy("business_date").toPandas()
+        s = p.read_summary().drop("_gen").orderBy("conv_id").toPandas()
+        d = p.read_daily().drop("_gen").orderBy("business_date").toPandas()
         return s, d
 
     s1, d1 = frames(p1)
@@ -674,6 +674,55 @@ def test_legacy_turn_lake_loads_as_auto(spark, tmp_path, monkeypatch):
     ]:
         a = a_df.select(cols).toPandas().sort_values(cols[:2]).reset_index(drop=True)
         b = b_df.select(cols).toPandas().sort_values(cols[:2]).reset_index(drop=True)
+        pd.testing.assert_frame_equal(a, b, check_dtype=False)
+    changes.unpersist()
+
+
+def test_legacy_rank_column_lake_replays_like_a_fresh_lake(spark, tmp_path):
+    """Lakes written before ``_rank`` was dropped keep that always-1
+    column in their silver and gold schemas. Such a lake loads and
+    replays a dense and a sparse epoch: writes fill ``_rank`` with null,
+    and every business column matches a fresh lake fed the same log. A
+    fresh lake has no ``_rank`` at all."""
+    from pyspark.sql import types as T
+
+    changes = generate_transcript_changes(
+        spark, n_conversations=12, turns_per_conv=4, update_ratio=0.3,
+        delete_ratio=0.1, seed=41,
+    ).cache()
+    mutations = changes.where(F.col("op") != "I")
+    two = [r.conv_id for r in mutations.select("conv_id").distinct().orderBy("conv_id").take(2)]
+    late = (F.col("op") != "I") & F.col("conv_id").isin(two)
+    chunks = [changes.where(~late), changes.where(late)]
+
+    def replay(p):
+        for epoch, chunk in enumerate(chunks):
+            p.apply_epoch(chunk, epoch=epoch)
+            p.finalize()  # so the second, two-conversation epoch routes sparse
+        assert p.silver.delta_partition_values(), "the sparse epoch appends turn deltas"
+        return p
+
+    fresh = replay(MedallionPipeline.create(
+        spark, str(tmp_path / "fresh"), n_buckets=2, layer_mode="auto"))
+    legacy_root = str(tmp_path / "legacy")
+    old = MedallionPipeline.create(spark, legacy_root, n_buckets=2, layer_mode="auto")
+    for table in (old.silver, old.summary, old.daily):
+        table.add_columns([T.StructField("_rank", T.IntegerType(), True)])
+    legacy = replay(MedallionPipeline.load(spark, legacy_root))
+
+    for table in (fresh.silver, fresh.summary, fresh.daily):
+        assert "_rank" not in table.schema().fieldNames()
+    for cols, a_df, b_df in [
+        (["conv_id", "turn_idx"], fresh.read_silver(), legacy.read_silver()),
+        (["conv_id"], fresh.read_summary(), legacy.read_summary()),
+        (["business_date"], fresh.read_daily(), legacy.read_daily()),
+    ]:
+        assert "_rank" in b_df.columns
+        assert b_df.where(F.col("_rank").isNotNull()).count() == 0
+        business = [c for c in a_df.columns if c != "_gen"]
+        a = a_df.select(business).toPandas().sort_values(cols).reset_index(drop=True)
+        b = b_df.select(business).toPandas().sort_values(cols).reset_index(drop=True)
+        assert len(a) > 0
         pd.testing.assert_frame_equal(a, b, check_dtype=False)
     changes.unpersist()
 

@@ -191,117 +191,3 @@ def test_processing_time_soak_with_kill_and_live_appends(spark, tmp_path):
     assert "injected kill" in health["soak"]["last_error"]
     assert not health["soak"]["active"]
     changes.unpersist()
-
-
-def test_watermarked_windowed_rollup_handles_late_rows(spark, tmp_path):
-    """T3/T4: event-time windowed aggregation with a watermark over the
-    change feed. A late row WITHIN the watermark lands in its (already
-    passed) window before emission; a row LATER than the watermark is
-    dropped; finalized windows append exactly once across restarts."""
-    import datetime as dt
-
-    from maritime_activity_reports_cdc_spark.streaming.windowed import (
-        start_windowed_rollup,
-    )
-
-    T0 = dt.datetime(2025, 8, 1, 10, 0, 0)
-
-    def row(lsn, conv, turn, role, minute, second):
-        return ("I", lsn, lsn, T0, conv, turn, role, f"text {lsn}", None,
-                T0 + dt.timedelta(minutes=minute, seconds=second))
-
-    feed = str(tmp_path / "feed")
-    out = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-
-    # batch 1: minutes 0 and 1, plus a row at minute 30 that advances
-    # the event-time high mark (watermark = max_event_time - 10min)
-    b1 = [
-        row(1, "cA", 0, "user", 0, 10),
-        row(2, "cA", 1, "assistant", 0, 40),
-        row(3, "cB", 0, "user", 1, 5),
-        row(4, "cB", 1, "user", 30, 0),
-    ]
-    spark.createDataFrame(b1, CHANGE_SCHEMA).coalesce(1).write.mode("append").parquet(feed)
-    q = start_windowed_rollup(spark, feed, out, ck, watermark="10 minutes")
-    q.awaitTermination(180)
-
-    # batch 2: one late row within the watermark (minute 25 — watermark
-    # sits at 20:00) and one FAR-late row (minute 0 — beyond it), plus
-    # a sentinel at minute 60 that pushes the watermark past everything
-    b2 = [
-        row(5, "cC", 0, "user", 25, 30),     # allowed-late: its window not final yet
-        row(6, "cC", 1, "user", 0, 50),      # beyond watermark: dropped
-        row(7, "cD", 0, "user", 60, 0),      # sentinel advances the watermark
-    ]
-    spark.createDataFrame(b2, CHANGE_SCHEMA).coalesce(1).write.mode("append").parquet(feed)
-    q2 = start_windowed_rollup(spark, feed, out, ck)
-    q2.awaitTermination(180)
-
-    got = {
-        (r.window_start.minute, r.role): (r.n_turns, r.n_tool_calls)
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got[(0, "user")] == (1, 0), "far-late row must NOT join minute 0"
-    assert got[(0, "assistant")] == (1, 0)
-    assert got[(1, "user")] == (1, 0)
-    assert got[(30, "user")] == (1, 0)
-    assert got[(25, "user")] == (1, 0), "allowed-late row must land in minute 25"
-    # the sentinel's own window is not final (nothing advanced past it)
-    assert (0, "user") in got and (60, "user") not in got
-
-
-def test_stateful_session_stream_matches_batch_sessionization(spark, tmp_path):
-    """T5: applyInPandasWithState sessionization — per-user session
-    state carried across microbatches, sessions emitted when closed by
-    a data gap or an event-time timeout. Closed sessions must equal the
-    batch sessionization of the same events."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from maritime_activity_reports_cdc_spark.streaming.stateful import (
-        start_session_stream,
-    )
-
-    schema = T.StructType([
-        T.StructField("user_id", T.LongType(), False),
-        T.StructField("ts", T.TimestampType(), False),
-    ])
-    T0 = dt.datetime(2025, 8, 2, 9, 0, 0)
-
-    def ev(user, minute):
-        return (user, T0 + dt.timedelta(minutes=minute))
-
-    feed = str(tmp_path / "feed")
-    out = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-
-    # user 1: events at 0,5 then a 40-min gap then 45,50 (two sessions);
-    # user 2: one session 0..10
-    b1 = [ev(1, 0), ev(1, 5), ev(2, 0), ev(2, 10)]
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(feed)
-    q = start_session_stream(spark, feed, schema, out, ck, watermark="1 minute")
-    q.awaitTermination(180)
-
-    # second batch: user 1 returns after the gap; a sentinel far in the
-    # future advances the watermark so the event-time timeouts fire and
-    # close everything still open
-    b2 = [ev(1, 45), ev(1, 50), ev(3, 600)]
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(feed)
-    q2 = start_session_stream(spark, feed, schema, out, ck, watermark="1 minute")
-    q2.awaitTermination(180)
-    # third trigger with a fresh sentinel so batch-2 sessions time out too
-    b3 = [ev(4, 2000)]
-    spark.createDataFrame(b3, schema).coalesce(1).write.mode("append").parquet(feed)
-    q3 = start_session_stream(spark, feed, schema, out, ck, watermark="1 minute")
-    q3.awaitTermination(180)
-
-    got = {
-        (r.user_id, r.session_start.minute, r.session_end.minute): r.n_events
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got[(1, 0, 5)] == 2      # closed by the 40-min gap
-    assert got[(1, 45, 50)] == 2    # closed by event-time timeout
-    assert got[(2, 0, 10)] == 2     # closed by timeout
-    assert len([k for k in got if k[0] == 1]) == 2
